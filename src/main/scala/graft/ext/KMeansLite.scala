@@ -129,9 +129,15 @@ object KMeansLite {
     *
     * Each fit is (start, len, k): train k centroids on
     * `slice(vCol, start, len)`; start = 0 means the whole vector.
+    *
+    * Preconditions: `fits` is non-empty (checked), and `idCol` values
+    * are unique. The seeds are the first max(k) rows in `idCol` order,
+    * and duplicate ids make that order, and so the fit, depend on how
+    * rows happen to be partitioned.
     */
   def fitQuantizedSliced(vectors: DataFrame, idCol: String, vCol: String,
       fits: Seq[(Int, Int, Int)], iters: Int): Seq[Seq[Seq[Double]]] = {
+    require(fits.nonEmpty, "fitQuantizedSliced needs at least one fit")
     def sliced(f: (Int, Int, Int)): Column =
       if (f._1 == 0) col(vCol) else slice(col(vCol), f._1, f._2)
     val maxK = fits.map(_._3).max

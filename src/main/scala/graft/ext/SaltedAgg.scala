@@ -56,6 +56,11 @@ import org.apache.spark.sql.functions._
   * regrouping of the same exact-integer fold (SaltedAggSpec pins it
   * on a hot-key fixture and checks the plan shape; SkewProbe carries
   * the max-task receipts).
+  *
+  * Precondition: keys must be non-null. The re-attach is an equi-join
+  * on (key, salt), which drops every row whose key is NULL, where the
+  * window form keeps null-key rows as one group. Every current caller
+  * keys on non-null xxhash64 outputs.
   */
 object SaltedAgg {
 

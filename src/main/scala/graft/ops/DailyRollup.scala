@@ -28,8 +28,11 @@ import org.apache.spark.sql.functions._
   * partial (map-side) + final HashAggregate, so the shuffle carries one
   * row per (input-partition × day), not per input row. The `scope` filter
   * lands on the partition column of the raw table and prunes to one day's
-  * files before any scan. The trailing global sort is on the already tiny
-  * one-row-per-day aggregate — harmless at any scale.
+  * files before any scan. [[rollup]]'s `ORDER BY dt` is a global sort,
+  * which costs a range-sampling job and an exchange even on a one-row
+  * aggregate, so table writes take the unsorted [[aggregate]] instead:
+  * the partitioned writer sorts each task's rows by its partition
+  * columns on its own.
   */
 object DailyRollup {
 
@@ -90,10 +93,15 @@ object DailyRollup {
       month(col("dt")).as("month"),
       col("till_time"))
 
-  def rollup(hourly: DataFrame, scope: Option[Date] = None): DataFrame = {
+  def rollup(hourly: DataFrame, scope: Option[Date] = None): DataFrame =
+    aggregate(hourly, scope).orderBy(col("dt"))
+
+  /** [[rollup]] without the `ORDER BY dt`. Rows come hash-partitioned by
+    * `dt`, so a writer partitioned by day still writes one file per day.
+    */
+  private[ops] def aggregate(hourly: DataFrame, scope: Option[Date] = None): DataFrame = {
     val scoped = scope.fold(hourly)(d => hourly.filter(col("dt") === lit(d)))
     finish(scoped.groupBy(col("dt")).agg(aggExprs.head, aggExprs.tail: _*))
-      .orderBy(col("dt"))
   }
 
   /** Streaming (incremental) form of the same rollup — §2h beyond the

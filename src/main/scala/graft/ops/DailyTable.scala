@@ -5,6 +5,9 @@ import java.sql.Date
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
+
+import graft.schema.WeatherSchema
 
 /** K3/K4/D1/D2 of SURVEY.md §2: lifecycle of the daily rollup table.
   *
@@ -39,6 +42,9 @@ import org.apache.spark.sql.functions._
 object DailyTable {
   val MonthCol = "month_part"
 
+  /** The table as stored: [[WeatherSchema.daily]] plus the month partition. */
+  private val Stored = WeatherSchema.daily.add(MonthCol, DateType)
+
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -64,7 +70,7 @@ object DailyTable {
 
   /** Full rebuild (sp_create analogue): static overwrite of the table. */
   def bootstrap(hourly: DataFrame, path: String): Unit =
-    write(DailyRollup.rollup(hourly), path, dynamic = false)
+    write(DailyRollup.aggregate(hourly), path, dynamic = false)
 
   /** One-day delete-then-insert upsert (sp_update analogue): dynamic
     * partition overwrite that replaces exactly the (month, day)
@@ -72,7 +78,7 @@ object DailyTable {
     * the same `asOf` rewrites the same partition with the same rows.
     */
   def upsert(hourly: DataFrame, path: String, asOf: Date): Unit =
-    write(DailyRollup.rollup(hourly, Some(asOf)), path, dynamic = true)
+    write(DailyRollup.aggregate(hourly, Some(asOf)), path, dynamic = true)
 
   /** The existence branch of Load-gcs-to-bq/main.py:87-91. */
   def sync(spark: SparkSession, hourly: DataFrame, path: String, asOf: Date): Unit =
@@ -93,14 +99,16 @@ object DailyTable {
     */
   def backfill(hourly: DataFrame, path: String, from: Date, to: Date): Unit = {
     require(!to.before(from), s"backfill range is empty: $from..$to")
-    write(DailyRollup.rollup(
+    write(DailyRollup.aggregate(
         hourly.filter(col("dt") >= lit(from) && col("dt") <= lit(to))),
       path, dynamic = true)
   }
 
-  /** Read the daily table back; partition columns (month_part, dt) are
-    * restored as typed columns by partition discovery.
+  /** Read the daily table back with its known schema, so no job reads
+    * parquet footers to infer one. The columns come back in the order
+    * inference would give: the data columns, then the partition columns
+    * (month_part, dt) in directory order.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Stored).parquet(path)
 }

@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.LongType
 
 import graft.ops.{DailyTable, LogEvent, LogEvents}
 import graft.schema.WeatherSchema
@@ -18,8 +22,10 @@ import graft.schema.WeatherSchema
   *                                           NDJSON file = one input
   * BQ load job, WRITE_APPEND (K2,         →  foreachBatch: append batch
   *   main.py:74-84)                          to dt-partitioned raw parquet
-  * CALL sp_create / sp_update (D2/D3,     →  DailyTable.sync per affected
-  *   main.py:87-92)                          day, AFTER the append lands
+  * CALL sp_create / sp_update (D2/D3,     →  DailyTable.bootstrap when the
+  *   main.py:87-92)                          table is absent, else
+  *                                           DailyTable.upsert per affected
+  *                                           day, AFTER the append lands
   * }}}
   *
   * Two reference bugs intentionally not reproduced (SURVEY.md §2 list):
@@ -32,11 +38,26 @@ import graft.schema.WeatherSchema
   *
   * Scale posture: the raw table is written `partitionBy(dt)`, so (a) the
   * per-day rollup scan prunes to one day's files, (b) retention (K5) is
-  * a pure partition drop, and (c) the only driver-side collect is the
-  * distinct `dt` list of one micro-batch — bounded by days-per-batch,
-  * independent of batch row count.
+  * a pure partition drop, and (c) the batch is never cached or
+  * recounted: the raw write observes its row counts and its set of days
+  * in the same pass, so the driver receives one small row per batch,
+  * bounded by days-per-batch and independent of batch row count.
   */
 object Ingest {
+
+  private val BatchCol = "ingest_batch"
+
+  /** The raw table as stored: [[WeatherSchema.raw]] plus the batch
+    * partition. Reading with it skips the footer-inference job.
+    */
+  private val RawStored = WeatherSchema.raw.add(BatchCol, LongType)
+
+  /** Bound on the wait for a batch's observed metrics, which the listener
+    * bus delivers after the raw write returns. A listener that throws
+    * never delivers them; the bound fails the batch instead of hanging
+    * the stream.
+    */
+  private val ObservedWait = 2.minutes
 
   /** Process everything currently in the landing dir, then stop
     * (`Trigger.AvailableNow` — the batch-ish analogue of the reference's
@@ -88,31 +109,33 @@ object Ingest {
     */
   private[graft] def ingestBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long, rawPath: String,
-      dailyPath: String, logRoot: Option[String] = None): Unit = {
-    batch.persist()
+      dailyPath: String, logRoot: Option[String] = None): Unit =
     try {
+      // A fresh Observation per call: one completes once, and a retried
+      // batch id must observe its own write. `count(dt)` skips nulls.
+      // `dt` is observed as a string because the listener converts the
+      // metrics row, and converting a DateType value there needs the JVM
+      // to open sun.util.calendar.
+      val seen = Observation()
       // Malformed landing lines parse to all-null rows under the explicit
       // schema (PERMISSIVE mode); a null dt would land in the Hive
       // default partition and silently poison the rollup's null group —
       // quarantine them to a count instead of ingesting.
-      val good = batch.filter(col("dt").isNotNull)
-      // One conditional aggregate (count(col) skips nulls) instead of
-      // batch.count() - good.count(): same number, one job launch per
-      // micro-batch rather than two over the cached batch.
-      val counts = batch
-        .agg(count(lit(1)).as("total"), count(col("dt")).as("with_dt"))
-        .head()
-      val malformed = counts.getLong(0) - counts.getLong(1)
-      good.withColumn("ingest_batch", lit(batchId))
-        .write.partitionBy("dt", "ingest_batch")
+      batch
+        .observe(seen, count(lit(1)).as("rows"), count(col("dt")).as("with_dt"),
+          collect_set(col("dt").cast("string")).as("days"))
+        .filter(col("dt").isNotNull)
+        .withColumn(BatchCol, lit(batchId))
+        .write.partitionBy("dt", BatchCol)
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(rawPath)
-      val days = good.select(col("dt")).distinct().collect()
-        .map(_.getAs[Date]("dt")).sorted
+      val counts = Await.result(seen.future, ObservedWait)
+      val malformed = counts.getLong(0) - counts.getLong(1)
+      val days = counts.getSeq[String](2).sorted.map(Date.valueOf)
       if (days.nonEmpty) {
         // dt is now a partition column of the raw store; per-day scope
         // filters in DailyRollup prune to one day's directory.
-        val raw = spark.read.parquet(rawPath)
+        val raw = spark.read.schema(RawStored).parquet(rawPath)
         if (!DailyTable.exists(spark, dailyPath))
           DailyTable.bootstrap(raw, dailyPath) // covers every day at once
         else
@@ -125,6 +148,5 @@ object Ingest {
         publishLog(spark, logRoot, "error",
           s"batch $batchId failed: ${e.getMessage}")
         throw e
-    } finally batch.unpersist()
-  }
+    }
 }

@@ -116,6 +116,14 @@ class DailyTableSpec extends AnyFunSuite {
     }
   }
 
+  test("read's fixed schema is the schema parquet inference gives") {
+    val path = tmp()
+    DailyTable.bootstrap(hourly(augRows: _*), path)
+    DailyTable.upsert(hourly(augRows: _*), path, Date.valueOf("2022-08-30"))
+    assert(DailyTable.read(spark, path).schema ==
+      spark.read.parquet(path).schema) // names, types, nullability, order
+  }
+
   test("upsert does not leak partitionOverwriteMode into the session") {
     val before = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     val path = tmp()

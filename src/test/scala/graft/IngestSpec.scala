@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Date
 
+import org.apache.spark.grafttest.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,6 +33,9 @@ class IngestSpec extends AnyFunSuite {
 
   private def writeLanding(dir: Path, name: String, lines: Seq[String]): Unit =
     Files.write(dir.resolve(name), String.join("\n", lines: _*).getBytes)
+
+  private def batchOf(lines: String*) =
+    spark.read.schema(graft.schema.WeatherSchema.raw).json(lines.toDS())
 
   test("ingest: file arrivals append raw (dt-partitioned) and sync daily") {
     val root = Files.createTempDirectory("graft-ingest")
@@ -82,16 +86,14 @@ class IngestSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-ingest-replay")
     val raw = root.resolve("raw").toString
     val daily = root.resolve("daily").toString
-    val batch = spark.read.schema(graft.schema.WeatherSchema.raw)
-      .json(Seq(ndjson("2022-08-29", "10:00:00", 300.15),
-        ndjson("2022-08-29", "11:00:00", 302.15)).toDS()) // one micro-batch
+    val batch = batchOf(ndjson("2022-08-29", "10:00:00", 300.15),
+      ndjson("2022-08-29", "11:00:00", 302.15)) // one micro-batch
     // simulate the crash-retry: same batchId processed twice
     Ingest.ingestBatch(spark, batch, 7L, raw, daily)
     Ingest.ingestBatch(spark, batch, 7L, raw, daily)
     assert(spark.read.parquet(raw).count() == 2) // not 4
     // a different batchId with new data appends alongside
-    val batch2 = spark.read.schema(graft.schema.WeatherSchema.raw)
-      .json(Seq(ndjson("2022-08-29", "12:00:00", 310.15)).toDS())
+    val batch2 = batchOf(ndjson("2022-08-29", "12:00:00", 310.15))
     Ingest.ingestBatch(spark, batch2, 8L, raw, daily)
     assert(spark.read.parquet(raw).count() == 3)
   }
@@ -121,17 +123,48 @@ class IngestSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-ingest-bad")
     val landing = Files.createDirectories(root.resolve("landing"))
     writeLanding(landing, "blob.json", Seq(
+      ndjson("2022-08-30", "10:00:00", 280.15),
       ndjson("2022-08-29", "10:00:00", 300.15),
       """{"this is": not even json"""))
     Ingest.runOnce(spark, landing.toString, root.resolve("raw").toString,
       root.resolve("daily").toString, root.resolve("ckpt").toString,
       Some(root.resolve("logs").toString))
     val raw = spark.read.parquet(root.resolve("raw").toString)
-    assert(raw.count() == 1) // only the good row
+    assert(raw.count() == 2) // only the good rows
     assert(raw.filter(col("dt").isNull).isEmpty)
     val msg = graft.ops.LogEvents.read(spark, root.resolve("logs").toString)
       .select("message").collect().head.getString(0)
     assert(msg.contains("malformed=1"))
+    assert(msg.contains("days=2022-08-29,2022-08-30,")) // observed, sorted
+  }
+
+  test("ingesting one day into an existing daily table launches 4 jobs") {
+    // raw write, the rollup's shuffle stage, daily write, log write: the
+    // batch is observed rather than cached and counted, both tables are
+    // read with their known schemas, and the daily write is unsorted.
+    val root = Files.createTempDirectory("graft-ingest-jobs")
+    val (raw, daily, logs) = (root.resolve("raw").toString,
+      root.resolve("daily").toString, root.resolve("logs").toString)
+    Ingest.ingestBatch(spark, batchOf(ndjson("2022-08-29", "10:00:00", 300.15)),
+      1L, raw, daily, Some(logs)) // bootstraps the daily table
+    val batch = batchOf(ndjson("2022-08-29", "11:00:00", 302.15))
+    val jobs = JobCount(spark.sparkContext) {
+      Ingest.ingestBatch(spark, batch, 2L, raw, daily, Some(logs))
+    }
+    assert(jobs == 4)
+    assert(DailyTable.read(spark, daily).select("avg_temp").collect()
+      .map(_.getDouble(0)).toSeq == Seq(28.0))
+  }
+
+  test("an empty micro-batch completes its observation and touches no table") {
+    // e.g. an empty landing file: the observed counts must still arrive
+    // (zero rows, no days) rather than leave the batch waiting
+    val root = Files.createTempDirectory("graft-ingest-empty")
+    val (daily, logs) = (root.resolve("daily").toString, root.resolve("logs").toString)
+    Ingest.ingestBatch(spark, batchOf(), 3L, root.resolve("raw").toString, daily, Some(logs))
+    assert(graft.ops.LogEvents.read(spark, logs).select("message").collect()
+      .map(_.getString(0)).toSeq == Seq("batch 3 loaded, days=, malformed=0"))
+    assert(!DailyTable.exists(spark, daily))
   }
 
   test("a failing batch publishes an error envelope and rethrows") {
@@ -140,8 +173,7 @@ class IngestSpec extends AnyFunSuite {
     // rawPath points at an existing FILE → the parquet write must fail
     val blocked = root.resolve("raw")
     Files.write(blocked, "not a directory".getBytes)
-    val batch = spark.read.schema(graft.schema.WeatherSchema.raw)
-      .json(Seq(ndjson("2022-08-29", "10:00:00", 300.15)).toDS())
+    val batch = batchOf(ndjson("2022-08-29", "10:00:00", 300.15))
     intercept[Exception] {
       Ingest.ingestBatch(spark, batch, 1L, blocked.toString,
         root.resolve("daily").toString, Some(logs))

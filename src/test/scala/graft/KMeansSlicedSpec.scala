@@ -43,4 +43,10 @@ class KMeansSlicedSpec extends AnyFunSuite {
     val solo = KMeansLite.fitQuantized(one, "vec_id", "v", 8, iters = 1)
     assert(fused === Seq(solo))
   }
+
+  test("an empty fit list is rejected before any job runs") {
+    intercept[IllegalArgumentException] {
+      KMeansLite.fitQuantizedSliced(vecs(4), "vec_id", "v", Seq.empty, iters = 1)
+    }
+  }
 }
