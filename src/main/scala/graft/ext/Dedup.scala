@@ -363,16 +363,16 @@ object Dedup {
     // per vocabulary pair, and the string-df oracle pins it green)
     val ex = docs.select(col(idCol).as("id"), explode(col(shinglesCol)).as("sh"))
       .withColumn("shh", xxhash64(col("sh")))
-    // df as a TWO-LEVEL aggregate + AQE-managed join-back (round-17;
-    // was a window aggregate in round 16, which made the documented
+    // df as a TWO-LEVEL salted aggregate + join-back (round-17; was a
+    // window aggregate in round 16, which made the documented
     // boilerplate shingle — df far above ubiquityCap — a single-task
-    // sort+buffer hot key at scale, the r16 ADVICE finding). The
-    // partial HashAggregate bounds the hot shingle's shuffle traffic
-    // to one row per map task; the vocabulary-sized df table
-    // broadcasts back at bench scale and AQE skew-splits the shuffle
-    // attach beyond it (SaltedAgg docs). Shingles are distinct per
-    // doc, so the attached count IS the document frequency, exactly
-    // as before.
+    // sort+buffer hot key at scale, the r16 ADVICE finding). The plan
+    // is one (shh, salt) exchange of the expanded shingles, the
+    // aggregate on top of it, and a shuffled-hash attach of the df
+    // table on (shh, salt) — no broadcast: a hot shingle stays spread
+    // over its salt buckets (SaltedAgg docs). Shingles are distinct
+    // per doc, so the attached count IS the document frequency,
+    // exactly as before.
     val expanded = SaltedAgg.attach(ex, "shh", Seq(col("id")),
         Seq(count(lit(1)).as("p_df")), Seq(sum(col("p_df")) -> "df"))
       .withColumn("w", idfWeight(col("df"), ubiquityCap))

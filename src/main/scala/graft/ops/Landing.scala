@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
@@ -14,8 +14,8 @@ import org.apache.spark.sql.DataFrame
   * The reference writes ONE tiny blob per fetch (a single cleaned row),
   * so this is deliberately a driver-side write of a driver-sized batch —
   * there is nothing to distribute. Bulk data lands through
-  * [[graft.streaming.Ingest]]'s file stream, which treats each blob as
-  * one micro-batch input, no matter which producer wrote it.
+  * [[graft.streaming.Ingest]]'s drain, which reads every blob new since
+  * its last call as one batch, no matter which producer wrote it.
   *
   * File name mirrors the reference pattern
   * `hourly-weather-data-json-<yyyymmdd>-<time>.json` (main.py:184) with
@@ -32,13 +32,21 @@ object Landing {
   /** Serialize a (small) cleaned batch as one NDJSON landing blob;
     * returns the file written. `toJSON` preserves the nested structure
     * exactly as `spark.read.schema(raw).json` re-reads it.
+    *
+    * The blob is written to a hidden `.`-prefixed temp file in the
+    * landing dir, which a drain's listing skips, and renamed to its name
+    * once complete: the blob is visible once finalized, never half
+    * written.
     */
   def land(cleaned: DataFrame, landingDir: String, utcMillis: Long): Path = {
     val lines = cleaned.toJSON.collect() // one row per fetch — driver-sized
     val dir = Paths.get(landingDir)
     Files.createDirectories(dir)
-    val target = dir.resolve(blobName(utcMillis))
-    Files.write(target, String.join("\n", lines: _*).getBytes("UTF-8"))
-    target
+    val name = blobName(utcMillis)
+    val tmp = dir.resolve(s".$name.tmp")
+    try {
+      Files.write(tmp, String.join("\n", lines: _*).getBytes("UTF-8"))
+      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 }

@@ -1184,12 +1184,13 @@ object ExtQueries {
         .agg(countDistinct(col("token")).as("v"))
       // Round-16: the bigram/unigram keys are grouping-only (never
       // output) — hash them to longs. Round-17: both counts ride
-      // SaltedAgg's two-level aggregate + AQE-managed join-back
-      // instead of window aggregates — the Heaps-bounded bigram and
-      // unigram count tables broadcast back at bench scale (zero
-      // corpus exchange) and AQE skew-splits the attach beyond it; a
-      // hot unigram ("the") no longer lands every occurrence in one
-      // window task's sort+buffer (guide §2.2/§2.5/§3.1; r16 ADVICE).
+      // SaltedAgg's two-level aggregate + join-back instead of window
+      // aggregates — each count is one (key, salt) exchange of the
+      // bigram rows plus a shuffled-hash attach of the count table on
+      // (key, salt), with no broadcast; a hot unigram ("the") stays
+      // spread over its salt buckets instead of landing every
+      // occurrence in one window task's sort+buffer (guide
+      // §2.2/§2.5/§3.1; r16 ADVICE).
       val bg = toksDf.filter(size(col("t")) >= 2)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(t)-1)," +

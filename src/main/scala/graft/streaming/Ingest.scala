@@ -7,20 +7,20 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 
 import graft.ops.{DailyTable, LogEvent, LogEvents}
 import graft.schema.WeatherSchema
 
 /** E1 — the reference's flagship event-driven path (SURVEY.md §3),
-  * re-expressed as Structured Streaming:
+  * re-expressed as one batch drain per event:
   *
   * {{{
-  * GCS bucket + object-finalize trigger   →  file-source stream over a
-  *   (Load-gcs-to-bq/main.py:56-64)          landing dir (S3): each new
-  *                                           NDJSON file = one input
-  * BQ load job, WRITE_APPEND (K2,         →  foreachBatch: append batch
+  * GCS bucket + object-finalize trigger   →  runOnce: every NDJSON file
+  *   (Load-gcs-to-bq/main.py:56-64)          new in the landing dir since
+  *                                           the last call = one batch
+  *                                           ([[FileDrain]])
+  * BQ load job, WRITE_APPEND (K2,         →  ingestBatch: append batch
   *   main.py:74-84)                          to dt-partitioned raw parquet
   * CALL sp_create / sp_update (D2/D3,     →  DailyTable.bootstrap when the
   *   main.py:87-92)                          table is absent, else
@@ -31,10 +31,10 @@ import graft.schema.WeatherSchema
   * Two reference bugs intentionally not reproduced (SURVEY.md §2 list):
   *  - CF#2 fires the transform without awaiting the load job
   *    (`load_job.result()` never called) — here the rollup runs strictly
-  *    after the raw append within the same micro-batch;
-  *  - replayed GCS events double-append rows — the file source's
-  *    checkpoint processes each landing file exactly once, so re-running
-  *    the stream re-ingests nothing.
+  *    after the raw append within the same batch;
+  *  - replayed GCS events double-append rows — the drain's committed-file
+  *    log under the checkpoint dir processes each landing file exactly
+  *    once, so re-running it re-ingests nothing.
   *
   * Scale posture: the raw table is written `partitionBy(dt)`, so (a) the
   * per-day rollup scan prunes to one day's files, (b) retention (K5) is
@@ -55,34 +55,27 @@ object Ingest {
   /** Bound on the wait for a batch's observed metrics, which the listener
     * bus delivers after the raw write returns. A listener that throws
     * never delivers them; the bound fails the batch instead of hanging
-    * the stream.
+    * the caller.
     */
   private val ObservedWait = 2.minutes
 
-  /** Process everything currently in the landing dir, then stop
-    * (`Trigger.AvailableNow` — the batch-ish analogue of the reference's
-    * per-event invocation; swap for `Trigger.ProcessingTime` in a
-    * long-running deployment).
+  /** Ingest every file new in the landing dir since the last call as
+    * one batch, and return once its daily rows are written. A call with
+    * nothing new runs no job. Batches are numbered from 0 per
+    * `checkpointDir`, which holds the drain's log ([[FileDrain]]); a dir
+    * holding a Structured Streaming checkpoint is refused.
     */
   def runOnce(
       spark: SparkSession, landingDir: String, rawPath: String,
       dailyPath: String, checkpointDir: String,
-      logRoot: Option[String] = None): Unit = {
-    val stream = spark.readStream
-      .schema(WeatherSchema.raw)
-      .json(landingDir)
-    val query = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, batch, batchId, rawPath, dailyPath, logRoot)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      logRoot: Option[String] = None): Unit =
+    FileDrain(spark, spark.read.schema(WeatherSchema.raw).format("json"),
+        landingDir, checkpointDir) { (batch, batchId) =>
+      ingestBatch(spark, batch, batchId, rawPath, dailyPath, logRoot)
+    }
 
   /** §2j: the success/error envelope every reference function publishes
-    * (Load-gcs-to-bq/main.py:96-110), emitted per micro-batch.
+    * (Load-gcs-to-bq/main.py:96-110), emitted per batch.
     */
   private def publishLog(
       spark: SparkSession, logRoot: Option[String], messageType: String,
@@ -96,12 +89,12 @@ object Ingest {
         message_type = messageType, message = message)).toDS(), root)
     }
 
-  /** One micro-batch: K2 append, then D2/D3 transform per affected day —
+  /** One batch: K2 append, then D2/D3 transform per affected day —
     * sequential within the batch (the ordering CF#2 gets wrong).
     *
     * The "append" is a dynamic overwrite of the batch's own
     * (dt, ingest_batch=<id>) partitions: a retried batch (crash after
-    * the write, before the checkpoint commit) rewrites the same
+    * the write, before the drain commit) rewrites the same
     * directories instead of appending duplicates, upgrading the path
     * from at-least-once to effectively-once. `dt` stays the leading
     * partition level, so day-pruning and retention partition drops see

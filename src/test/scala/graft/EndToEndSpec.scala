@@ -10,8 +10,8 @@ import graft.sources.WeatherApi
 import graft.streaming.Ingest
 
 /** The whole E1 path of SURVEY.md §3 in one test: fetch (replayed) →
-  * schema'd parse → clean → land as hourly blob (K1) → file-stream
-  * ingest (S3/K2) → daily rollup sync (D2/D3). Every process boundary of
+  * schema'd parse → clean → land as hourly blob (K1) → landing-dir
+  * drain (S3/K2) → daily rollup sync (D2/D3). Every process boundary of
   * the reference, collapsed into the engine's own operators.
   */
 class EndToEndSpec extends AnyFunSuite {
@@ -40,13 +40,16 @@ class EndToEndSpec extends AnyFunSuite {
 
     // two "hourly" fetch cycles on 2022-08-29 (stamps injected per batch
     // — P2's determinism rule; 10:00 and 11:00 Kolkata)
-    for ((utc, _) <- Seq(1661745600000L -> "10:00", 1661749200000L -> "11:00")) {
+    val stamps = Seq(1661745600000L, 1661749200000L)
+    for (utc <- stamps) {
       val cleaned = CleanWeather.clean(
         WeatherApi.fetchFrame(spark, fetcher),
         CleanWeather.kolkataStamps(utc)._1, CleanWeather.kolkataStamps(utc)._2)
       Landing.land(cleaned, landing, utc)
     }
-    assert(new java.io.File(landing).listFiles().length == 2) // K1 blobs
+    // K1 blobs, and only them: no hidden temp file survives a landing
+    assert(new java.io.File(landing).listFiles().map(_.getName).toSet ==
+      stamps.map(Landing.blobName).toSet)
 
     Ingest.runOnce(spark, landing, raw, daily, ckpt, Some(logs))
 

@@ -7,10 +7,10 @@ import org.apache.spark.grafttest.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.DailyTable
+import graft.ops.{DailyTable, LogEvents, SingleWriter}
 import graft.streaming.Ingest
 
-/** E1 (SURVEY.md §3 / VERDICT.md #2): landing-dir file stream →
+/** E1 (SURVEY.md §3 / VERDICT.md #2): landing-dir drain →
   * raw append (K2) → daily sync, with exactly-once on re-run.
   */
 class IngestSpec extends AnyFunSuite {
@@ -154,6 +154,90 @@ class IngestSpec extends AnyFunSuite {
     assert(jobs == 4)
     assert(DailyTable.read(spark, daily).select("avg_temp").collect()
       .map(_.getDouble(0)).toSeq == Seq(28.0))
+  }
+
+  test("runOnce of one new landing file launches 4 jobs; nothing new launches 0") {
+    // the drain lists the landing dir and reads its own log without a
+    // job, and runs the batch on the caller's thread: what runOnce
+    // launches is exactly ingestBatch's 4 jobs, and no streaming query
+    val root = Files.createTempDirectory("graft-ingest-drain-jobs")
+    val landing = Files.createDirectories(root.resolve("landing"))
+    val (raw, daily, ckpt, logs) = (root.resolve("raw").toString,
+      root.resolve("daily").toString, root.resolve("ckpt").toString,
+      root.resolve("logs").toString)
+    def run(): Unit = Ingest.runOnce(spark, landing.toString, raw, daily, ckpt, Some(logs))
+    writeLanding(landing, "hourly-weather-data-json-20220829-100000.json",
+      Seq(ndjson("2022-08-29", "10:00:00", 300.15)))
+    run() // bootstraps the daily table
+    writeLanding(landing, "hourly-weather-data-json-20220829-110000.json",
+      Seq(ndjson("2022-08-29", "11:00:00", 302.15)))
+    assert(JobCount(spark.sparkContext)(run()) == 4)
+    val envelopes = LogEvents.read(spark, logs).count()
+    assert(JobCount(spark.sparkContext)(run()) == 0)
+    assert(LogEvents.read(spark, logs).count() == envelopes)
+    assert(spark.streams.active.isEmpty)
+    assert(DailyTable.read(spark, daily).select("avg_temp").collect()
+      .map(_.getDouble(0)).toSeq == Seq(28.0))
+  }
+
+  test("a failed drain commits nothing; the retry ingests every file once") {
+    val root = Files.createTempDirectory("graft-ingest-drain-retry")
+    val landing = Files.createDirectories(root.resolve("landing"))
+    val (daily, ckpt) = (root.resolve("daily").toString, root.resolve("ckpt"))
+    writeLanding(landing, "hourly-weather-data-json-20220829-100000.json", Seq(
+      ndjson("2022-08-29", "10:00:00", 300.15),
+      ndjson("2022-08-29", "11:00:00", 302.15)))
+    writeLanding(landing, "hourly-weather-data-json-20220830-100000.json", Seq(
+      ndjson("2022-08-30", "10:00:00", 280.15)))
+    // a blob still being written sits under a hidden name: never listed
+    writeLanding(landing, ".hourly-weather-data-json-20220830-110000.json.tmp", Seq(
+      ndjson("2022-08-30", "11:00:00", 281.15)))
+    val raw = root.resolve("raw")
+    Files.write(raw, "not a directory".getBytes) // blocks the raw write
+    def run(): Unit =
+      Ingest.runOnce(spark, landing.toString, raw.toString, daily, ckpt.toString)
+    intercept[Exception](run())
+    val log = ckpt.resolve("drained").toFile
+    assert(!log.exists() || log.listFiles().isEmpty)
+
+    Files.delete(raw)
+    run()
+    val ingested = spark.read.parquet(raw.toString)
+    assert(ingested.count() == 3)
+    assert(ingested.select(col("ingest_batch").cast("long")).distinct().as[Long]
+      .collect().toSeq == Seq(0L))
+    run()
+    assert(spark.read.parquet(raw.toString).count() == 3)
+  }
+
+  test("a held checkpoint lock fails runOnce before it ingests anything") {
+    val root = Files.createTempDirectory("graft-ingest-drain-lock")
+    val landing = Files.createDirectories(root.resolve("landing"))
+    writeLanding(landing, "blob.json", Seq(ndjson("2022-08-29", "10:00:00", 300.15)))
+    val (raw, ckpt) = (root.resolve("raw"), root.resolve("ckpt").toString)
+    val ckptPath = new org.apache.hadoop.fs.Path(ckpt)
+    SingleWriter.withLock(
+        ckptPath.getFileSystem(spark.sparkContext.hadoopConfiguration), ckptPath) {
+      intercept[SingleWriter.ConcurrentWriteException] {
+        Ingest.runOnce(spark, landing.toString, raw.toString,
+          root.resolve("daily").toString, ckpt)
+      }
+    }
+    assert(!Files.exists(raw))
+  }
+
+  test("a checkpoint dir holding a streaming query's offsets/ is refused") {
+    val root = Files.createTempDirectory("graft-ingest-drain-old")
+    val landing = Files.createDirectories(root.resolve("landing"))
+    writeLanding(landing, "blob.json", Seq(ndjson("2022-08-29", "10:00:00", 300.15)))
+    val ckpt = Files.createDirectories(root.resolve("ckpt"))
+    Files.createDirectories(ckpt.resolve("offsets"))
+    val e = intercept[IllegalStateException] {
+      Ingest.runOnce(spark, landing.toString, root.resolve("raw").toString,
+        root.resolve("daily").toString, ckpt.toString)
+    }
+    assert(e.getMessage.contains("Structured Streaming checkpoint"))
+    assert(!Files.exists(root.resolve("raw")))
   }
 
   test("an empty micro-batch completes its observation and touches no table") {
