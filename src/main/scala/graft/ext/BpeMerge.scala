@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Corpus-wide BPE pair-merge rounds (Sennrich et al. 2016), the
@@ -303,6 +304,17 @@ object BpeMerge {
       allowIdentical: Boolean = false): Seq[DataFrame] =
     trainFastState(types0, rounds, allowIdentical)._1
 
+  /** Free a `localCheckpoint`ed frame's blocks now. They are persisted
+    * on the RDD its `LogicalRDD` leaf holds, which the cache manager
+    * behind `Dataset.unpersist` never registered, so that call frees
+    * nothing.
+    */
+  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case leaf: LogicalRDD => leaf.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** [[trainFast]] plus its final internal state
     * (rules, types, counts) — the counts invariant is spec-checked
     * against a fresh recount of the returned types.
@@ -377,10 +389,10 @@ object BpeMerge {
           untouched.unionByName(touchedNew)
             .coalesce(nParts).localCheckpoint()
         }(scala.concurrent.ExecutionContext.global)
-        // failure coordination (r17, the r16 ADVICE item): await BOTH
-        // futures before propagating — a throw from one must not
-        // leave the sibling's Spark job running detached — and
-        // unpersist a surviving orphan's checkpoint blocks
+        // failure coordination: await BOTH futures before propagating
+        // — a throw from one must not leave the sibling's Spark job
+        // running detached — and free a surviving orphan's checkpoint
+        // blocks
         val cTry = scala.concurrent.Await.ready(
           countsF, scala.concurrent.duration.Duration.Inf).value.get
         val dtC = (System.nanoTime() - tC) / 1e9
@@ -391,7 +403,7 @@ object BpeMerge {
           case (scala.util.Success(c), scala.util.Success(t)) =>
             counts = c; types = t
           case _ =>
-            cTry.foreach(_.unpersist()); tTry.foreach(_.unpersist())
+            cTry.foreach(unpersistCheckpoint); tTry.foreach(unpersistCheckpoint)
             throw cTry.failed.toOption.orElse(tTry.failed.toOption).get
         }
         val dtT = (System.nanoTime() - tT) / 1e9

@@ -1,302 +1,69 @@
 package graft.ext
 
-import java.io.ByteArrayOutputStream
+import java.awt.image.{BufferedImage, DataBuffer, IndexColorModel}
+import javax.imageio.ImageWriteParam
+import javax.imageio.metadata.{IIOMetadata, IIOMetadataNode}
 
-/** Minimal GIF codec — pure JVM, no libraries: LZW is ~120 lines of
-  * plain Scala, everything else is the public GIF89a specification
-  * (CompuServe, 1990; also W3C's GIF89a note). Closes the last common
-  * WEB-IMAGE format gap in the multimodal tier (r14 verdict task #5):
-  * after PPM/PNG/JPEG, only MP3/H.264 — formats whose codecs genuinely
-  * require external libraries — remain on [[MultiModal]]'s documented
-  * stub path.
-  *
-  * Scope, stated: GIF87a and GIF89a, global and local color tables,
-  * interlaced and non-interlaced frames, graphic-control transparency,
-  * and FRAME-1 composition onto the logical screen (left/top offsets,
-  * background fill from the global table, transparent pixels leaving
-  * the background visible). Animation is sampled at its first frame —
-  * the frame-sample contract every video-ish payload gets here
-  * ([[Avi]] does the same for motion video); later frames' disposal
-  * modes never affect frame 1. Anything outside the profile (truncated
-  * stream, missing color table, bad LZW) returns None and falls back
-  * to the stub path — a malformed payload must not fail the task.
-  *
-  * Decodes into [[Ppm.Image]] so the raster operators (meanLuma,
-  * nearest-neighbor resize, [[ImageHash]]'s dHash) apply unchanged.
-  * [[encodeIndexed]] is a REAL LZW encoder over an explicit palette +
-  * index raster — any raster with ≤256 distinct colors round-trips
-  * bit-exactly (GifSpec pins it, plus hand-built wire fixtures).
+/** GIF through the JDK's `javax.imageio` codec, via [[ImageIoCodec]]:
+  * GIF87a/89a, global and local colour tables, interlace and
+  * graphic-control transparency. [[decode]] composites the first frame
+  * onto the logical screen (offsets, global-table background,
+  * transparency), the frame-sample contract [[Avi]] shares; a
+  * truncated stream or one without a colour table returns None and
+  * falls back to [[MultiModal]]'s documented stub path. [[encodeIndexed]]
+  * writes one non-interlaced frame, so any raster with ≤256 distinct
+  * colours round-trips bit-exactly.
   */
 object Gif {
 
-  private def u16(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) // GIF is little-endian
-
-  // --------------------------------------------------------- decode
+  /** Int attribute `a` of the first `node` element under `root`. */
+  private def attr(root: IIOMetadataNode, node: String, a: String): Option[Int] =
+    Option(root.getElementsByTagName(node).item(0))
+      .map(_.asInstanceOf[IIOMetadataNode].getAttribute(a).toInt)
 
   /** Parse a GIF payload and composite its FIRST frame onto the
-    * logical screen; None for anything outside the supported profile
-    * or malformed.
+    * logical screen; None for anything malformed, without a colour
+    * table, or declaring a screen or frame past the bomb guard.
     */
   def decode(bytes: Array[Byte]): Option[Ppm.Image] =
-    try decodeImpl(bytes) catch { case _: Exception => None }
-
-  private def decodeImpl(bytes: Array[Byte]): Option[Ppm.Image] = {
-    if (bytes.length < 13) return None
-    val sig = new String(bytes, 0, 6, "US-ASCII")
-    if (sig != "GIF87a" && sig != "GIF89a") return None
-    val sw = u16(bytes, 6); val sh = u16(bytes, 8)
-    if (sw <= 0 || sh <= 0 || sw.toLong * sh * 3 > Int.MaxValue / 2)
-      return None // decompression-bomb guard, the Png.decode posture
-    val packed = bytes(10) & 0xff
-    val bgIndex = bytes(11) & 0xff
-    var pos = 13
-    val gct: Array[Int] =
-      if ((packed & 0x80) != 0) {
-        val n = 2 << (packed & 7)
-        if (pos + 3 * n > bytes.length) return None
-        val t = readColorTable(bytes, pos, n); pos += 3 * n; t
-      } else null
-
-    // logical screen: background color if the global table has it
-    // (the spec's background-color-index), else black
-    val canvas = new Array[Byte](sw * sh * 3)
-    if (gct != null && bgIndex < gct.length) {
-      val c = gct(bgIndex)
-      var i = 0
-      while (i < canvas.length) {
-        canvas(i) = ((c >> 16) & 0xff).toByte
-        canvas(i + 1) = ((c >> 8) & 0xff).toByte
-        canvas(i + 2) = (c & 0xff).toByte
-        i += 3
+    ImageIoCodec.read(bytes, "gif") { reader =>
+      def tree(m: IIOMetadata, format: String) =
+        m.getAsTree(format).asInstanceOf[IIOMetadataNode]
+      val stream = tree(reader.getStreamMetadata, "javax_imageio_gif_stream_1.0")
+      val desc = tree(reader.getImageMetadata(0), "javax_imageio_gif_image_1.0")
+      val sw = attr(stream, "LogicalScreenDescriptor", "logicalScreenWidth").get
+      val sh = attr(stream, "LogicalScreenDescriptor", "logicalScreenHeight").get
+      val bgAt = attr(stream, "GlobalColorTable", "backgroundColorIndex")
+      if (!ImageIoCodec.fits(sw, sh) || (bgAt.isEmpty &&
+          attr(desc, "LocalColorTable", "sizeOfLocalColorTable").isEmpty)) None
+      else {
+        // background: the global table's entry if it has one, else black
+        val entries = stream.getElementsByTagName("ColorTableEntry")
+        val bg = (0 until entries.getLength)
+          .map(entries.item(_).asInstanceOf[IIOMetadataNode])
+          .find(e => bgAt.contains(e.getAttribute("index").toInt))
+          .fold(0)(e => Seq("red", "green", "blue")
+            .foldLeft(0)((c, k) => (c << 8) | e.getAttribute(k).toInt))
+        val canvas = Array.fill(sw * sh)(bg)
+        val fx = attr(desc, "ImageDescriptor", "imageLeftPosition").get
+        val fy = attr(desc, "ImageDescriptor", "imageTopPosition").get
+        val frame = reader.read(0)
+        val fw = frame.getWidth; val fh = frame.getHeight
+        val argb = frame.getRGB(0, 0, fw, fh, null, 0, fw)
+        // transparent pixels keep the background; the screen clips
+        for (y <- 0 until fh; x <- 0 until fw if fx + x < sw && fy + y < sh)
+          if ((argb(y * fw + x) >>> 24) != 0) canvas((fy + y) * sw + fx + x) = argb(y * fw + x)
+        val out = new BufferedImage(sw, sh, BufferedImage.TYPE_INT_RGB)
+        out.setRGB(0, 0, sw, sh, canvas, 0, sw)
+        Some(ImageIoCodec.toImage(out))
       }
     }
 
-    var transparentIdx = -1 // from the GCE immediately preceding the frame
-    while (pos < bytes.length) {
-      (bytes(pos) & 0xff) match {
-        case 0x3b => return None // trailer before any image data
-        case 0x21 => // extension: label + sub-blocks
-          if (pos + 2 > bytes.length) return None
-          val label = bytes(pos + 1) & 0xff
-          pos += 2
-          if (label == 0xf9) { // graphic control: block size 4
-            if (pos + 6 > bytes.length || (bytes(pos) & 0xff) != 4)
-              return None
-            val gcPacked = bytes(pos + 1) & 0xff
-            transparentIdx =
-              if ((gcPacked & 1) != 0) bytes(pos + 4) & 0xff else -1
-            pos += 5 // size byte + 4 data bytes; terminator consumed below
-          }
-          pos = skipSubBlocks(bytes, pos)
-          if (pos < 0) return None
-        case 0x2c => // image descriptor — the first frame: decode it
-          if (pos + 10 > bytes.length) return None
-          val fx = u16(bytes, pos + 1); val fy = u16(bytes, pos + 3)
-          val fw = u16(bytes, pos + 5); val fh = u16(bytes, pos + 7)
-          val fpacked = bytes(pos + 9) & 0xff
-          pos += 10
-          if (fw <= 0 || fh <= 0) return None
-          val interlaced = (fpacked & 0x40) != 0
-          val lct: Array[Int] =
-            if ((fpacked & 0x80) != 0) {
-              val n = 2 << (fpacked & 7)
-              if (pos + 3 * n > bytes.length) return None
-              val t = readColorTable(bytes, pos, n); pos += 3 * n; t
-            } else gct
-          if (lct == null) return None // no color table anywhere
-          if (pos >= bytes.length) return None
-          val minCode = bytes(pos) & 0xff
-          pos += 1
-          // floor of 2 matches encodeIndexed and the GIF89a minimum;
-          // at minCode=1 (end+1 = 4 = 1<<2) the decoder's width-growth
-          // check desynchronizes from any conforming encoder's
-          // schedule on the first post-clear code, so such streams
-          // fall to the documented stub path instead of decoding to
-          // garbage with Some(...)
-          if (minCode < 2 || minCode > 11) return None
-          val data = new ByteArrayOutputStream()
-          var p = pos
-          var done = false
-          while (!done) {
-            if (p >= bytes.length) return None
-            val n = bytes(p) & 0xff
-            p += 1
-            if (n == 0) done = true
-            else {
-              if (p + n > bytes.length) return None
-              data.write(bytes, p, n); p += n
-            }
-          }
-          val indices = lzwDecode(data.toByteArray, minCode, fw * fh)
-            .getOrElse(return None)
-          // blit onto the canvas, honoring interlace + transparency;
-          // pixels outside the logical screen are clipped per spec
-          var row = 0
-          while (row < fh) {
-            val destRow = fy + deinterlaceRow(row, fh, interlaced)
-            if (destRow >= 0 && destRow < sh) {
-              var cx = 0
-              while (cx < fw) {
-                val idx = indices(row * fw + cx) & 0xff
-                val dx = fx + cx
-                if (idx != transparentIdx && dx < sw && idx < lct.length) {
-                  val c = lct(idx)
-                  val o = (destRow * sw + dx) * 3
-                  canvas(o) = ((c >> 16) & 0xff).toByte
-                  canvas(o + 1) = ((c >> 8) & 0xff).toByte
-                  canvas(o + 2) = (c & 0xff).toByte
-                }
-                cx += 1
-              }
-            }
-            row += 1
-          }
-          return Some(Ppm.Image(sw, sh, canvas))
-        case _ => return None // unknown block introducer
-      }
-    }
-    None // ran out of bytes without an image descriptor
-  }
-
-  private def readColorTable(b: Array[Byte], pos: Int, n: Int): Array[Int] = {
-    val t = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      t(i) = ((b(pos + 3 * i) & 0xff) << 16) |
-        ((b(pos + 3 * i + 1) & 0xff) << 8) | (b(pos + 3 * i + 2) & 0xff)
-      i += 1
-    }
-    t
-  }
-
-  /** Skip length-prefixed sub-blocks up to and including the 0
-    * terminator; -1 on truncation.
-    */
-  private def skipSubBlocks(b: Array[Byte], start: Int): Int = {
-    var p = start
-    while (p < b.length) {
-      val n = b(p) & 0xff
-      p += 1
-      if (n == 0) return p
-      p += n
-    }
-    -1
-  }
-
-  /** Source row for output row `row` of an interlaced frame: GIF's
-    * four passes (rows 0,8,16.. then 4,12.. then 2,6.. then odd).
-    */
-  private def deinterlaceRow(row: Int, fh: Int, interlaced: Boolean): Int = {
-    if (!interlaced) return row
-    val p1 = (fh + 7) / 8
-    val p2 = (fh + 3) / 8 // rows ≡ 4 (mod 8)
-    val p3 = (fh + 1) / 4 // rows ≡ 2 (mod 4)
-    if (row < p1) row * 8
-    else if (row < p1 + p2) 4 + (row - p1) * 8
-    else if (row < p1 + p2 + p3) 2 + (row - p1 - p2) * 4
-    else 1 + (row - p1 - p2 - p3) * 2
-  }
-
-  /** GIF-variant LZW decode (LSB-first bit packing, 12-bit max codes,
-    * clear/end codes, deferred-clear tolerant). Returns exactly
-    * `expected` indices, or None on any malformed stream.
-    */
-  private def lzwDecode(data: Array[Byte], minCode: Int,
-      expected: Int): Option[Array[Byte]] = {
-    val clear = 1 << minCode
-    val end = clear + 1
-    // dictionary as (prefix code, appended byte); first `clear` are roots
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    var dictSize = end + 1
-    var codeWidth = minCode + 1
-    val out = new Array[Byte](expected)
-    var outPos = 0
-    var bitPos = 0
-    val totalBits = data.length * 8
-    var prev = -1
-    val stack = new Array[Byte](4097)
-
-    def readCode(): Int = {
-      if (bitPos + codeWidth > totalBits) return -1
-      var v = 0
-      var i = 0
-      while (i < codeWidth) {
-        val bp = bitPos + i
-        v |= ((data(bp >> 3) >> (bp & 7)) & 1) << i
-        i += 1
-      }
-      bitPos += codeWidth
-      v
-    }
-
-    def emit(code: Int): Boolean = { // expand `code`, write to out
-      var c = code
-      var sp = 0
-      while (c >= clear) { // walk the chain (roots are < clear)
-        if (sp >= stack.length || c >= dictSize) return false
-        stack(sp) = suffix(c); sp += 1
-        c = prefix(c)
-      }
-      stack(sp) = c.toByte; sp += 1
-      while (sp > 0 && outPos < expected) {
-        sp -= 1
-        out(outPos) = stack(sp); outPos += 1
-      }
-      sp == 0 // false would mean output overflow (more pixels than w·h)
-    }
-
-    def firstByte(code: Int): Byte = {
-      var c = code
-      while (c >= clear) c = prefix(c)
-      c.toByte
-    }
-
-    while (outPos < expected) {
-      val code = readCode()
-      if (code < 0 || code > dictSize) return None
-      if (code == clear) {
-        dictSize = end + 1
-        codeWidth = minCode + 1
-        prev = -1
-      } else if (code == end) {
-        return if (outPos == expected) Some(out) else None
-      } else if (prev == -1) {
-        if (code >= clear) return None // first code must be a root
-        if (!emit(code)) return None
-        prev = code
-      } else {
-        if (code == dictSize) { // the KwKwK case: prev + first(prev)
-          if (dictSize >= 4096) return None
-          prefix(dictSize) = prev
-          suffix(dictSize) = firstByte(prev)
-          dictSize += 1
-          if (!emit(code)) return None
-        } else {
-          if (!emit(code)) return None
-          if (dictSize < 4096) {
-            prefix(dictSize) = prev
-            suffix(dictSize) = firstByte(code)
-            dictSize += 1
-          }
-        }
-        prev = code
-        // width grows AFTER the insert fills the current range; at
-        // 4096 the table is full and width stays 12 (deferred clear)
-        if (dictSize == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
-      }
-    }
-    Some(out)
-  }
-
-  // --------------------------------------------------------- encode
-
-  /** REAL LZW encoder over an explicit palette + index raster (GIF89a,
-    * global color table, one non-interlaced frame at (0,0)). Any
-    * raster with ≤256 distinct colors round-trips bit-exactly through
-    * [[decode]]. `palette` holds 0xRRGGBB ints (padded to a power of
-    * two ≥2 on the wire); each index must be < palette.length.
+  /** One non-interlaced GIF89a frame at (0,0) over an explicit palette
+    * + index raster (global colour table, padded to a power of two ≥2
+    * on the wire). Any raster with ≤256 distinct colors round-trips
+    * bit-exactly through [[decode]]. `palette` holds 0xRRGGBB ints;
+    * each index must be < palette.length.
     */
   def encodeIndexed(width: Int, height: Int, palette: Array[Int],
       indices: Array[Byte]): Array[Byte] = {
@@ -305,138 +72,34 @@ object Gif {
       s"palette size ${palette.length} outside [1,256]")
     require(indices.length == width * height,
       s"index buffer ${indices.length} != $width x $height")
-    // wire table size: power of two >= max(palette.length, 2)
-    var bits = 1
-    while ((1 << bits) < palette.length) bits += 1
-    val tableN = 1 << bits
-    val out = new ByteArrayOutputStream()
-    out.write("GIF89a".getBytes("US-ASCII"))
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    w16(width); w16(height)
-    out.write(0x80 | (bits - 1)) // GCT present, 2^bits entries
-    out.write(0) // background index
-    out.write(0) // aspect ratio
-    var i = 0
-    while (i < tableN) {
-      val c = if (i < palette.length) palette(i) else 0
-      out.write((c >> 16) & 0xff); out.write((c >> 8) & 0xff)
-      out.write(c & 0xff)
-      i += 1
+    val cm = new IndexColorModel(8, palette.length, palette, 0, false, -1,
+      DataBuffer.TYPE_BYTE)
+    val img = new BufferedImage(width, height, BufferedImage.TYPE_BYTE_INDEXED, cm)
+    img.getRaster.setDataElements(0, 0, width, height, indices)
+    // the writer interlaces by default
+    ImageIoCodec.write(img, "gif") { (_, param) =>
+      param.setProgressiveMode(ImageWriteParam.MODE_DISABLED); null
     }
-    out.write(0x2c) // image descriptor at (0,0), full size, no LCT
-    w16(0); w16(0); w16(width); w16(height); out.write(0)
-    val minCode = math.max(2, bits) // spec: min code size >= 2
-    out.write(minCode)
-    val lzw = lzwEncode(indices, minCode)
-    var p = 0
-    while (p < lzw.length) {
-      val n = math.min(255, lzw.length - p)
-      out.write(n); out.write(lzw, p, n)
-      p += n
-    }
-    out.write(0) // data terminator
-    out.write(0x3b) // trailer
-    out.toByteArray
   }
 
   /** Re-encode an RGB raster as GIF: exact palette when the raster
-    * has ≤256 distinct colors — ALWAYS true for rasters decoded from a
-    * GIF, since nearest-neighbor resize and background composition
-    * introduce no colors beyond the source palette — else a 256-level
-    * grayscale quantization (documented lossy fallback for foreign
-    * rasters, mirroring what any RGB→GIF export does).
+    * has ≤256 distinct colors (always true for rasters decoded from a
+    * GIF: resize and background composition add no colors), else a
+    * 256-level Rec.709 luma quantization, the documented lossy
+    * fallback for foreign rasters.
     */
   def encodeRgb(img: Ppm.Image): Array[Byte] = {
-    val n = img.width * img.height
-    val colorToIdx = new java.util.HashMap[Int, Integer](512)
-    val palette = new scala.collection.mutable.ArrayBuffer[Int](256)
-    val indices = new Array[Byte](n)
-    var exact = true
-    var i = 0
-    while (i < n && exact) {
-      val p = i * 3
-      val c = ((img.pixels(p) & 0xff) << 16) |
-        ((img.pixels(p + 1) & 0xff) << 8) | (img.pixels(p + 2) & 0xff)
-      val hit = colorToIdx.get(c)
-      if (hit != null) indices(i) = hit.intValue().toByte
-      else if (palette.length < 256) {
-        colorToIdx.put(c, Integer.valueOf(palette.length))
-        indices(i) = palette.length.toByte
-        palette += c
-      } else exact = false
-      i += 1
-    }
-    if (exact)
-      encodeIndexed(img.width, img.height, palette.toArray, indices)
-    else { // >256 distinct colors: Rec.709 luma quantization
-      val gray = Array.tabulate(256)(g => (g << 16) | (g << 8) | g)
-      var j = 0
-      while (j < n) {
-        val p = j * 3
-        val y = 0.2126 * (img.pixels(p) & 0xff) +
-          0.7152 * (img.pixels(p + 1) & 0xff) +
-          0.0722 * (img.pixels(p + 2) & 0xff)
-        indices(j) = math.min(255, math.round(y).toInt).toByte
-        j += 1
-      }
-      encodeIndexed(img.width, img.height, gray, indices)
-    }
-  }
-
-  /** GIF-variant LZW encode: clear first, dictionary keyed on
-    * (prefix code, byte), reset via clear code when full.
-    */
-  private def lzwEncode(indices: Array[Byte], minCode: Int): Array[Byte] = {
-    val clear = 1 << minCode
-    val end = clear + 1
-    val out = new ByteArrayOutputStream()
-    var bitBuf = 0L
-    var bitCnt = 0
-    var codeWidth = minCode + 1
-    def write(code: Int): Unit = {
-      bitBuf |= code.toLong << bitCnt
-      bitCnt += codeWidth
-      while (bitCnt >= 8) {
-        out.write((bitBuf & 0xff).toInt)
-        bitBuf >>>= 8; bitCnt -= 8
-      }
-    }
-    // (prefix << 8 | byte) -> code
-    var dict = new java.util.HashMap[Int, Integer](8192)
-    var dictSize = end + 1
-    write(clear)
-    var prev = -1
-    var i = 0
-    while (i < indices.length) {
-      val b = indices(i) & 0xff
-      if (prev == -1) prev = b
-      else {
-        val key = (prev << 8) | b
-        val hit = dict.get(key)
-        if (hit != null) prev = hit.intValue()
-        else {
-          write(prev)
-          if (dictSize < 4096) {
-            dict.put(key, Integer.valueOf(dictSize))
-            dictSize += 1
-            // the DECODER grows width when ITS insert fills the range;
-            // its insert precedes ours by one code, so grow eagerly
-            if (dictSize == (1 << codeWidth) + 1 && codeWidth < 12)
-              codeWidth += 1
-          } else { // table full: clear and restart
-            write(clear)
-            dict = new java.util.HashMap[Int, Integer](8192)
-            dictSize = end + 1
-            codeWidth = minCode + 1
-          }
-          prev = b
-        }
-      }
-      i += 1
-    }
-    if (prev != -1) write(prev)
-    write(end)
-    if (bitCnt > 0) out.write((bitBuf & 0xff).toInt)
-    out.toByteArray
+    val rgb = img.pixels.grouped(3)
+      .map(p => ((p(0) & 0xff) << 16) | ((p(1) & 0xff) << 8) | (p(2) & 0xff)).toArray
+    val palette = rgb.distinct
+    if (palette.length <= 256) {
+      val index = palette.zipWithIndex.toMap
+      encodeIndexed(img.width, img.height, palette, rgb.map(index(_).toByte))
+    } else encodeIndexed(img.width, img.height,
+      Array.tabulate(256)(_ * 0x010101), rgb.map { c =>
+        val y = 0.2126 * ((c >> 16) & 0xff) + 0.7152 * ((c >> 8) & 0xff) +
+          0.0722 * (c & 0xff)
+        math.min(255, math.round(y).toInt).toByte
+      })
   }
 }

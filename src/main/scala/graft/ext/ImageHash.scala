@@ -27,10 +27,10 @@ import graft.ext.MultiModal.MediaRecord
   * nonexistent at any corpus size; the [[dHash]] 64-bit form stays
   * for contexts that want the compact fingerprint itself.
   *
-  * Decode rides [[MultiModal]]'s real pure-JVM codecs (P6 + PNG +
-  * JPEG + GIF);
-  * undecodable payloads yield no hash row — a gate must not invent
-  * fingerprints for bytes it cannot read.
+  * Decode rides [[MultiModal]]'s real codecs (P6 in plain Scala; PNG,
+  * JPEG and GIF through the JDK's `javax.imageio` behind one guarded
+  * helper); undecodable payloads yield no hash row — a gate must not
+  * invent fingerprints for bytes it cannot read.
   */
 object ImageHash {
 

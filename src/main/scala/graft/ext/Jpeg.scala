@@ -1,1214 +1,93 @@
 package graft.ext
 
-import java.io.ByteArrayOutputStream
+import java.awt.image.BufferedImage
+import javax.imageio.{ImageTypeSpecifier, ImageWriteParam}
+import javax.imageio.metadata.IIOMetadataNode
 
-/** Minimal baseline-sequential JPEG codec — pure JVM, no libraries,
-  * written from the public ITU-T T.81 spec (the round-12 verdict's
-  * last substantive multimodal stub: JPEG is the format a real image
-  * corpus is actually stored in).
-  *
-  * Decoder scope, stated: baseline + extended-sequential DCT markers
-  * (SOF0/SOF1) AND progressive DCT (SOF2, spectral selection +
-  * successive approximation, T.81 Annex G — the format most
-  * web-crawled images actually use), 8-bit samples, 1 component
-  * (grayscale) or 3 components (JFIF YCbCr) with sampling factors 1–4
-  * (4:4:4, 4:2:2, 4:2:0 all land here), restart intervals (DRI/RSTn),
-  * and 0xFF fill bytes before markers (B.1.1.2). Lossless,
-  * arithmetic coding, 12-bit, and hierarchical return None and fall
-  * back to [[MultiModal]]'s documented stub path — a payload outside
-  * the profile must degrade, never fail the task. Single-component
-  * scans are decoded non-interleaved (MCU = one data unit) per A.2,
-  * regardless of declared sampling factors.
-  *
-  * Encoder: baseline 4:4:4 YCbCr with the spec's own Annex K.1 quant
-  * tables (quality-scaled by the public libjpeg linear formula) and
-  * Annex K.3 Huffman tables — so encode→decode round-trips exercise
-  * every decoder stage without binary fixtures on disk, the Png/Ppm
-  * contract. JpegSpec pins hand-checkable fixtures: the canonical
-  * Huffman code construction (spec Annex C example), the EXTEND sign
-  * rule (F.12), and a uniform-gray image whose single quantized DC
-  * coefficient makes the full round trip bit-exact by hand arithmetic.
-  *
-  * Decodes into [[Ppm.Image]] so every existing raster operator
-  * (meanLuma, resize, dHash) applies unchanged.
+/** JPEG through the JDK's `javax.imageio` codec (libjpeg), via
+  * [[ImageIoCodec]]: baseline, extended-sequential and progressive
+  * (SOF2) frames, gray or JFIF YCbCr at any sampling, decode to an RGB
+  * [[Ppm.Image]]. libjpeg pads a truncated stream and returns it with a
+  * warning: a progressive stream keeps that raster (its earlier scans
+  * bound the damage), a sequential one returns None and falls back to
+  * [[MultiModal]]'s documented stub path. The encoders write 4:4:4 at
+  * the libjpeg linear quality scale, so quality 50 sends the Annex K
+  * tables unscaled, and sequential and progressive output at one
+  * quality decode pixel-identically.
   */
 object Jpeg {
 
-  // ---------------------------------------------------------- tables
-
-  /** Zigzag index → natural (row-major) index, T.81 Figure 5. */
-  private val Zigzag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-  /** Annex K.1 luminance quant table, natural order. */
-  private val QLum: Array[Int] = Array(
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99)
-
-  /** Annex K.1 chrominance quant table, natural order. */
-  private val QChrom: Array[Int] = Array(
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99)
-
-  /** Annex K.3 standard Huffman specs: (BITS[1..16], HUFFVAL). */
-  private[graft] val DcLumBits = Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private[graft] val DcLumVals = (0 to 11).toArray
-  private[graft] val DcChromBits = Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
-  private[graft] val DcChromVals = (0 to 11).toArray
-  private[graft] val AcLumBits = Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d)
-  private[graft] val AcLumVals: Array[Int] =
-    ("01 02 03 00 04 11 05 12 21 31 41 06 13 51 61 07 22 71 14 32 81 91 a1 08" +
-      " 23 42 b1 c1 15 52 d1 f0 24 33 62 72 82 09 0a 16 17 18 19 1a 25 26 27 28" +
-      " 29 2a 34 35 36 37 38 39 3a 43 44 45 46 47 48 49 4a 53 54 55 56 57 58 59" +
-      " 5a 63 64 65 66 67 68 69 6a 73 74 75 76 77 78 79 7a 83 84 85 86 87 88 89" +
-      " 8a 92 93 94 95 96 97 98 99 9a a2 a3 a4 a5 a6 a7 a8 a9 aa b2 b3 b4 b5 b6" +
-      " b7 b8 b9 ba c2 c3 c4 c5 c6 c7 c8 c9 ca d2 d3 d4 d5 d6 d7 d8 d9 da e1 e2" +
-      " e3 e4 e5 e6 e7 e8 e9 ea f1 f2 f3 f4 f5 f6 f7 f8 f9 fa")
-      .trim.split("\\s+").map(Integer.parseInt(_, 16))
-  private[graft] val AcChromBits = Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77)
-  private[graft] val AcChromVals: Array[Int] =
-    ("00 01 02 03 11 04 05 21 31 06 12 41 51 07 61 71 13 22 32 81 08 14 42 91" +
-      " a1 b1 c1 09 23 33 52 f0 15 62 72 d1 0a 16 24 34 e1 25 f1 17 18 19 1a 26" +
-      " 27 28 29 2a 35 36 37 38 39 3a 43 44 45 46 47 48 49 4a 53 54 55 56 57 58" +
-      " 59 5a 63 64 65 66 67 68 69 6a 73 74 75 76 77 78 79 7a 82 83 84 85 86 87" +
-      " 88 89 8a 92 93 94 95 96 97 98 99 9a a2 a3 a4 a5 a6 a7 a8 a9 aa b2 b3 b4" +
-      " b5 b6 b7 b8 b9 ba c2 c3 c4 c5 c6 c7 c8 c9 ca d2 d3 d4 d5 d6 d7 d8 d9 da" +
-      " e2 e3 e4 e5 e6 e7 e8 e9 ea f2 f3 f4 f5 f6 f7 f8 f9 fa")
-      .trim.split("\\s+").map(Integer.parseInt(_, 16))
-
-  /** 1-D DCT basis M(u,x) = c(u)/2 · cos((2x+1)uπ/16), c(0)=1/√2 —
-    * 2-D forward is M·f·Mᵀ, inverse is Mᵀ·F·M (T.81 A.3.3).
-    */
-  private val Basis: Array[Double] = {
-    val m = new Array[Double](64)
-    var u = 0
-    while (u < 8) {
-      val cu = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
-      var x = 0
-      while (x < 8) {
-        m(u * 8 + x) = cu / 2.0 * math.cos((2 * x + 1) * u * math.Pi / 16.0)
-        x += 1
-      }
-      u += 1
-    }
-    m
-  }
-
-  // --------------------------------------------------- Huffman tables
-
-  /** Canonical Huffman codes from (BITS, HUFFVAL) — T.81 Annex C.
-    * `codes(i)`/`lengths(i)` are the code for HUFFVAL(i); the decoder
-    * view is the spec's (mincode, maxcode, valptr) per length.
-    */
-  private[graft] final class Huff(bits: Array[Int], val huffval: Array[Int]) {
-    val lengths = new Array[Int](huffval.length)
-    val codes = new Array[Int](huffval.length)
-    val mincode = new Array[Int](17)
-    val maxcode = Array.fill(17)(-1)
-    val valptr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        valptr(l) = k
-        if (bits(l - 1) > 0) {
-          mincode(l) = code
-          var i = 0
-          while (i < bits(l - 1)) {
-            lengths(k) = l; codes(k) = code; code += 1; k += 1; i += 1
-          }
-          maxcode(l) = code - 1
-        }
-        code <<= 1
-        l += 1
-      }
-      require(k == huffval.length, s"BITS total $k != HUFFVAL ${huffval.length}")
-    }
-    /** symbol → (code, length) for the encoder */
-    val encTable: Map[Int, (Int, Int)] =
-      huffval.zipWithIndex.map { case (sym, i) => sym -> ((codes(i), lengths(i))) }.toMap
-  }
-
-  /** The EXTEND sign rule, T.81 F.12: map an s-bit magnitude field to
-    * its signed value.
-    */
-  private[graft] def extend(v: Int, s: Int): Int =
-    if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-
-  /** Bit size category (CSIZE, F.1.2.1.1): smallest s with |v| < 2^s. */
-  private[graft] def category(v: Int): Int = {
-    var a = math.abs(v); var s = 0
-    while (a != 0) { a >>= 1; s += 1 }
-    s
-  }
-
-  // ----------------------------------------------------------- decode
-
-  private final class MarkerHit(val m: Int) extends Exception
-  private final class Malformed extends Exception
-
-  private final class BitReader(data: Array[Byte], var pos: Int,
-      tolerant: Boolean = false) {
-    private var buf = 0
-    private var cnt = 0
-    // libjpeg truncation tolerance (jdhuff.c jpeg_fill_bit_buffer): a
-    // marker met mid-entropy-data in TOLERANT mode records its 0xFF
-    // position and feeds zero bits from then on, so the caller can
-    // finish its block grid deterministically and resume parsing AT
-    // the marker — slightly truncated progressive scans decode instead
-    // of falling to the stub path (r14 ADVICE). Sequential decode
-    // keeps the strict MarkerHit throw.
-    private var markerAt = -1
-    def hitMarker: Int = markerAt
-    def nextBit(): Int = {
-      if (cnt == 0) {
-        if (markerAt >= 0) return 0 // padding past an early marker
-        if (pos >= data.length) throw new Malformed
-        var b = data(pos) & 0xff; pos += 1
-        if (b == 0xff) {
-          if (pos >= data.length) throw new Malformed
-          val b2 = data(pos) & 0xff
-          if (b2 == 0x00) pos += 1 // stuffed 0xFF data byte
-          else if (tolerant) { markerAt = pos - 1; return 0 }
-          else throw new MarkerHit(b2)
-        }
-        buf = b; cnt = 8
-      }
-      cnt -= 1
-      (buf >> cnt) & 1
-    }
-    def receive(s: Int): Int = {
-      var v = 0; var i = 0
-      while (i < s) { v = (v << 1) | nextBit(); i += 1 }
-      v
-    }
-    def decodeSym(t: Huff): Int = {
-      var code = nextBit(); var l = 1
-      while (code > t.maxcode(l)) {
-        code = (code << 1) | nextBit(); l += 1
-        if (l > 16) throw new Malformed
-      }
-      t.huffval(t.valptr(l) + code - t.mincode(l))
-    }
-    /** Byte-align and consume an expected RSTn marker. */
-    def restart(): Unit = {
-      cnt = 0
-      if (markerAt >= 0) return // padding: nothing real left to consume
-      if (pos + 1 >= data.length || (data(pos) & 0xff) != 0xff) throw new Malformed
-      val m = data(pos + 1) & 0xff
-      if (m < 0xd0 || m > 0xd7) throw new Malformed
-      pos += 2
-    }
-  }
-
-  private final case class Component(
-      id: Int, h: Int, v: Int, tq: Int,
-      var dcTbl: Int = 0, var acTbl: Int = 0)
+  private val NativeFormat = "javax_imageio_jpeg_image_1.0"
 
   /** Parse a JPEG payload into an RGB raster; None for anything
-    * outside the supported profile or malformed.
+    * malformed, declaring a raster past the bomb guard, or (sequential
+    * frames only) decoded with a warning.
     */
   def decode(bytes: Array[Byte]): Option[Ppm.Image] =
-    try decodeImpl(bytes) catch { case _: Exception => None }
-
-  private def decodeImpl(bytes: Array[Byte]): Option[Ppm.Image] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
-        (bytes(1) & 0xff) != 0xd8) return None
-    var pos = 2
-    val quant = new Array[Array[Int]](4) // natural order, dequant-ready
-    val dcHuff = new Array[Huff](4)
-    val acHuff = new Array[Huff](4)
-    var comps: Array[Component] = null
-    var w = 0; var h = 0
-    var restartInterval = 0
-    var progressive = false
-    var coefs: Array[Array[Int]] = null // per comp, zigzag order per block
-    var bpl: Array[Int] = null // blocks per line, MCU-padded
-    var bpc: Array[Int] = null // blocks per column, MCU-padded
-    var sawScan = false
-
-    def u16(p: Int): Int = ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff)
-
-    while (pos + 2 <= bytes.length) {
-      if ((bytes(pos) & 0xff) != 0xff) return None
-      // B.1.1.2: any number of 0xFF fill bytes may precede a marker code
-      while (pos + 1 < bytes.length && (bytes(pos + 1) & 0xff) == 0xff) pos += 1
-      if (pos + 2 > bytes.length) return None
-      val marker = bytes(pos + 1) & 0xff
-      if (marker == 0xd9) // EOI: all progressive scans are in; sequential
-        return if (progressive && sawScan) // mode returns from its one scan
-          reconstructProgressive(comps, coefs, bpl, bpc, quant, w, h)
-        else None
-      if (pos + 4 > bytes.length) return None
-      val len = u16(pos + 2)
-      if (len < 2 || pos + 2 + len > bytes.length) return None
-      val body = pos + 4
-      var nextPos = pos + 2 + len
-      marker match {
-        case 0xdb => // DQT — one or more tables, zigzag order on the wire
-          var p = body
-          while (p < pos + 2 + len) {
-            val pq = (bytes(p) & 0xff) >> 4
-            val tq = bytes(p) & 0x0f
-            if (pq != 0 || tq > 3 || p + 1 + 64 > pos + 2 + len) return None
-            val t = new Array[Int](64)
-            var k = 0
-            while (k < 64) { t(Zigzag(k)) = bytes(p + 1 + k) & 0xff; k += 1 }
-            quant(tq) = t
-            p += 65
-          }
-        case 0xc4 => // DHT — one or more tables
-          var p = body
-          while (p < pos + 2 + len) {
-            val tc = (bytes(p) & 0xff) >> 4
-            val th = bytes(p) & 0x0f
-            if (tc > 1 || th > 3) return None
-            val bits = Array.tabulate(16)(i => bytes(p + 1 + i) & 0xff)
-            val n = bits.sum
-            if (n == 0 || n > 256 || p + 17 + n > pos + 2 + len) return None
-            val vals = Array.tabulate(n)(i => bytes(p + 17 + i) & 0xff)
-            val tbl = new Huff(bits, vals)
-            if (tc == 0) dcHuff(th) = tbl else acHuff(th) = tbl
-            p += 17 + n
-          }
-        case 0xc0 | 0xc1 | 0xc2 => // SOF0/SOF1 sequential, SOF2 progressive
-          if (comps != null) return None // one frame per stream
-          progressive = marker == 0xc2
-          val precision = bytes(body) & 0xff
-          if (precision != 8) return None
-          h = u16(body + 1); w = u16(body + 3)
-          val nc = bytes(body + 5) & 0xff
-          if (w <= 0 || h <= 0 || (nc != 1 && nc != 3)) return None
-          if (w.toLong * h * 4 > Int.MaxValue / 2) return None // bomb guard
-          comps = Array.tabulate(nc) { i =>
-            val p = body + 6 + i * 3
-            val hv = bytes(p + 1) & 0xff
-            val c = Component(bytes(p) & 0xff, hv >> 4, hv & 0x0f,
-              bytes(p + 2) & 0x0f)
-            if (c.h < 1 || c.h > 4 || c.v < 1 || c.v > 4 || c.tq > 3) return None
-            c
-          }
-          // T.81 A.2: a single-component scan is non-interleaved (MCU =
-          // one data unit), so in a 1-component frame the declared
-          // sampling factors don't shape the entropy data or the plane.
-          if (nc == 1) comps(0) = comps(0).copy(h = 1, v = 1)
-          if (progressive) {
-            val hmax = comps.map(_.h).max; val vmax = comps.map(_.v).max
-            val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-            val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-            bpl = comps.map(c => mcusX * c.h)
-            bpc = comps.map(c => mcusY * c.v)
-            var total = 0L
-            comps.indices.foreach(i => total += bpl(i).toLong * bpc(i) * 64)
-            if (total > (1L << 26)) return None // coefficient-bomb guard
-            coefs = Array.tabulate(comps.length)(i =>
-              new Array[Int](bpl(i) * bpc(i) * 64))
-          }
-        case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
-            0xcd | 0xce | 0xcf =>
-          return None // lossless/differential/arithmetic/hierarchical
-        case 0xdd => // DRI
-          restartInterval = u16(body)
-        case 0xda if !progressive => // SOS — the single sequential scan
-          if (comps == null) return None
-          val ns = bytes(body) & 0xff
-          if (ns != comps.length) return None
-          var p = body + 1
-          var i = 0
-          while (i < ns) {
-            val cs = bytes(p) & 0xff
-            val c = comps.find(_.id == cs).getOrElse(return None)
-            c.dcTbl = (bytes(p + 1) & 0xff) >> 4
-            c.acTbl = bytes(p + 1) & 0x0f
-            p += 2; i += 1
-          }
-          return decodeScan(bytes, pos + 2 + len, w, h, comps, quant,
-            dcHuff, acHuff, restartInterval)
-        case 0xda => // SOS — one progressive scan; more may follow
-          if (comps == null) return None
-          nextPos = decodeProgScan(bytes, pos, w, h, comps, coefs, bpl, bpc,
-            dcHuff, acHuff, restartInterval)
-          sawScan = true
-        case _ => () // APPn / COM / anything else with a length: skip
-      }
-      pos = nextPos
+    ImageIoCodec.read(bytes, "jpeg") { reader =>
+      var warned = false
+      reader.addIIOReadWarningListener((_, _) => warned = true)
+      val img = reader.read(0)
+      if (warned && sofMarker(bytes) != 0xc2) None
+      else Some(ImageIoCodec.toImage(img))
     }
-    None
-  }
 
-  /** Decode one progressive scan (T.81 G.2) into the per-component
-    * coefficient arrays (zigzag order). Returns the stream position of
-    * the next marker after the scan's entropy data.
+  /** The first SOFn marker code, found by walking the header segments
+    * (image metadata throws on a truncated progressive stream); -1 if
+    * none precedes the end of the bytes.
     */
-  private def decodeProgScan(bytes: Array[Byte], sosPos: Int, w: Int, h: Int,
-      comps: Array[Component], coefs: Array[Array[Int]],
-      bpl: Array[Int], bpc: Array[Int],
-      dcHuff: Array[Huff], acHuff: Array[Huff],
-      restartInterval: Int): Int = {
-    def u16(p: Int): Int = ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff)
-    val len = u16(sosPos + 2)
-    val body = sosPos + 4
-    val ns = bytes(body) & 0xff
-    if (ns < 1 || ns > comps.length || body + 1 + 2 * ns + 3 > sosPos + 2 + len)
-      throw new Malformed
-    val scomps = new Array[Int](ns) // indices into comps, scan order
-    var p = body + 1
-    var i = 0
-    while (i < ns) {
-      val cs = bytes(p) & 0xff
-      val ci = comps.indexWhere(_.id == cs)
-      if (ci < 0) throw new Malformed
-      comps(ci).dcTbl = (bytes(p + 1) & 0xff) >> 4
-      comps(ci).acTbl = bytes(p + 1) & 0x0f
-      scomps(i) = ci
-      p += 2; i += 1
+  private def sofMarker(b: Array[Byte]): Int = {
+    var p = 2
+    while (p + 4 <= b.length && (b(p) & 0xff) == 0xff) {
+      val m = b(p + 1) & 0xff
+      if (m == 0xff) p += 1 // fill byte before a marker
+      else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
+        return m
+      else p += 2 + (((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff))
     }
-    val ss = bytes(p) & 0xff
-    val se = bytes(p + 1) & 0xff
-    val ah = (bytes(p + 2) & 0xff) >> 4
-    val al = bytes(p + 2) & 0x0f
-    if (ss > 63 || se > 63 || ss > se || al > 13) throw new Malformed
-    if (ss == 0 && se != 0) throw new Malformed // DC scan is exactly [0,0]
-    if (ss > 0 && ns != 1) throw new Malformed // AC scans: one component
-    val hmax = comps.map(_.h).max
-    val vmax = comps.map(_.v).max
-
-    val br = new BitReader(bytes, sosPos + 2 + len, tolerant = true)
-    var eobrun = 0
-    val dcPred = new Array[Int](ns)
-
-    // ---- per-block band decoders (G.2.1/G.2.2, libjpeg-equivalent) ----
-    def acFirst(coef: Array[Int], off: Int, t: Huff): Unit = {
-      if (eobrun > 0) { eobrun -= 1; return }
-      var k = ss
-      while (k <= se) {
-        val rs = br.decodeSym(t)
-        val r = rs >> 4; val s = rs & 15
-        if (s == 0) {
-          if (r == 15) k += 16 // ZRL
-          else { // EOBn: run of 2^r + extra blocks, this one included
-            eobrun = (1 << r) - 1
-            if (r > 0) eobrun += br.receive(r)
-            return
-          }
-        } else {
-          k += r
-          if (k > se) throw new Malformed
-          coef(off + k) = extend(br.receive(s), s) << al
-          k += 1
-        }
-      }
-    }
-
-    def acRefine(coef: Array[Int], off: Int, t: Huff): Unit = {
-      val p1 = 1 << al; val m1 = -1 << al
-      var k = ss
-      if (eobrun == 0) {
-        var atEob = false
-        while (k <= se && !atEob) {
-          val rs = br.decodeSym(t)
-          var r = rs >> 4; val s = rs & 15
-          var newVal = 0
-          if (s == 0) {
-            if (r != 15) { // EOBn — rest of block via the EOB branch below
-              eobrun = 1 << r
-              if (r > 0) eobrun += br.receive(r)
-              atEob = true
-            } // r == 15: ZRL — skip 16 zero-history positions below
-          } else {
-            if (s != 1) throw new Malformed // refinement sends 1-bit values
-            newVal = if (br.nextBit() == 1) p1 else m1
-          }
-          if (!atEob) {
-            // advance past r zero-history coefficients, reading a
-            // correction bit at every nonzero-history one on the way
-            var placed = false
-            while (k <= se && !placed) {
-              val c0 = coef(off + k)
-              if (c0 != 0) {
-                if (br.nextBit() == 1 && (c0 & p1) == 0)
-                  coef(off + k) = c0 + (if (c0 >= 0) p1 else m1)
-              } else {
-                if (r == 0) {
-                  if (newVal != 0) coef(off + k) = newVal
-                  placed = true
-                } else r -= 1
-              }
-              k += 1
-            }
-            if (!placed && newVal != 0) throw new Malformed
-          }
-        }
-      }
-      if (eobrun > 0) { // EOB run covers this block's remaining band
-        while (k <= se) {
-          val c0 = coef(off + k)
-          if (c0 != 0 && br.nextBit() == 1 && (c0 & p1) == 0)
-            coef(off + k) = c0 + (if (c0 >= 0) p1 else m1)
-          k += 1
-        }
-        eobrun -= 1
-      }
-    }
-
-    def decodeBlock(si: Int, off: Int): Unit = {
-      val c = comps(scomps(si))
-      if (ss == 0) {
-        if (ah == 0) { // DC first: diff-coded, point transform = >> Al
-          val t = dcHuff(c.dcTbl)
-          if (t == null) throw new Malformed
-          val s = br.decodeSym(t)
-          if (s > 11) throw new Malformed
-          dcPred(si) += extend(br.receive(s), s)
-          coefs(scomps(si))(off) = dcPred(si) << al
-        } else { // DC refinement: one raw bit per block
-          if (br.nextBit() == 1) coefs(scomps(si))(off) |= 1 << al
-        }
-      } else {
-        val t = acHuff(c.acTbl)
-        if (t == null) throw new Malformed
-        if (ah == 0) acFirst(coefs(scomps(si)), off, t)
-        else acRefine(coefs(scomps(si)), off, t)
-      }
-    }
-
-    def atRestart(unitIdx: Int): Unit =
-      if (restartInterval > 0 && unitIdx > 0 &&
-          unitIdx % restartInterval == 0) {
-        br.restart()
-        java.util.Arrays.fill(dcPred, 0)
-        eobrun = 0
-      }
-
-    if (ns == 1) {
-      // non-interleaved: the component's own block grid (A.2.2 — NOT
-      // MCU-padded), row-major; restart interval counts blocks
-      val ci = scomps(0)
-      val c = comps(ci)
-      val compW = (w * c.h + hmax - 1) / hmax
-      val compH = (h * c.v + vmax - 1) / vmax
-      val bw = (compW + 7) / 8
-      val bh = (compH + 7) / 8
-      var blk = 0
-      var by = 0
-      while (by < bh) {
-        var bx = 0
-        while (bx < bw) {
-          atRestart(blk)
-          decodeBlock(0, (by * bpl(ci) + bx) * 64)
-          blk += 1; bx += 1
-        }
-        by += 1
-      }
-    } else {
-      // interleaved (DC-band scans only): the padded MCU grid, h×v
-      // blocks per component per MCU; restart interval counts MCUs
-      val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-      val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-      var my = 0
-      while (my < mcusY) {
-        var mx = 0
-        while (mx < mcusX) {
-          atRestart(my * mcusX + mx)
-          var si = 0
-          while (si < ns) {
-            val c = comps(scomps(si))
-            var by = 0
-            while (by < c.v) {
-              var bx = 0
-              while (bx < c.h) {
-                decodeBlock(si,
-                  ((my * c.v + by) * bpl(scomps(si)) + mx * c.h + bx) * 64)
-                bx += 1
-              }
-              by += 1
-            }
-            si += 1
-          }
-          mx += 1
-        }
-        my += 1
-      }
-    }
-
-    // advance to the next marker: skip residual entropy padding, RSTn,
-    // stuffed bytes, and fill bytes; a marker hit mid-scan (tolerant
-    // zero-bit padding above) resumes AT that marker's 0xFF
-    var q = if (br.hitMarker >= 0) br.hitMarker else br.pos
-    while (q + 1 < bytes.length && !((bytes(q) & 0xff) == 0xff && {
-          val m2 = bytes(q + 1) & 0xff
-          m2 != 0x00 && m2 != 0xff && (m2 < 0xd0 || m2 > 0xd7)
-        })) q += 1
-    if (q + 1 >= bytes.length) throw new Malformed
-    q
-  }
-
-  /** Dequantize + IDCT the accumulated progressive coefficients and
-    * composite the planes into an RGB raster.
-    */
-  private def reconstructProgressive(comps: Array[Component],
-      coefs: Array[Array[Int]], bpl: Array[Int], bpc: Array[Int],
-      quant: Array[Array[Int]], w: Int, h: Int): Option[Ppm.Image] = {
-    val hmax = comps.map(_.h).max
-    val vmax = comps.map(_.v).max
-    val planeW = comps.indices.map(i => bpl(i) * 8).toArray
-    val planes = Array.tabulate(comps.length)(i =>
-      new Array[Byte](bpl(i) * 8 * bpc(i) * 8))
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    val out = new Array[Double](64)
-    var ci = 0
-    while (ci < comps.length) {
-      val q = quant(comps(ci).tq)
-      if (q == null) return None
-      val src = coefs(ci)
-      var by = 0
-      while (by < bpc(ci)) {
-        var bx = 0
-        while (bx < bpl(ci)) {
-          val off = (by * bpl(ci) + bx) * 64
-          var k = 0
-          while (k < 64) { coef(Zigzag(k)) = src(off + k) * q(Zigzag(k)); k += 1 }
-          idct(coef, tmp, out)
-          val px0 = bx * 8; val py0 = by * 8
-          val pw = planeW(ci)
-          var y = 0
-          while (y < 8) {
-            val rowBase = (py0 + y) * pw + px0
-            var x = 0
-            while (x < 8) {
-              val v = math.round(out(y * 8 + x) + 128.0).toInt
-              planes(ci)(rowBase + x) =
-                (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-              x += 1
-            }
-            y += 1
-          }
-          bx += 1
-        }
-        by += 1
-      }
-      ci += 1
-    }
-    Some(composite(planes, planeW, comps, w, h, hmax, vmax))
-  }
-
-  private def decodeScan(bytes: Array[Byte], scanStart: Int, w: Int, h: Int,
-      comps: Array[Component], quant: Array[Array[Int]],
-      dcHuff: Array[Huff], acHuff: Array[Huff],
-      restartInterval: Int): Option[Ppm.Image] = {
-    val hmax = comps.map(_.h).max
-    val vmax = comps.map(_.v).max
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    // padded per-component planes: one byte per sample at component res
-    val planeW = comps.map(c => mcusX * c.h * 8)
-    val planeH = comps.map(c => mcusY * c.v * 8)
-    val planes = Array.tabulate(comps.length)(i =>
-      new Array[Byte](planeW(i) * planeH(i)))
-    comps.foreach { c =>
-      if (quant(c.tq) == null || dcHuff(c.dcTbl) == null ||
-          acHuff(c.acTbl) == null) return None
-    }
-
-    val br = new BitReader(bytes, scanStart)
-    val dcPred = new Array[Int](comps.length)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    val out = new Array[Double](64)
-
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        val mcuIdx = my * mcusX + mx
-        if (restartInterval > 0 && mcuIdx > 0 && mcuIdx % restartInterval == 0) {
-          br.restart()
-          java.util.Arrays.fill(dcPred, 0)
-        }
-        var ci = 0
-        while (ci < comps.length) {
-          val c = comps(ci)
-          val q = quant(c.tq)
-          var by = 0
-          while (by < c.v) {
-            var bx = 0
-            while (bx < c.h) {
-              java.util.Arrays.fill(coef, 0)
-              // DC
-              val s = br.decodeSym(dcHuff(c.dcTbl))
-              if (s > 11) throw new Malformed
-              dcPred(ci) += extend(br.receive(s), s)
-              coef(0) = dcPred(ci) * q(0)
-              // AC
-              var k = 1
-              while (k < 64) {
-                val rs = br.decodeSym(acHuff(c.acTbl))
-                val r = rs >> 4; val sz = rs & 15
-                if (sz == 0) {
-                  if (r == 15) k += 16 else k = 64 // ZRL / EOB
-                } else {
-                  k += r
-                  if (k > 63) throw new Malformed
-                  coef(Zigzag(k)) = extend(br.receive(sz), sz) * q(Zigzag(k))
-                  k += 1
-                }
-              }
-              idct(coef, tmp, out)
-              // place block at (mx*c.h + bx, my*c.v + by) in the plane
-              val px0 = (mx * c.h + bx) * 8
-              val py0 = (my * c.v + by) * 8
-              val pw = planeW(ci)
-              var y = 0
-              while (y < 8) {
-                val rowBase = (py0 + y) * pw + px0
-                var x = 0
-                while (x < 8) {
-                  val v = math.round(out(y * 8 + x) + 128.0).toInt
-                  planes(ci)(rowBase + x) =
-                    (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-                  x += 1
-                }
-                y += 1
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mx += 1
-      }
-      my += 1
-    }
-
-    Some(composite(planes, planeW, comps, w, h, hmax, vmax))
-  }
-
-  /** Upsample (box replication) + YCbCr→RGB color convert the decoded
-    * component planes into an interleaved RGB raster.
-    */
-  private def composite(planes: Array[Array[Byte]], planeW: Array[Int],
-      comps: Array[Component], w: Int, h: Int, hmax: Int,
-      vmax: Int): Ppm.Image = {
-    val px = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val o = (y * w + x) * 3
-        if (comps.length == 1) {
-          val yv = planes(0)((y * comps(0).v / vmax) * planeW(0) +
-            x * comps(0).h / hmax) & 0xff
-          px(o) = yv.toByte; px(o + 1) = yv.toByte; px(o + 2) = yv.toByte
-        } else {
-          def samp(ci: Int): Int = planes(ci)(
-            (y * comps(ci).v / vmax) * planeW(ci) + x * comps(ci).h / hmax) & 0xff
-          val yy = samp(0).toDouble
-          val cb = samp(1) - 128.0
-          val cr = samp(2) - 128.0
-          def clamp(d: Double): Byte = {
-            val v = math.round(d).toInt
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          }
-          px(o) = clamp(yy + 1.402 * cr)
-          px(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          px(o + 2) = clamp(yy + 1.772 * cb)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    Ppm.Image(w, h, px)
-  }
-
-  /** 2-D 8×8 inverse DCT: f = Mᵀ·F·M via two 1-D passes (doubles). */
-  private def idct(coef: Array[Int], tmp: Array[Double], out: Array[Double]): Unit = {
-    // rows of Mᵀ·F: tmp(x, v) = Σ_u M(u,x)·F(u,v)
-    var x = 0
-    while (x < 8) {
-      var v = 0
-      while (v < 8) {
-        var s = 0.0
-        var u = 0
-        while (u < 8) { s += Basis(u * 8 + x) * coef(u * 8 + v); u += 1 }
-        tmp(x * 8 + v) = s
-        v += 1
-      }
-      x += 1
-    }
-    // (Mᵀ·F)·M: out(x, y) = Σ_v tmp(x, v)·M(v, y)
-    x = 0
-    while (x < 8) {
-      var y = 0
-      while (y < 8) {
-        var s = 0.0
-        var v = 0
-        while (v < 8) { s += tmp(x * 8 + v) * Basis(v * 8 + y); v += 1 }
-        out(x * 8 + y) = s
-        y += 1
-      }
-      x += 1
-    }
-  }
-
-  // ----------------------------------------------------------- encode
-
-  private final class BitWriter(out: ByteArrayOutputStream) {
-    private var buf = 0
-    private var cnt = 0
-    def put(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        buf = (buf << 1) | ((code >> i) & 1)
-        cnt += 1
-        if (cnt == 8) {
-          out.write(buf)
-          if (buf == 0xff) out.write(0x00) // byte stuffing
-          buf = 0; cnt = 0
-        }
-        i -= 1
-      }
-    }
-    /** Pad the current byte with 1-bits (spec convention) — before a
-      * restart marker or at end of scan.
-      */
-    def flushAlign(): Unit =
-      if (cnt > 0) put((1 << (8 - cnt)) - 1, 8 - cnt)
-  }
-
-  /** Annex K table scaled by the public libjpeg linear quality rule. */
-  private[graft] def scaledQuant(base: Array[Int], quality: Int): Array[Int] = {
-    val q = math.max(1, math.min(100, quality))
-    val scale = if (q < 50) 5000 / q else 200 - 2 * q
-    base.map { v =>
-      val t = (v * scale + 50) / 100
-      if (t < 1) 1 else if (t > 255) 255 else t
-    }
+    -1
   }
 
   /** Encode an RGB raster as baseline 4:4:4 JFIF JPEG. */
-  def encode(img: Ppm.Image, quality: Int = 90): Array[Byte] = {
-    val w = img.width; val h = img.height
-    val qY = scaledQuant(QLum, quality)
-    val qC = scaledQuant(QChrom, quality)
-    val dcY = new Huff(DcLumBits, DcLumVals)
-    val acY = new Huff(AcLumBits, AcLumVals)
-    val dcC = new Huff(DcChromBits, DcChromVals)
-    val acC = new Huff(AcChromBits, AcChromVals)
+  def encode(img: Ppm.Image, quality: Int = 90): Array[Byte] =
+    write(ImageIoCodec.toBuffered(img), quality, progressive = false)
 
-    val out = new ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xff); out.write(marker) }
-    def seg(marker: Int, body: Array[Int]): Unit = {
-      m(marker)
-      val len = body.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
-      body.foreach(out.write)
-    }
-    m(0xd8) // SOI
-    seg(0xdb, 0 +: Zigzag.map(qY(_))) // DQT Tq=0 (zigzag on the wire)
-    seg(0xdb, 1 +: Zigzag.map(qC(_))) // DQT Tq=1
-    seg(0xc0, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, 3,
-      1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)) // SOF0, 4:4:4
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Int]): Unit =
-      seg(0xc4, ((tc << 4) | th) +: (bits ++ vals))
-    dht(0, 0, DcLumBits, DcLumVals)
-    dht(1, 0, AcLumBits, AcLumVals)
-    dht(0, 1, DcChromBits, DcChromVals)
-    dht(1, 1, AcChromBits, AcChromVals)
-    seg(0xda, Array(3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)) // SOS
-
-    val bw = new BitWriter(out)
-    val mcusX = (w + 7) / 8
-    val mcusY = (h + 7) / 8
-    val dcPred = new Array[Int](3)
-    val block = new Array[Double](64)
-    val tmp = new Array[Double](64)
-    val freq = new Array[Double](64)
-    val quantized = new Array[Int](64)
-
-    def encodeBlock(qt: Array[Int], dcT: Huff, acT: Huff, ci: Int): Unit = {
-      fdct(block, tmp, freq)
-      var i = 0
-      while (i < 64) {
-        val v = freq(i) / qt(i)
-        quantized(i) = math.round(v).toInt
-        i += 1
-      }
-      // DC
-      val diff = quantized(0) - dcPred(ci)
-      dcPred(ci) = quantized(0)
-      val s = category(diff)
-      val (c0, l0) = dcT.encTable(s)
-      bw.put(c0, l0)
-      if (s > 0) bw.put(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-      // AC with run-lengths
-      var run = 0
-      var k = 1
-      while (k < 64) {
-        val v = quantized(Zigzag(k))
-        if (v == 0) run += 1
-        else {
-          while (run > 15) {
-            val (cz, lz) = acT.encTable(0xf0); bw.put(cz, lz); run -= 16
-          }
-          val sz = category(v)
-          val (ca, la) = acT.encTable((run << 4) | sz)
-          bw.put(ca, la)
-          bw.put(if (v >= 0) v else v + (1 << sz) - 1, sz)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) { val (ce, le) = acT.encTable(0x00); bw.put(ce, le) }
-    }
-
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        var ci = 0
-        while (ci < 3) {
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              // clamp-replicate edge pixels
-              val sx = math.min(mx * 8 + x, w - 1)
-              val sy = math.min(my * 8 + y, h - 1)
-              val p = (sy * w + sx) * 3
-              val r = img.pixels(p) & 0xff
-              val g = img.pixels(p + 1) & 0xff
-              val b = img.pixels(p + 2) & 0xff
-              val v = ci match {
-                case 0 => 0.299 * r + 0.587 * g + 0.114 * b
-                case 1 => -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-                case _ => 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-              }
-              block(y * 8 + x) = v - 128.0
-              x += 1
-            }
-            y += 1
-          }
-          if (ci == 0) encodeBlock(qY, dcY, acY, 0)
-          else encodeBlock(qC, dcC, acC, ci)
-          ci += 1
-        }
-        mx += 1
-      }
-      my += 1
-    }
-    // pad the final byte with 1-bits (spec convention)
-    bw.put(0x7f, 7)
-    m(0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** BITS[1..16] for a flat canonical Huffman table: all `symCount`
-    * symbols at the shortest uniform length(s) that keep the all-1s
-    * code unassigned (T.81 C.2). Compression-indifferent but fully
-    * valid — the progressive encoder needs EOBn symbols (0x10..0xE0)
-    * that Annex K's baseline AC tables don't carry.
-    */
-  private[graft] def flatHuff(symCount: Int): Array[Int] = {
-    require(symCount > 0 && symCount <= 256)
-    val bits = new Array[Int](16)
-    if (symCount <= 255) {
-      var l = 1
-      while ((1 << l) - 1 < symCount) l += 1
-      bits(l - 1) = symCount
-    } else { bits(8) = 128; bits(9) = 128 }
-    bits
-  }
-
-  /** Encode an RGB raster as a progressive (SOF2) JFIF JPEG with a
-    * spectral-selection + successive-approximation scan script
-    * (T.81 Annex G): DC first at Al=1, comp-0 AC split into bands
-    * 1–5 / 6–63 at Al=1, per-component AC refinement to Al=0, DC
-    * refinement last. 4:4:4 YCbCr (or single-component grayscale).
-    * The quantized coefficients are identical to [[encode]]'s at the
-    * same quality, so once every refinement lands the decode is
-    * pixel-identical to the sequential form — JpegSpec pins that.
+  /** Encode an RGB raster as progressive (SOF2) JFIF JPEG with libjpeg's
+    * multi-scan script, 4:4:4 YCbCr or, with `grayscale`, one JFIF luma
+    * component. The quantized coefficients equal [[encode]]'s at the
+    * same quality, so the decode is pixel-identical to the sequential
+    * form (JpegSpec pins that).
     */
   def encodeProgressive(img: Ppm.Image, quality: Int = 90,
-      grayscale: Boolean = false, restartInterval: Int = 0): Array[Byte] = {
-    val w = img.width; val h = img.height
-    val nc = if (grayscale) 1 else 3
-    val qY = scaledQuant(QLum, quality)
-    val qC = scaledQuant(QChrom, quality)
-    val bw0 = (w + 7) / 8
-    val bh0 = (h + 7) / 8
-
-    // ---- stage 1: FDCT + quantize every block (zigzag order) ----
-    val coefs = Array.ofDim[Int](nc, bw0 * bh0 * 64)
-    val block = new Array[Double](64)
-    val tmp = new Array[Double](64)
-    val freq = new Array[Double](64)
-    var by = 0
-    while (by < bh0) {
-      var bx = 0
-      while (bx < bw0) {
-        var ci = 0
-        while (ci < nc) {
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              val sx = math.min(bx * 8 + x, w - 1)
-              val sy = math.min(by * 8 + y, h - 1)
-              val p = (sy * w + sx) * 3
-              val r = img.pixels(p) & 0xff
-              val g = img.pixels(p + 1) & 0xff
-              val b = img.pixels(p + 2) & 0xff
-              val v = ci match {
-                case 0 => 0.299 * r + 0.587 * g + 0.114 * b
-                case 1 => -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-                case _ => 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-              }
-              block(y * 8 + x) = v - 128.0
-              x += 1
-            }
-            y += 1
-          }
-          fdct(block, tmp, freq)
-          val qt = if (ci == 0) qY else qC
-          val off = (by * bw0 + bx) * 64
-          var k = 0
-          while (k < 64) {
-            coefs(ci)(off + k) =
-              math.round(freq(Zigzag(k)) / qt(Zigzag(k))).toInt
-            k += 1
-          }
-          ci += 1
-        }
-        bx += 1
-      }
-      by += 1
+      grayscale: Boolean = false): Array[Byte] = {
+    val bi = if (!grayscale) ImageIoCodec.toBuffered(img) else {
+      val g = new BufferedImage(img.width, img.height, BufferedImage.TYPE_BYTE_GRAY)
+      g.getRaster.setSamples(0, 0, img.width, img.height, 0,
+        img.pixels.grouped(3).map(p => math.round(0.299 * (p(0) & 0xff) +
+          0.587 * (p(1) & 0xff) + 0.114 * (p(2) & 0xff)).toInt).toArray)
+      g
     }
-
-    // ---- stage 2: headers ----
-    val out = new ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xff); out.write(marker) }
-    def seg(marker: Int, bodyArr: Array[Int]): Unit = {
-      m(marker)
-      val len = bodyArr.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
-      bodyArr.foreach(out.write)
-    }
-    m(0xd8)
-    seg(0xdb, 0 +: Zigzag.map(qY(_)))
-    if (nc == 3) seg(0xdb, 1 +: Zigzag.map(qC(_)))
-    seg(0xc2, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, nc) ++
-      (0 until nc).flatMap(i => Seq(i + 1, 0x11, if (i == 0) 0 else 1)))
-    val dcBits = flatHuff(12); val dcVals = (0 to 11).toArray
-    val acBits = flatHuff(256); val acVals = (0 to 255).toArray
-    seg(0xc4, 0x00 +: (dcBits ++ dcVals))
-    seg(0xc4, 0x10 +: (acBits ++ acVals))
-    val dcT = new Huff(dcBits, dcVals)
-    val acT = new Huff(acBits, acVals)
-    if (restartInterval > 0)
-      seg(0xdd, Array(restartInterval >> 8, restartInterval & 0xff))
-
-    // ---- stage 3: one entropy-coded segment per script scan ----
-    def scan(compIdx: Array[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      var rstIdx = 0 // RSTn numbering restarts at RST0 each scan (E.1.4)
-      seg(0xda, compIdx.length +:
-        (compIdx.flatMap(ci => Array(ci + 1, 0x00)) ++
-          Array(ss, se, (ah << 4) | al)))
-      val bw = new BitWriter(out)
-      var eobrunE = 0
-      // correction bits riding with a pending EOBn (cross-block buffer)
-      val pendBits = new scala.collection.mutable.ArrayBuffer[Int]()
-      val dcPred = new Array[Int](compIdx.length)
-
-      def emitSym(t: Huff, sym: Int): Unit = {
-        val (c, l) = t.encTable(sym); bw.put(c, l)
-      }
-      def flushEob(): Unit = if (eobrunE > 0) {
-        var r = 0
-        var t2 = eobrunE
-        while ({ t2 >>= 1; t2 != 0 }) r += 1
-        emitSym(acT, r << 4)
-        if (r > 0) bw.put(eobrunE & ((1 << r) - 1), r)
-        eobrunE = 0
-        pendBits.foreach(b => bw.put(b, 1)); pendBits.clear()
-      }
-
-      def encBlock(si: Int, ci: Int, off: Int): Unit = {
-        if (ss == 0) {
-          if (ah == 0) { // DC first: arithmetic point transform (G.1.2.1)
-            val v = coefs(ci)(off) >> al
-            val diff = v - dcPred(si)
-            dcPred(si) = v
-            val s = category(diff)
-            emitSym(dcT, s)
-            if (s > 0)
-              bw.put(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-          } else { // DC refinement: one raw bit per block
-            bw.put((coefs(ci)(off) >> al) & 1, 1)
-          }
-        } else if (ah == 0) { // AC first: magnitude point transform
-          var r = 0
-          var k = ss
-          while (k <= se) {
-            val v = coefs(ci)(off + k)
-            val mag = (if (v < 0) -v else v) >> al
-            if (mag == 0) r += 1
-            else {
-              flushEob()
-              while (r > 15) { emitSym(acT, 0xf0); r -= 16 }
-              val s = category(mag)
-              emitSym(acT, (r << 4) | s)
-              bw.put(if (v >= 0) mag else (1 << s) - 1 - mag, s)
-              r = 0
-            }
-            k += 1
-          }
-          if (r > 0) {
-            eobrunE += 1
-            if (eobrunE == 0x7fff) flushEob()
-          }
-        } else { // AC refinement — the jcphuff two-buffer shape
-          var eobIdx = ss - 1 // last newly-nonzero position in the band
-          var k = ss
-          while (k <= se) {
-            var t2 = coefs(ci)(off + k); if (t2 < 0) t2 = -t2
-            if ((t2 >> al) == 1) eobIdx = k
-            k += 1
-          }
-          var r = 0
-          // correction bits local to this block, flushed after symbols
-          val blockPend = new scala.collection.mutable.ArrayBuffer[Int]()
-          k = ss
-          while (k <= se) {
-            val v = coefs(ci)(off + k)
-            val mag = (if (v < 0) -v else v) >> al
-            if (mag == 0) r += 1
-            else {
-              while (r > 15 && k <= eobIdx) {
-                flushEob()
-                emitSym(acT, 0xf0)
-                r -= 16
-                blockPend.foreach(b => bw.put(b, 1)); blockPend.clear()
-              }
-              if (mag > 1) blockPend += (mag & 1)
-              else {
-                flushEob()
-                emitSym(acT, (r << 4) | 1)
-                bw.put(if (v >= 0) 1 else 0, 1)
-                blockPend.foreach(b => bw.put(b, 1)); blockPend.clear()
-                r = 0
-              }
-            }
-            k += 1
-          }
-          if (r > 0 || blockPend.nonEmpty) {
-            eobrunE += 1
-            pendBits ++= blockPend
-            if (eobrunE == 0x7fff || pendBits.length > 900) flushEob()
-          }
-        }
-      }
-
-      def maybeRestart(unitIdx: Int): Unit =
-        if (restartInterval > 0 && unitIdx > 0 &&
-            unitIdx % restartInterval == 0) {
-          flushEob()
-          bw.flushAlign()
-          m(0xd0 + (rstIdx & 7))
-          rstIdx += 1
-          java.util.Arrays.fill(dcPred, 0)
-        }
-
-      if (compIdx.length == 1) { // non-interleaved: block grid row-major
-        val ci = compIdx(0)
-        var blk = 0
-        var by2 = 0
-        while (by2 < bh0) {
-          var bx2 = 0
-          while (bx2 < bw0) {
-            maybeRestart(blk)
-            encBlock(0, ci, (by2 * bw0 + bx2) * 64)
-            blk += 1; bx2 += 1
-          }
-          by2 += 1
-        }
-      } else { // interleaved DC scan: MCU = one block per component
-        var mcu = 0
-        var by2 = 0
-        while (by2 < bh0) {
-          var bx2 = 0
-          while (bx2 < bw0) {
-            maybeRestart(mcu)
-            var si = 0
-            while (si < compIdx.length) {
-              encBlock(si, compIdx(si), (by2 * bw0 + bx2) * 64)
-              si += 1
-            }
-            mcu += 1; bx2 += 1
-          }
-          by2 += 1
-        }
-      }
-      flushEob()
-      bw.flushAlign()
-    }
-
-    scan((0 until nc).toArray, 0, 0, 0, 1)
-    scan(Array(0), 1, 5, 0, 1)
-    scan(Array(0), 6, 63, 0, 1)
-    var c2 = 1
-    while (c2 < nc) { scan(Array(c2), 1, 63, 0, 1); c2 += 1 }
-    c2 = 0
-    while (c2 < nc) { scan(Array(c2), 1, 63, 1, 0); c2 += 1 }
-    scan((0 until nc).toArray, 0, 0, 1, 0)
-    m(0xd9)
-    out.toByteArray
+    write(bi, quality, progressive = true)
   }
 
-  /** 2-D 8×8 forward DCT: F = M·f·Mᵀ via two 1-D passes (doubles). */
-  private def fdct(f: Array[Double], tmp: Array[Double], out: Array[Double]): Unit = {
-    // M·f: tmp(u, y) = Σ_x M(u,x)·f(x, y)
-    var u = 0
-    while (u < 8) {
-      var y = 0
-      while (y < 8) {
-        var s = 0.0
-        var x = 0
-        while (x < 8) { s += Basis(u * 8 + x) * f(x * 8 + y); x += 1 }
-        tmp(u * 8 + y) = s
-        y += 1
+  private def write(bi: BufferedImage, quality: Int, progressive: Boolean)
+      : Array[Byte] =
+    ImageIoCodec.write(bi, "jpeg") { (writer, param) =>
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(math.max(1, math.min(100, quality)) / 100f)
+      if (progressive) param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+      // 4:4:4: the writer's default 4:2:0 blurs structured rasters
+      // past JpegSpec's mean-error bound
+      val meta = writer.getDefaultImageMetadata(
+        ImageTypeSpecifier.createFromRenderedImage(bi), param)
+      val tree = meta.getAsTree(NativeFormat).asInstanceOf[IIOMetadataNode]
+      val specs = tree.getElementsByTagName("componentSpec")
+      for (i <- 0 until specs.getLength) {
+        val c = specs.item(i).asInstanceOf[IIOMetadataNode]
+        c.setAttribute("HsamplingFactor", "1")
+        c.setAttribute("VsamplingFactor", "1")
       }
-      u += 1
+      meta.setFromTree(NativeFormat, tree)
+      meta
     }
-    // (M·f)·Mᵀ: out(u, v) = Σ_y tmp(u, y)·M(v, y)
-    u = 0
-    while (u < 8) {
-      var v = 0
-      while (v < 8) {
-        var s = 0.0
-        var y = 0
-        while (y < 8) { s += tmp(u * 8 + y) * Basis(v * 8 + y); y += 1 }
-        out(u * 8 + v) = s
-        v += 1
-      }
-      u += 1
-    }
-  }
 }

@@ -6,18 +6,19 @@ import org.apache.spark.sql.functions._
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata (north-star extension surface).
   *
-  * The decode step is REAL for PPM/P6, PNG and GIF ([[Ppm]], [[Png]],
-  * [[Gif]] — LZW + frame-1 composition) and
-  * JPEG images ([[Jpeg]] — baseline, extended-sequential AND
-  * progressive SOF2, pure-JVM Huffman + dequant + IDCT), RIFF/WAVE
-  * PCM-16 audio ([[Wav]]) and uncompressed RIFF/AVI BI_RGB video
-  * ([[Avi]]) — complete pure-JVM codecs, so header parse →
-  * luma/RMS/frame features → thumbnail/downsample/frame-sample run
-  * genuinely on executors — and STUBBED only for formats whose codecs
-  * genuinely require external libraries (MP3/H.264 — none exist in
-  * this environment) with a deterministic byte-math fake, clearly
-  * marked below. Everything around either path is the real Spark
-  * shape:
+  * The decode step is REAL for PNG, JPEG (baseline, extended-sequential
+  * and progressive SOF2) and GIF images ([[Png]], [[Jpeg]], [[Gif]] —
+  * the JDK's `javax.imageio` codecs behind one guarded helper, GIF
+  * composited onto its logical screen) and RIFF/WAVE PCM-16 audio
+  * ([[Wav]] — the JDK's `javax.sound.sampled`), plus the two formats
+  * the JDK has no codec for, P6 images and uncompressed RIFF/AVI
+  * BI_RGB video ([[Ppm]], [[Avi]] — plain Scala). Header parse →
+  * luma/RMS/frame features → thumbnail/downsample/frame-sample thus
+  * run genuinely on executors with no dependency beyond the JDK. It is
+  * STUBBED only for formats whose codecs genuinely require external
+  * libraries (MP3/H.264 — none exist in this environment) with a
+  * deterministic byte-math fake, clearly marked below. Everything
+  * around either path is the real Spark shape:
   *  - a fixed media schema (content bytes + mime + dimensions);
   *  - per-partition batch processing via `Dataset.mapPartitions` (the
   *    Scala analogue of a batched pandas UDF: one task consumes a whole
@@ -111,18 +112,14 @@ object MultiModal {
     * `thumb`. Uncompressed RIFF/AVI payloads take the REAL video path:
     * decoded frames, mean Rec.709 luma ACROSS frames as `brightness`,
     * the true frame count as `n_frames`, and an every-2nd-frame
-    * temporal sample re-encoded as valid AVI in `thumb`. PNG payloads
-    * (8-bit gray/RGB/RGBA, non-interlaced) take the same image path
-    * through the pure-JVM [[Png]] codec — a genuinely COMPRESSED
-    * format decoded for real, thumb re-encoded as PNG. JPEG payloads
-    * (baseline, extended-sequential and progressive SOF2) take the
-    * image path through [[Jpeg]], thumb re-encoded as JPEG. GIF
-    * payloads (87a/89a, LZW, interlace, transparency, frame-1
-    * composition) take the image path through [[Gif]], thumb
-    * re-encoded as GIF. Anything all six decoders reject (remaining
-    * codec-requiring formats — MP3/H.264 — and malformed payloads)
-    * falls back to the documented stub — a bad payload must degrade,
-    * never fail the task.
+    * temporal sample re-encoded as valid AVI in `thumb`. PNG, JPEG
+    * (baseline, extended-sequential and progressive SOF2) and GIF
+    * payloads (frame 1 composited onto the logical screen) take the
+    * same image path through the JDK codecs behind [[Png]], [[Jpeg]]
+    * and [[Gif]], each thumb re-encoded in its own format. Anything
+    * all six decoders reject (remaining codec-requiring formats —
+    * MP3/H.264 — and malformed payloads) falls back to the documented
+    * stub — a bad payload must degrade, never fail the task.
     * CodecContractSpec asserts these claims against the dispatch
     * chain so the docs can't drift from the code again.
     */
@@ -141,17 +138,14 @@ object MultiModal {
             checksum(r.content), Ppm.meanLuma(img), 1, reEncode(thumb))
         }
         Ppm.decode(r.content).map(imageFeatures(_, Ppm.encode))
-          // PNG: the COMPRESSED image path (pure-JVM inflate)
+          // the compressed image formats, through the JDK codecs
           .orElse(Png.decode(r.content).map(imageFeatures(_, Png.encode)))
-          // JPEG: baseline, extended-sequential AND progressive (SOF2)
-          // DCT decoded for real (pure-JVM Huffman + dequant + IDCT +
-          // YCbCr→RGB) — the dominant real-world image format, web
-          // crawls included; thumbnail re-encoded as JPEG
+          // JPEG: baseline, extended-sequential AND progressive (SOF2),
+          // the dominant real-world image format, web crawls included
           .orElse(Jpeg.decode(r.content)
             .map(imageFeatures(_, Jpeg.encode(_))))
-          // GIF: LZW decoded for real (pure-JVM), frame-1 composition
-          // onto the logical screen; thumb re-encoded as GIF (exact
-          // palette — resize introduces no colors beyond the source's)
+          // GIF: frame 1 on the logical screen; thumb re-encoded with an
+          // exact palette (resize introduces no colors beyond the source's)
           .orElse(Gif.decode(r.content)
             .map(imageFeatures(_, Gif.encodeRgb)))
           .orElse(Wav.decode(r.content).map(clip =>
@@ -212,9 +206,8 @@ object MultiModal {
   }
 
   /** Deterministic synthetic JPEG fixtures from the documents table —
-    * [[packPpm]]'s raster function round-tripped through the real
-    * baseline encoder, so the payloads exercise the full T.81 decode
-    * path (Huffman → dequant → IDCT → color convert) on executors.
+    * [[packPpm]]'s raster function through the baseline encoder, so the
+    * payloads exercise the full JPEG decode path on executors.
     * Default 32×24: big enough for 12 MCUs, small enough to keep the
     * fixture corpus cheap.
     */

@@ -1,192 +1,18 @@
 package graft.ext
 
-import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
-
-/** Minimal PNG codec — pure JVM, no libraries: DEFLATE comes from
-  * `java.util.zip` (in the JDK), everything else is the public PNG
-  * spec (ISO/IEC 15948): chunk framing with CRC-32, IHDR/IDAT/IEND,
-  * scanline filters 0–4 (None/Sub/Up/Average/Paeth).
-  *
-  * This upgrades the multimodal tier from "real codecs for
-  * uncompressed formats only" (PPM/WAV/AVI) to a genuinely
-  * COMPRESSED image format decoded end-to-end on executors. Scope,
-  * stated: 8-bit samples, color types 0 (gray), 2 (RGB) and 6 (RGBA,
-  * alpha dropped), non-interlaced; palette/16-bit/interlaced return
-  * None and fall back to [[MultiModal]]'s documented stub path — a
-  * payload outside the supported profile must not fail the task.
-  *
-  * Decodes into [[Ppm.Image]] so the existing raster operators
-  * (meanLuma, nearest-neighbor resize) apply unchanged; [[encode]]
-  * writes color-type-2 / filter-0 rows, so encode→decode is an exact
-  * raster round trip (PngSpec pins it, plus per-filter fixtures
-  * against the spec's reference arithmetic).
+/** PNG through the JDK's `javax.imageio` codec, via [[ImageIoCodec]]:
+  * every colour type, bit depth and interlace the JDK reads decodes to
+  * an RGB [[Ppm.Image]] (gray expanded, alpha dropped), so the raster
+  * operators (meanLuma, resize, [[ImageHash]]'s dHash) apply
+  * unchanged; a malformed or truncated payload returns None and falls
+  * back to [[MultiModal]]'s documented stub path. [[encode]] writes
+  * 8-bit RGB, so encode→decode is an exact raster round trip.
   */
 object Png {
 
-  private val Magic: Array[Byte] =
-    Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte)
+  def decode(bytes: Array[Byte]): Option[Ppm.Image] =
+    ImageIoCodec.read(bytes, "png")(r => Some(ImageIoCodec.toImage(r.read(0))))
 
-  private def be32(b: Array[Byte], p: Int): Int =
-    ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) |
-      ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
-
-  /** Paeth predictor, straight from the spec (all args unsigned). */
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b)
-    val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  /** Parse a PNG payload into an RGB raster; None for anything outside
-    * the supported profile or malformed (callers stub-fallback).
-    */
-  def decode(bytes: Array[Byte]): Option[Ppm.Image] = {
-    if (bytes.length < 8 + 25 || !bytes.take(8).sameElements(Magic))
-      return None
-    var pos = 8
-    var w = 0; var h = 0; var colorType = -1
-    var seenIhdr = false
-    val idat = new ByteArrayOutputStream()
-    while (pos + 8 <= bytes.length) {
-      val len = be32(bytes, pos)
-      if (len < 0 || pos + 12 + len > bytes.length) return None
-      val typ = new String(bytes, pos + 4, 4, "US-ASCII")
-      typ match {
-        case "IHDR" =>
-          if (len != 13) return None
-          w = be32(bytes, pos + 8); h = be32(bytes, pos + 12)
-          val bitDepth = bytes(pos + 16) & 0xff
-          colorType = bytes(pos + 17) & 0xff
-          val interlace = bytes(pos + 20) & 0xff
-          if (w <= 0 || h <= 0 || bitDepth != 8 || interlace != 0 ||
-              !Set(0, 2, 6).contains(colorType)) return None
-          // cap the decoded raster the same way a real ingest would
-          // guard a decompression bomb: w·h·4 must stay a sane Int
-          if (w.toLong * h * 4 > Int.MaxValue / 2) return None
-          seenIhdr = true
-        case "IDAT" => idat.write(bytes, pos + 8, len)
-        case "IEND" => pos = bytes.length // stop scanning
-        case _ => () // ancillary chunks skipped
-      }
-      pos += 12 + len
-    }
-    if (!seenIhdr || idat.size() == 0) return None
-
-    val bpp = colorType match { case 0 => 1; case 2 => 3; case _ => 4 }
-    val rowBytes = w * bpp
-    val raw = new Array[Byte](h * (1 + rowBytes))
-    val inf = new Inflater()
-    inf.setInput(idat.toByteArray)
-    var off = 0
-    try {
-      while (!inf.finished() && off < raw.length) {
-        val n = inf.inflate(raw, off, raw.length - off)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        off += n
-      }
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inf.end()
-    if (off != raw.length) return None
-
-    // unfilter in place, row by row (prev = reconstructed row above)
-    val img = new Array[Byte](h * rowBytes)
-    var r = 0
-    while (r < h) {
-      val f = raw(r * (1 + rowBytes)) & 0xff
-      if (f > 4) return None
-      val src = r * (1 + rowBytes) + 1
-      val dst = r * rowBytes
-      var i = 0
-      while (i < rowBytes) {
-        val x = raw(src + i) & 0xff
-        val a = if (i >= bpp) img(dst + i - bpp) & 0xff else 0
-        val b = if (r > 0) img(dst - rowBytes + i) & 0xff else 0
-        val c = if (r > 0 && i >= bpp) img(dst - rowBytes + i - bpp) & 0xff
-                else 0
-        val v = f match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + b
-          case 3 => x + ((a + b) >> 1)
-          case _ => x + paeth(a, b, c)
-        }
-        img(dst + i) = (v & 0xff).toByte
-        i += 1
-      }
-      r += 1
-    }
-
-    // normalize to the RGB raster the raster operators expect
-    val rgb = colorType match {
-      case 2 => img
-      case 0 =>
-        val out = new Array[Byte](w * h * 3)
-        var i = 0
-        while (i < w * h) {
-          out(3 * i) = img(i); out(3 * i + 1) = img(i)
-          out(3 * i + 2) = img(i); i += 1
-        }
-        out
-      case _ => // 6: RGBA, alpha dropped
-        val out = new Array[Byte](w * h * 3)
-        var i = 0
-        while (i < w * h) {
-          out(3 * i) = img(4 * i); out(3 * i + 1) = img(4 * i + 1)
-          out(3 * i + 2) = img(4 * i + 2); i += 1
-        }
-        out
-    }
-    Some(Ppm.Image(w, h, rgb))
-  }
-
-  private def chunk(out: ByteArrayOutputStream, typ: String,
-      data: Array[Byte]): Unit = {
-    def w32(v: Int): Unit = {
-      out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-    }
-    w32(data.length)
-    val t = typ.getBytes("US-ASCII")
-    out.write(t, 0, 4); out.write(data, 0, data.length)
-    val crc = new CRC32()
-    crc.update(t); crc.update(data)
-    w32(crc.getValue.toInt)
-  }
-
-  /** Write an RGB raster as color-type-2 / bit-depth-8 / filter-0
-    * rows in one IDAT; decode(encode(img)) == img exactly.
-    */
-  def encode(img: Ppm.Image): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    out.write(Magic, 0, Magic.length)
-    val ihdr = new Array[Byte](13)
-    def put32(p: Int, v: Int): Unit = {
-      ihdr(p) = ((v >>> 24) & 0xff).toByte
-      ihdr(p + 1) = ((v >>> 16) & 0xff).toByte
-      ihdr(p + 2) = ((v >>> 8) & 0xff).toByte
-      ihdr(p + 3) = (v & 0xff).toByte
-    }
-    put32(0, img.width); put32(4, img.height)
-    ihdr(8) = 8; ihdr(9) = 2 // bit depth 8, color type RGB
-    chunk(out, "IHDR", ihdr)
-    val rowBytes = img.width * 3
-    val raw = new Array[Byte](img.height * (1 + rowBytes))
-    var r = 0
-    while (r < img.height) { // filter byte 0 + literal row
-      System.arraycopy(img.pixels, r * rowBytes,
-        raw, r * (1 + rowBytes) + 1, rowBytes)
-      r += 1
-    }
-    val defl = new Deflater()
-    defl.setInput(raw); defl.finish()
-    val buf = new Array[Byte](65536)
-    val z = new ByteArrayOutputStream()
-    while (!defl.finished()) z.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    chunk(out, "IDAT", z.toByteArray)
-    chunk(out, "IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
+  def encode(img: Ppm.Image): Array[Byte] =
+    ImageIoCodec.write(ImageIoCodec.toBuffered(img), "png")((_, _) => null)
 }

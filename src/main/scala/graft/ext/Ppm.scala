@@ -2,14 +2,11 @@ package graft.ext
 
 /** Minimal PPM (P6, binary RGB) codec — pure JVM, no libraries.
   *
-  * This is the REAL decode path of the multimodal tier (X13): P6 is an
-  * uncompressed format, so a complete, correct decoder fits in plain
-  * Scala and runs on executors with zero native dependencies. Formats
-  * that need codec libraries (JPEG/PNG/audio/video) still go through
-  * [[MultiModal]]'s documented stub fallback — but the dataflow now
-  * carries at least one genuinely decoded format end-to-end: header
-  * parse → pixel access → luma stats → nearest-neighbor resize →
-  * re-encode (PpmSpec).
+  * The JDK ships no P6 codec, and P6 is an uncompressed format, so a
+  * complete, correct decoder fits in plain Scala and runs on executors
+  * with zero native dependencies: header parse → pixel access → luma
+  * stats → nearest-neighbor resize → re-encode (PpmSpec). [[Image]] is
+  * also the raster every other [[MultiModal]] codec decodes into.
   *
   * Format (netpbm spec): `P6 <whitespace> width <ws> height <ws>
   * maxval <single ws> raw RGB bytes`, `#` comments allowed in the

@@ -1,19 +1,14 @@
 package graft.ext
 
-/** Minimal RIFF/WAVE PCM-16 codec — complete and pure JVM, so the
-  * audio modality's decode → feature-extract → resample pipeline runs
-  * genuinely on executors (the same upgrade [[Ppm]] gave images;
-  * after this, and [[Jpeg]] covering images, only MP3/H.264 remain
-  * stubs, and those genuinely cannot exist in a zero-dependency
-  * environment).
-  *
-  * Scope: canonical little-endian RIFF with a 16-byte PCM `fmt `
-  * chunk and 16-bit signed samples, any sample rate / channel count.
-  * The chunk walker skips unknown chunks (LIST/INFO etc., with the
-  * RIFF even-byte pad), so real-world files with metadata decode too.
-  * Anything else (float WAV, 8/24-bit, A-law, truncated data) returns
-  * None — a malformed payload must degrade to the opaque path, never
-  * fail the task.
+import java.io.ByteArrayInputStream
+import javax.sound.sampled.{AudioFormat, AudioSystem}
+
+/** RIFF/WAVE PCM-16 audio. [[decode]] reads through the JDK's
+  * `javax.sound.sampled.AudioSystem`, which skips unknown chunks
+  * (LIST/INFO etc.), and accepts only signed 16-bit little-endian PCM
+  * with a complete data chunk, any rate or channel count; anything else
+  * (float, 8/24-bit, A-law, truncated data) returns None and degrades
+  * to the opaque path. [[encode]] writes the canonical 44-byte header.
   */
 object Wav {
 
@@ -48,52 +43,27 @@ object Wav {
   /** Parse a RIFF/WAVE payload; None unless it is well-formed PCM-16
     * with a complete data chunk.
     */
-  def decode(bytes: Array[Byte]): Option[Audio] = {
-    if (bytes.length < 44) return None
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def tag(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    if (tag() != "RIFF") return None
-    buf.getInt // declared RIFF size; tolerated if wrong, chunks decide
-    if (tag() != "WAVE") return None
-
-    var fmt: Option[(Int, Int)] = None // (sampleRate, channels)
-    var data: Option[Array[Short]] = None
-    while (buf.remaining() >= 8 && (fmt.isEmpty || data.isEmpty)) {
-      val id = tag()
-      val len = buf.getInt
-      if (len < 0 || len > buf.remaining()) return None
-      id match {
-        case "fmt " =>
-          if (len < 16) return None
-          val start = buf.position()
-          val audioFormat = buf.getShort
-          val channels = buf.getShort.toInt
-          val rate = buf.getInt
-          buf.getInt   // byte rate
-          buf.getShort // block align
-          val bits = buf.getShort
-          if (audioFormat != 1 || bits != 16 || channels <= 0 || rate <= 0)
-            return None
-          fmt = Some((rate, channels))
-          buf.position(start + len + (len & 1))
-        case "data" =>
-          if (len % 2 != 0) return None
-          val n = len / 2
-          val samples = new Array[Short](n)
-          var i = 0
-          while (i < n) { samples(i) = buf.getShort; i += 1 }
-          data = Some(samples)
-          if ((len & 1) == 1 && buf.remaining() > 0) buf.get
-        case _ =>
-          buf.position(buf.position() + len + (len & 1))
-      }
-    }
-    for ((rate, ch) <- fmt; s <- data if s.length % ch == 0)
-      yield Audio(rate, ch, s)
-  }
+  def decode(bytes: Array[Byte]): Option[Audio] =
+    // RIFF/WAVE magic first: AudioSystem would also try its other
+    // readers on the bytes, MIDI synthesis among them
+    if (!new String(bytes.take(12), "ISO-8859-1").matches("(?s)RIFF.{4}WAVE")) None
+    else try {
+      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+      try {
+        val f = in.getFormat
+        // AudioSystem accepts a float tag as PCM_FLOAT, and hands back a
+        // short data chunk without an error: check both here
+        val data = in.readAllBytes()
+        if (f.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
+            f.getSampleSizeInBits != 16 || f.isBigEndian ||
+            data.length.toLong != in.getFrameLength * f.getFrameSize) None
+        else {
+          val s = java.nio.ByteBuffer.wrap(data)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN).asShortBuffer()
+          Some(Audio(f.getSampleRate.toInt, f.getChannels, Array.fill(s.remaining)(s.get)))
+        }
+      } finally in.close()
+    } catch { case _: Exception => None }
 
   /** Clip length in microseconds (exact integer arithmetic). */
   def durationMicros(a: Audio): Long =
@@ -121,17 +91,9 @@ object Wav {
     */
   def downsample(a: Audio, factor: Int): Audio = {
     require(factor > 0)
-    val outFrames = (a.frames + factor - 1) / factor
-    val out = new Array[Short](outFrames * a.channels)
-    var f = 0
-    while (f < outFrames) {
-      var c = 0
-      while (c < a.channels) {
-        out(f * a.channels + c) = a.samples(f * factor * a.channels + c)
-        c += 1
-      }
-      f += 1
-    }
-    Audio(math.max(1, a.sampleRate / factor), a.channels, out)
+    val ch = a.channels
+    val out = Array.tabulate((a.frames + factor - 1) / factor * ch)(i =>
+      a.samples((i / ch) * factor * ch + i % ch))
+    Audio(math.max(1, a.sampleRate / factor), ch, out)
   }
 }

@@ -47,6 +47,21 @@ class CodecContractSpec extends AnyFunSuite {
     assert(claim.contains("MP3") && claim.contains("H.264"))
   }
 
+  test("every image decode goes through the guarded ImageIoCodec helper") {
+    // ImageIO.read skips the per-format reader and the bomb guard;
+    // createImageInputStream caches to temp files by default
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = sources(new java.io.File("src/main"))
+    assert(files.exists(_.getName == "ImageIoCodec.scala"))
+    for (f <- files; banned <- Seq("ImageIO.read(", "ImageIO.createImageInputStream")) {
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try s.mkString finally s.close()
+      assert(!text.contains(banned), s"$banned in ${f.getPath}")
+    }
+  }
+
   test("progressive JPEG payloads take the real image path in featurize") {
     import spark.implicits._
     val w = 24; val h = 16

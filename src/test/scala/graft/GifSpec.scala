@@ -135,6 +135,18 @@ class GifSpec extends AnyFunSuite {
     val noGct = wire2x1.clone()
     noGct(10) = 0x00
     assert(Gif.decode(noGct).isEmpty)
+    // decompression bombs over the 2×1 fixture's tiny body: the logical
+    // screen or the frame re-declared far past the bomb guard, refused
+    // before any raster is allocated (20000×20000 is inside the band
+    // where only the guard refuses)
+    for ((w, h) <- Seq((60000, 60000), (20000, 20000)); at <- Seq(6, 24)) {
+      val bomb = wire2x1.clone() // screen at 6, frame size at 24 (LE)
+      java.nio.ByteBuffer.wrap(bomb).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putShort(at, w.toShort).putShort(at + 2, h.toShort)
+      val (got, allocated) = Allocated.by(Gif.decode(bomb))
+      assert(got.isEmpty, s"${w}x$h at $at")
+      assert(allocated < Allocated.BombBudget, s"${w}x$h at $at allocated $allocated")
+    }
   }
 
   test("encodeRgb: exact palette ≤256 colors; >256 falls to luma gray") {

@@ -164,6 +164,18 @@ class PngSpec extends AnyFunSuite {
     // PPM payloads are not PNGs and vice versa (chain dispatch safety)
     assert(Png.decode(Ppm.encode(img)).isEmpty)
     assert(Ppm.decode(Png.encode(img)).isEmpty)
+    // decompression bombs: IHDR re-declared far past the bomb guard
+    // over the same tiny IDAT, refused before any raster is allocated
+    // (20000×20000 is inside the band where only the guard refuses)
+    for ((w, h) <- Seq((60000, 60000), (20000, 20000))) {
+      val bomb = good.clone()
+      val bb = java.nio.ByteBuffer.wrap(bomb).putInt(16, w).putInt(20, h)
+      val crc = new CRC32(); crc.update(bomb, 12, 17) // IHDR type + data
+      bb.putInt(29, crc.getValue.toInt)
+      val (got, allocated) = Allocated.by(Png.decode(bomb))
+      assert(got.isEmpty, s"${w}x$h")
+      assert(allocated < Allocated.BombBudget, s"${w}x$h allocated $allocated")
+    }
   }
 
   test("MultiModal featurize takes the real PNG path") {

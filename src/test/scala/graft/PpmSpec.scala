@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{MultiModal, Ppm}
+import graft.ext.{Gif, ImageHash, Jpeg, MultiModal, Png, Ppm, Wav}
 
 /** The real multimodal decode path (X13): a complete pure-JVM P6
   * codec — header parse, pixel luma, nearest-neighbor thumbnail,
@@ -99,5 +99,35 @@ class PpmSpec extends AnyFunSuite {
     val stubbed = MultiModal.featurize(opaque).collect()
     assert(stubbed.length === 1)
     assert(stubbed(0).byte_len === "just text".length.toLong)
+  }
+
+  test("mixed JPEG/PNG/GIF/WAV decode on 8 concurrent partitions == 1 partition") {
+    // the JDK codecs (ImageIO readers, native libjpeg, AudioSystem) on
+    // concurrent executor threads must give the single-threaded answer
+    val media = (0 until 32).map { i =>
+      val w = 12 + i % 5; val h = 9 + i % 3
+      val img = Ppm.Image(w, h, Array.tabulate(w * h * 3)(p =>
+        ((p * 7 + i * 31 + p / (3 * w) * 13) % 256).toByte))
+      val (mime, bytes) = i % 4 match {
+        case 0 => ("image/jpeg", if (i % 8 == 0) Jpeg.encode(img, 85)
+          else Jpeg.encodeProgressive(img, 85))
+        case 1 => ("image/png", Png.encode(img))
+        case 2 => ("image/gif", Gif.encodeRgb(img))
+        case _ => ("audio/wav", Wav.encode(Wav.Audio(8000, 1,
+          Array.tabulate(64)(s => ((s * 977 + i * 131) % 65536 - 32768).toShort))))
+      }
+      MultiModal.MediaRecord(i.toLong, mime, w, h, bytes)
+    }.toDS()
+    def features(parts: Int) = MultiModal.featurize(media.repartition(parts))
+      .collect().sortBy(_.doc_id).map(f => (f.doc_id, f.byte_len, f.checksum,
+        f.brightness, f.n_frames, f.thumb.toSeq)).toSeq
+    def hashes(parts: Int) = ImageHash.hashes(media.repartition(parts))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
+    val one = features(1)
+    assert(one.count(_._5 == 1) === 32) // every payload took a real path
+    assert(features(8) === one)
+    val oneHashes = hashes(1)
+    assert(oneHashes.length === 24) // the 24 images, not the 8 clips
+    assert(hashes(8) === oneHashes)
   }
 }

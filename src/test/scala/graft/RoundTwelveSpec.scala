@@ -201,6 +201,20 @@ class RoundTwelveSpec extends AnyFunSuite {
     assert(enc2 === Seq(Seq("p_q")))
   }
 
+  test("unpersistCheckpoint frees a localCheckpoint; Dataset.unpersist does not") {
+    // trainFast's failure path frees an orphaned round frame this way
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    // ids only: the context cleaner may drop older RDDs meanwhile
+    def added = sc.getPersistentRDDs.keySet -- baseline
+    val ck = (1 to 100).toDF("v").localCheckpoint()
+    assert(added.size === 1)
+    ck.unpersist() // the cache manager never saw this RDD
+    assert(added.size === 1)
+    BpeMerge.unpersistCheckpoint(ck)
+    assert(added.isEmpty)
+  }
+
   test("native ArrayIntersectSize == size(array_intersect) bit for bit") {
     import graft.ext.{Dedup, Text}
     // real shingle arrays, every cross pair of 60 docs
