@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry point (driver contract): runs every registered query
   * on `SPARK_GRAFT_SF_DIR` and emits ONE machine-readable JSON line.
   *
@@ -70,21 +68,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split multi-row-group files into ~4 MB input partitions: the
-      // driver layout is one parquet FILE per table, and a 100 MB
-      // single file would otherwise scan on one core (production data
-      // arrives as many files; MakeSf writes 4 MB row groups so sf1
-      // scans parallelize the way a real table's file count would)
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Deploy-recipe sizing (round-14): shuffle parallelism ∝ data, not
     // the builder constant — at sf0.1/sf1 this resolves to the 32-core
     // floor (identical to the historical constant, so bench numbers

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Text
@@ -11,10 +11,11 @@ import graft.ext.Text
   * the DuckDB oracle can run at ~sf1 on the 128 GiB sandbox —
   * `runMain graft.MakeSf <srcDir> <outDir> <k>`.
   *
-  * Scaling discipline (the ScaleProbe generator's, extended to the
-  * whole star schema): copy c of each table shifts every key by
-  * c·10⁷, consistently on BOTH sides of each FK (o_custkey moves with
-  * c_custkey, l_orderkey/l_partkey/l_suppkey with their dimensions),
+  * Scaling discipline (the id-shifted copies behind the scaling-curve
+  * receipts in SURVEY.md §6, extended to the whole star schema): copy
+  * c of each table shifts every key by c·10⁷, consistently on BOTH
+  * sides of each FK (o_custkey moves with c_custkey,
+  * l_orderkey/l_partkey/l_suppkey with their dimensions),
   * so referential integrity and per-key fan-outs are preserved
   * exactly — joins at k× do k× the work, never k² and never zero.
   * `region`/`nation` stay fixed (TPC-H keeps them constant across
@@ -93,23 +94,18 @@ object MakeSf {
     // transparently, and DuckDB's read_parquet takes a glob if an
     // oracle pass is ever wanted at that scale.
     val singleFile = k <= 16 || flags.get("single").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // 4 MB parquet row groups (default 128 MB would pack sf1's whole
-      // 113 MB lineitem into ONE row group): a single-row-group file is
-      // unsplittable no matter what maxPartitionBytes says, so every
-      // scan — and everything pipelined on top of it — runs on one
-      // core. Production tables arrive as many files; many row groups
-      // in the one driver-layout file reproduces that parallelism
-      // locally (round-10 sf1 postmortem: q25 spent 50 s isolated on a
-      // 1-core 28.7M-row fan-out join for exactly this reason).
-      .config("spark.hadoop.parquet.block.size",
-        flags.getOrElse("rowgroup", (4 * 1024 * 1024).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 4 MB parquet row groups (default 128 MB would pack sf1's whole
+    // 113 MB lineitem into ONE row group): a single-row-group file is
+    // unsplittable no matter what maxPartitionBytes says, so every
+    // scan — and everything pipelined on top of it — runs on one
+    // core. Production tables arrive as many files; many row groups
+    // in the one driver-layout file reproduces that parallelism
+    // locally (round-10 sf1 postmortem: q25 spent 50 s isolated on a
+    // 1-core 28.7M-row fan-out join for exactly this reason).
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.sparkContext.hadoopConfiguration.set("parquet.block.size",
+      flags.getOrElse("rowgroup", (4 * 1024 * 1024).toString))
 
     def copies(name: String)(f: (DataFrame, Int) => DataFrame): DataFrame = {
       val base = Tables(spark, src, name)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: one summary line per registered query — exchange
   * count, join strategies, aggregate kinds, cartesian/sort-agg warnings —
   * so a scale smell (unbroadcast dim, SortAggregate, accidental
@@ -137,17 +135,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // split multi-row-group files into ~4 MB input partitions: the
-      // driver layout is one parquet FILE per table, and a 100 MB
-      // single file would otherwise scan on one core (production data
-      // arrives as many files; MakeSf writes 4 MB row groups so sf1
-      // scans parallelize the way a real table's file count would)
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement tool: write `.explain("formatted")`
   * for registered queries to files (`plans/<tag>/<query>_<suffix>.txt`)
   * so plan claims in OPTIMIZATION_r*.md are checkable against committed
@@ -21,16 +19,8 @@ object PlanDump {
       if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     graft.ops.Sizing.configure(spark, Seq(sfDir))
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

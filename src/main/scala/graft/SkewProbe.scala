@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,25 +19,19 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 8000000L
     val hotPct = if (args.length > 1) args(1).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // PROBE-ONLY threshold scaling: at 100 TB a hot key's join
-      // partition dwarfs the default 256 MB skew threshold; a local
-      // probe corpus cannot. Scale the thresholds with the probe data
-      // (~160 MB hot partition vs 8 MB threshold ≈ a multi-GB key vs
-      // 256 MB in production) so the run exercises the SAME AQE
-      // skew-split path the production shape relies on. These configs
-      // are NOT set anywhere in the engine or bench.
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        (1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (512 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
+    // PROBE-ONLY threshold scaling: at 100 TB a hot key's join
+    // partition dwarfs the default 256 MB skew threshold; a local
+    // probe corpus cannot. Scale the thresholds with the probe data
+    // (~160 MB hot partition vs 8 MB threshold ≈ a multi-GB key vs
+    // 256 MB in production) so the run exercises the SAME AQE
+    // skew-split path the production shape relies on. These configs
+    // are NOT set anywhere in the engine or bench.
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+      (1024 * 1024).toString)
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      (512 * 1024).toString)
     val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
     val sumTask = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -54,7 +47,7 @@ object SkewProbe {
         when(pmod(col("id"), lit(100)) < hotPct, lit("HOT"))
           .otherwise(concat(lit("k"),
             pmod(col("id"), lit(100000)).cast("string"))).as("k"))
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(cpus).localCheckpoint()
 
     def run(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       // warm once, then measure

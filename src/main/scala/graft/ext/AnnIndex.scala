@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
   * constants; specs re-call them at other settings to prove the
   * tuning knobs work on the SAME physical plan.
   *
-  * Sizing rule at scale (the x58 adjudication, measured flat in
-  * ScaleProbe): grow the cell count `kc` (and `k` for the graph)
-  * PROPORTIONALLY to the corpus so the mean cell population stays
-  * constant — candidates per query are then O(cell × nProbe)
-  * regardless of corpus size, and the only growing cost is the
-  * O(n · kc) assignment scan, which is embarrassingly parallel.
+  * Sizing rule at scale (the x58 adjudication, measured flat in the
+  * SEMPQ/KNNG scaling curves, SURVEY.md §6): grow the cell count `kc`
+  * (and `k` for the graph) PROPORTIONALLY to the corpus so the mean
+  * cell population stays constant — candidates per query are then
+  * O(cell × nProbe) regardless of corpus size, and the only growing
+  * cost is the O(n · kc) assignment scan, which is embarrassingly parallel.
   * Recall tuning is `nProbe` (probe the p nearest coarse cells):
   * p× candidate rows on an unchanged plan — no refit, no reshuffle
   * of the codes table, because the probe side is the small one.

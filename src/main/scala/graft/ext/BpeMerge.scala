@@ -322,7 +322,6 @@ object BpeMerge {
   private[graft] def trainFastState(types0: DataFrame, rounds: Int,
       allowIdentical: Boolean = false)
       : (Seq[DataFrame], DataFrame, DataFrame) = {
-    val dbg = sys.env.contains("SPARK_GRAFT_BPEFAST_DEBUG")
     var types = types0.localCheckpoint()
     // the per-round union (untouched ++ rewritten) CONCATENATES its
     // legs' partitions — unchecked, the type table's partition count
@@ -334,7 +333,6 @@ object BpeMerge {
     var counts = pairCounts(types, allowIdentical).localCheckpoint()
     import types0.sparkSession.implicits._
     val rules = (1 to rounds).map { r =>
-      val tR = System.nanoTime()
       // Collect the round's winning pair ONCE and re-wrap it as a
       // 1-row (or 0-row, corpus exhausted) LOCAL relation. The lazy
       // TakeOrdered subtree used to re-execute as a separate Spark job
@@ -376,7 +374,6 @@ object BpeMerge {
         // subtree, but at vocabulary-table size that recompute is
         // cheaper than a third checkpoint to share it (the x56
         // scan-twice-materialize-never receipt).
-        val tC = System.nanoTime()
         val oldCounts = counts
         val countsF = scala.concurrent.Future {
           oldCounts.select(col("ab"), col("c").as("d"))
@@ -395,8 +392,6 @@ object BpeMerge {
         // blocks
         val cTry = scala.concurrent.Await.ready(
           countsF, scala.concurrent.duration.Duration.Inf).value.get
-        val dtC = (System.nanoTime() - tC) / 1e9
-        val tT = System.nanoTime()
         val tTry = scala.concurrent.Await.ready(
           typesF, scala.concurrent.duration.Duration.Inf).value.get
         (cTry, tTry) match {
@@ -406,15 +401,6 @@ object BpeMerge {
             cTry.foreach(unpersistCheckpoint); tTry.foreach(unpersistCheckpoint)
             throw cTry.failed.toOption.orElse(tTry.failed.toOption).get
         }
-        val dtT = (System.nanoTime() - tT) / 1e9
-        if (dbg) println(f"BPEFAST-DBG round=$r counts_ckpt=$dtC%6.2fs " +
-          f"types_ckpt=$dtT%6.2fs counts_n=${counts.count()}%8d " +
-          f"types_n=${types.count()}%6d " +
-          f"tparts=${types.rdd.getNumPartitions}")
-      }
-      if (dbg) {
-        val dtR = (System.nanoTime() - tR) / 1e9
-        println(f"BPEFAST-DBG round=$r dt=$dtR%6.2fs")
       }
       p
     }

@@ -31,8 +31,8 @@ import org.apache.spark.sql.SparkSession
   *
   * On a real cluster `inputBytes` comes from the catalog/table stats;
   * here it is the recursive on-disk size of the benched directories.
-  * Bench, RunOne and the scale probes all route through [[configure]],
-  * so the harness exercises the exact sizing a deployment would use.
+  * Bench, RunOne and PlanDump all route through [[configure]], so the
+  * harness exercises the exact sizing a deployment would use.
   */
 object Sizing {
 
@@ -77,11 +77,9 @@ object Sizing {
     * `initialPartitionNum` from the recursive size of `dirs`. Returns
     * the partition count chosen.
     */
-  def configure(spark: SparkSession, dirs: Seq[String],
-      targetBytes: Long = DefaultTargetBytes,
-      amplification: Double = DefaultAmplification): Int = {
+  def configure(spark: SparkSession, dirs: Seq[String]): Int = {
     val n = shufflePartitions(bytesUnder(spark, dirs),
-      spark.sparkContext.defaultParallelism, targetBytes, amplification)
+      spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n.toString)

@@ -80,4 +80,21 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(spark.sql("SELECT cosine_similarity(array(3.0D), array(2.0D))")
       .head().getDouble(0) === 1.0)
   }
+
+  test("every tool session is built by GraftSession, with the extensions") {
+    // source-text guard (the CodecContractSpec pattern): a main that
+    // builds its own session drifts from the shared recipe
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def text(f: java.io.File): String = {
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      try s.mkString finally s.close()
+    }
+    val builders = sources(new java.io.File("src/main"))
+      .filter(f => text(f).contains("SparkSession.builder")).map(_.getName)
+    assert(builders === Seq("GraftSession.scala"))
+    assert(text(new java.io.File("src/main/scala/graft/GraftSession.scala"))
+      .contains("withExtensions(new GraftExtensions)"))
+  }
 }

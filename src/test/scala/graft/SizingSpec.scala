@@ -6,7 +6,8 @@ import graft.ops.Sizing
 
 /** The partitions-∝-data deploy recipe (round-13 verdict #6): pure
   * arithmetic pinned on its boundaries, plus the session wiring that
-  * Bench/RunOne/Sf10Probe route through.
+  * Bench/RunOne/PlanDump route through (the sf10 receipt that
+  * motivated it is PLANS.md "SCALE-SF10").
   */
 class SizingSpec extends AnyFunSuite {
 
