@@ -151,29 +151,6 @@ object Dedup {
         GraftExpressionBridge.expression(b)))
   }
 
-  /** Banded-LSH candidate pairs: explode each doc to its (bandIdx,
-    * bandHash) keys and equi-join on them. The join shuffles on the band
-    * hash, so only same-band docs are ever compared — the non-negotiable
-    * property at 100 TB. Returns distinct (id_a < id_b) pairs.
-    */
-  def bandedPairs(
-      docs: DataFrame, idCol: String, shinglesCol: String,
-      numHashes: Int = 12, bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val keyed = docs
-      .withColumn("sig", minhashSignature(col(shinglesCol), numHashes))
-      .select(col(idCol).as("id"),
-        posexplode(bandKeys(col("sig"), bands, numHashes / bands))
-          .as(Seq("band_idx", "band_hash")))
-    keyed.as("a").hint("merge")
-      .join(keyed.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
   /** The persisted LSH index of a corpus: one row per (doc, band) with
     * the band hash AND the doc's shingle set (the verification
     * payload). Computing this once and STORING it is what makes dedup
@@ -244,24 +221,20 @@ object Dedup {
     // probe just built — re-running nearDupPairs(batch) would tokenize
     // and hash the batch a second time for identical signatures (and
     // the identical bk subtrees here dedup through ReuseExchange)
-    val inBatch = bk.as("a").hint("merge")
-      .join(bk.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        sortedJaccard(col("a.s"), col("b.s")).as("jaccard"))
-      .distinct()
-      .filter(col("jaccard") >= threshold)
-    cross.unionByName(inBatch).distinct()
+    cross.unionByName(bandSelfJoin(bk, threshold)).distinct()
   }
 
-  /** bandedPairs + exact-Jaccard confirmation in ONE pass: the shingle
-    * arrays ride along through the band explode, so the pair join emits
-    * (id_a, id_b, jaccard) directly instead of re-joining the corpus
-    * twice to fetch shingles back (which would re-run the whole
-    * tokenize→shingle→signature pipeline per reference — the self-join
-    * already costs two pipeline passes; re-joins made it four).
+  /** Banded-LSH near-dup pairs: each doc's (band_idx, band_hash) keys
+    * ([[bandIndex]]) equi-join, so only same-band docs are ever
+    * compared — the non-negotiable property at 100 TB — and exact
+    * Jaccard confirms every candidate in the same pass. Returns
+    * distinct (id_a &lt; id_b, jaccard) pairs at or above `threshold`.
+    * The shingle arrays ride along through the band explode, so the
+    * pair join emits (id_a, id_b, jaccard) directly instead of
+    * re-joining the corpus twice to fetch shingles back (which would
+    * re-run the whole tokenize→shingle→signature pipeline per
+    * reference — the self-join already costs two pipeline passes;
+    * re-joins made it four).
     * Tradeoff: the band shuffle carries each shingle set `bands` times —
     * the standard LSH space/recompute trade, the right default when the
     * shingle sets are much smaller than the documents.
@@ -269,7 +242,6 @@ object Dedup {
   def nearDupPairs(
       docs: DataFrame, idCol: String, shinglesCol: String,
       numHashes: Int = 12, bands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     // Round-16 (guide §2.3, §8): the band shuffle used to carry the raw
     // STRING shingle set (~25 B/shingle) keyed by a 32-char md5 hex —
     // the heavy opaque payload moved `bands` times so a few bytes of
@@ -283,18 +255,21 @@ object Dedup {
     // Jaccard (64-bit collisions within one pair's sets ≈ |a|·|b|/2⁶⁴
     // — immaterial). Same output pairs, same jaccard values, ~3×
     // fewer shuffle bytes and a cheaper per-candidate verify.
-    val keyed = docs
-      .withColumn("sig", minhashSignature(col(shinglesCol), numHashes))
-      .select(col(idCol).as("id"),
-        sortedHashedShingles(col(shinglesCol)).as("s"),
-        posexplode(bandKeys(col("sig"), bands, numHashes / bands))
-          .as(Seq("band_idx", "band_hash")))
-    // The merge hint forces a shuffle join on BOTH sides — the only
-    // feasible shape at corpus scale (broadcasting the keyed corpus is
-    // not) — and makes the two sides' shuffle subtrees identical, so
-    // Catalyst's ReuseExchange computes the tokenize→shingle→signature
-    // pipeline ONCE and replays it for the other side (~2× faster than
-    // letting the planner broadcast one side at test scale).
+    bandSelfJoin(
+      bandIndex(docs, idCol, shinglesCol, numHashes, bands), threshold)
+  }
+
+  /** The one band self-join of a [[bandIndex]] frame: (id_a &lt; id_b)
+    * pairs sharing a band, verified at sorted-hash Jaccard ≥
+    * `threshold`. The merge hint forces a shuffle join on BOTH sides —
+    * the only feasible shape at corpus scale (broadcasting the keyed
+    * corpus is not) — and makes the two sides' shuffle subtrees
+    * identical, so Catalyst's ReuseExchange computes the
+    * tokenize→shingle→signature pipeline ONCE and replays it for the
+    * other side (~2× faster than letting the planner broadcast one
+    * side at test scale).
+    */
+  private def bandSelfJoin(keyed: DataFrame, threshold: Double): DataFrame =
     keyed.as("a").hint("merge")
       .join(keyed.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -304,7 +279,6 @@ object Dedup {
         sortedJaccard(col("a.s"), col("b.s")).as("jaccard"))
       .distinct()
       .filter(col("jaccard") >= threshold)
-  }
 
   /** [[jaccard]] over two sorted-int64 shingle-hash arrays
     * ([[sortedHashedShingles]]): same |A∩B| / |A∪B| arithmetic with

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{Bloom, BradleyTerry, Cms, Components, Dedup, Drift, Dsir, Hll, KMeansLite, NaiveBayes, Pack, Quantize, Redact, Sampling, Similarity, Text, Winnow, ZOrder}
+import graft.ext.{Bloom, BradleyTerry, Cms, Components, Dedup, Drift, Dsir, Hll, KMeansLite, NaiveBayes, Pack, Quantize, Redact, Retrieval, Sampling, Similarity, Text, Winnow, ZOrder}
 
 /** The LLM-data-pipeline operator surface (north-star extensions), each
   * oracle-checked over the driver's `documents` / `embeddings` tables.
@@ -48,6 +48,74 @@ object ExtQueries {
     */
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** The planted near-dup copies: every document again under id+10000
+    * with its last 3 tokens dropped. greatest(…, 0): Spark's slice
+    * THROWS on a negative length, so a sub-3-token doc truncates to
+    * the empty text instead of failing the query (DuckDB's
+    * t[1:negative] indexes from the end, so the oracles make no claim
+    * for such docs; every doc of the sf0.001–sf0.1 documents tables
+    * has ≥10 tokens).
+    */
+  private def truncatedCopies(docs: DataFrame): DataFrame = {
+    val toks = Text.tokens(col("text"))
+    docs.select((col("doc_id") + 10000).as("doc_id"),
+      array_join(slice(toks, lit(1), greatest(size(toks) - 3, lit(0))), " ")
+        .as("text"))
+  }
+
+  /** documents ∪ [[truncatedCopies]] as (doc_id, text), spread. */
+  private def truncatedCorpus(docs: DataFrame): DataFrame =
+    spread(docs.select(col("doc_id"), col("text"))
+      .unionByName(truncatedCopies(docs)))
+
+  /** The planted-variant chains of x23/x37: every even doc gets an
+    * 80%-prefix copy (id+10000), every 4th doc additionally a
+    * 55%-prefix copy (id+20000), as (doc_id, text), spread.
+    */
+  private def variantChainCorpus(docs: DataFrame): DataFrame = {
+    def mutant(frac: Double, shift: Int, every: Int) = docs
+      .filter(pmod(col("doc_id"), lit(every)) === 0)
+      .select((col("doc_id") + shift).as("doc_id"),
+        array_join(slice(Text.tokens(col("text")), lit(1),
+          greatest(floor(size(Text.tokens(col("text"))) * frac).cast("int"),
+            lit(1))), " ").as("text"))
+    spread(docs.select(col("doc_id"), col("text"))
+      .unionByName(mutant(0.8, 10000, 2))
+      .unionByName(mutant(0.55, 20000, 4)))
+  }
+
+  /** (doc_id, s): the distinct word-trigram set of every ≥3-token doc
+    * (shorter docs have no trigrams and leave the frame).
+    */
+  private def trigramShingles(corpus: DataFrame): DataFrame =
+    corpus.withColumn("t", Text.tokens(col("text")))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
+
+  /** The registry's near-dup pairs over [[trigramShingles]]: 12-hash
+    * MinHash in 4 bands, verified at trigram Jaccard ≥ 0.5 →
+    * (id_a, id_b, jaccard).
+    */
+  private def trigramNearDups(sh: DataFrame): DataFrame =
+    Dedup.nearDupPairs(sh, "doc_id", "s",
+      numHashes = 12, bands = 4, threshold = 0.5)
+
+  /** Stride-1 w-token windows of the token array `t`, each as the
+    * xxhash64 of its space-joined text — a grouping key only, never
+    * output, so 8 bytes shuffle instead of an md5 hex string.
+    */
+  private def windowHashes(w: Int): Column = expr(
+    s"transform(sequence(0, size(t) - $w)," +
+      s" i -> xxhash64(array_join(slice(t, i + 1, $w), ' ')))")
+
+  /** The embeddings as (vec_id, v: array<double>), spread and
+    * checkpointed: the fits and scans that follow read it repeatedly.
+    */
+  private def embeddingVectors(s: SparkSession, dir: String): DataFrame =
+    spread(t(s, dir, "embeddings"))
+      .select(col("vec_id"), toD(col("embedding")).as("v"))
+      .localCheckpoint()
 
   /** The x86/x91 two-level bucketed GLOBAL rank (ascending on
     * `scoreCol` with doc_id tiebreak), for value-bounded ppm scores:
@@ -100,25 +168,13 @@ object ExtQueries {
 
     // MinHash/LSH near-dup pairs: corpus = documents ∪ truncated copies
     // (last 3 tokens dropped, id+10000). Candidates come ONLY from the
-    // band-hash equi-join (Dedup.bandedPairs); exact trigram Jaccard is
-    // then computed on candidates and thresholded.
-    "x02_minhash_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      val corpus = spread(docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
-      Dedup.nearDupPairs(sh, "doc_id", "s",
-          numHashes = 12, bands = 4, threshold = 0.5)
+    // band-key equi-join of Dedup.nearDupPairs, which then verifies
+    // exact trigram Jaccard on the candidates and thresholds it.
+    "x02_minhash_pairs" -> ((s, dir) =>
+      trigramNearDups(trigramShingles(truncatedCorpus(t(s, dir, "documents"))))
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
           round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
+        .orderBy(col("doc_a"), col("doc_b"))),
 
     // Brute-force cosine top-k — the ANN correctness baseline. The query
     // set (10 vectors) is broadcast against the full table; ranking uses
@@ -487,21 +543,8 @@ object ExtQueries {
     // transitively through the middle variant and the component step is
     // doing real work. Canonical survivor = component min id.
     "x23_dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      def mutant(frac: Double, shift: Int, every: Int) = docs
-        .filter(pmod(col("doc_id"), lit(every)) === 0)
-        .select((col("doc_id") + shift).as("doc_id"),
-          array_join(slice(Text.tokens(col("text")), lit(1),
-            greatest(floor(size(Text.tokens(col("text"))) * frac).cast("int"),
-              lit(1))), " ").as("text"))
-      val corpus = spread(docs.select(col("doc_id"), col("text"))
-        .unionByName(mutant(0.8, 10000, 2))
-        .unionByName(mutant(0.55, 20000, 4)))
-      val sh = corpus.withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
-      val edges = Dedup.nearDupPairs(sh, "doc_id", "s",
-        numHashes = 12, bands = 4, threshold = 0.5)
+      val corpus = variantChainCorpus(t(s, dir, "documents"))
+      val edges = trigramNearDups(trigramShingles(corpus))
       val comp = Components.connectedComponents(
         corpus.select(col("doc_id")), "doc_id", edges, "id_a", "id_b")
       val sizes = comp.groupBy(col("cluster_id"))
@@ -520,21 +563,8 @@ object ExtQueries {
     // construction). One extra window over the cluster id — the
     // ranking never leaves the cluster's partition.
     "x37_quality_survivor" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      def mutant(frac: Double, shift: Int, every: Int) = docs
-        .filter(pmod(col("doc_id"), lit(every)) === 0)
-        .select((col("doc_id") + shift).as("doc_id"),
-          array_join(slice(Text.tokens(col("text")), lit(1),
-            greatest(floor(size(Text.tokens(col("text"))) * frac).cast("int"),
-              lit(1))), " ").as("text"))
-      val corpus = spread(docs.select(col("doc_id"), col("text"))
-        .unionByName(mutant(0.8, 10000, 2))
-        .unionByName(mutant(0.55, 20000, 4)))
-      val sh = corpus.withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
-      val edges = Dedup.nearDupPairs(sh, "doc_id", "s",
-        numHashes = 12, bands = 4, threshold = 0.5)
+      val corpus = variantChainCorpus(t(s, dir, "documents"))
+      val edges = trigramNearDups(trigramShingles(corpus))
       val comp = Components.connectedComponents(
         corpus.select(col("doc_id")), "doc_id", edges, "id_a", "id_b")
       val withLen = comp.join(
@@ -558,19 +588,8 @@ object ExtQueries {
     // cross-split pairs exist by construction and the audit counts
     // them per (split, split) cell. Remediation (not shown) is
     // group-aware splitting: hash the CLUSTER id, not the doc id.
-    "x38_split_leakage" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      val corpus = spread(docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
-      Dedup.nearDupPairs(sh, "doc_id", "s",
-          numHashes = 12, bands = 4, threshold = 0.5)
+    "x38_split_leakage" -> ((s, dir) =>
+      trigramNearDups(trigramShingles(truncatedCorpus(t(s, dir, "documents"))))
         .withColumn("split_a", Sampling.holdoutSplit(col("id_a"), 230))
         .withColumn("split_b", Sampling.holdoutSplit(col("id_b"), 230))
         .groupBy(col("split_a"), col("split_b"))
@@ -582,8 +601,7 @@ object ExtQueries {
           (sum(floor(col("jaccard") * 1e4 + 0.5)).cast("long") /
             (count(lit(1)) * lit(10000.0))).as("avg_jac"))
         .withColumn("leaky", col("split_a") =!= col("split_b"))
-        .orderBy(col("split_a"), col("split_b"))
-    }),
+        .orderBy(col("split_a"), col("split_b"))),
 
     // Train/eval contamination check (the n-gram decontamination step of
     // LLM training pipelines): the train side is every distinct 5-gram
@@ -999,16 +1017,7 @@ object ExtQueries {
     // so both engines compute identical sketches; err_pp (percentage
     // points, integer-scaled) is exact integer arithmetic.
     "x36_minhash_fidelity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      val corpus = spread(docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
+      val sh = trigramShingles(truncatedCorpus(t(s, dir, "documents")))
         .withColumn("sig", Dedup.minhashSignature(col("s"), 12))
       val pairs = sh.as("a").hint("merge")
         .join(sh.as("b"), col("a.doc_id") + 10000 === col("b.doc_id"))
@@ -1064,19 +1073,8 @@ object ExtQueries {
     // a pure function of the data — rerunning with more executors or a
     // grown corpus keeps every old doc's assignment.
     "x39_group_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      val corpus = spread(docs.select(col("doc_id"), col("text"))
-        .unionByName(mutated))
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
-      val edges = Dedup.nearDupPairs(sh, "doc_id", "s",
-        numHashes = 12, bands = 4, threshold = 0.5)
+      val corpus = truncatedCorpus(t(s, dir, "documents"))
+      val edges = trigramNearDups(trigramShingles(corpus))
       Components.connectedComponents(
           corpus.select(col("doc_id")), "doc_id", edges, "id_a", "id_b")
         .withColumn("split", Sampling.holdoutSplit(col("cluster_id"), 230))
@@ -1130,17 +1128,11 @@ object ExtQueries {
     // finds, which is the strongest statement of its correctness.
     "x42_incremental_lsh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      def shingled(d: DataFrame) = spread(d)
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
+      def shingled(d: DataFrame) = trigramShingles(spread(d))
       val index = Dedup.bandIndex(
         shingled(docs.select(col("doc_id"), col("text"))), "doc_id", "s")
-      Dedup.incrementalPairs(index, shingled(mutated), "doc_id", "s")
+      Dedup.incrementalPairs(index, shingled(truncatedCopies(docs)),
+          "doc_id", "s")
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
           round(col("jaccard"), 4).as("jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))
@@ -1351,14 +1343,7 @@ object ExtQueries {
     // chunk md5 (occurrence count), then doc_id — chunks ride the
     // shuffle as 32-byte hashes, never text.
     "x49_chunk_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val chunks = corpus
+      val chunks = truncatedCorpus(t(s, dir, "documents"))
         .withColumn("t", Text.tokens(col("text")))
         .select(col("doc_id"), explode(expr(
           "transform(sequence(0, cast(floor((size(t)-1)/20) as int))," +
@@ -1442,18 +1427,7 @@ object ExtQueries {
     // per-group bound as any string_agg) — nothing is quadratic and
     // nothing leaves its hash partition.
     "x52_segment_dedup_rebuild" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        // greatest(…, 0): Spark's slice THROWS on a negative length
-        // (and DuckDB's t[1:negative] silently means index-from-end),
-        // so a future sub-3-token doc must clamp to empty, not fail
-        array_join(slice(toks, lit(1), greatest(size(toks) - 3, lit(0))), " ")
-          .as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val segs = corpus
+      val segs = truncatedCorpus(t(s, dir, "documents"))
         .withColumn("t", Text.tokens(col("text")))
         .select(col("doc_id"), posexplode(expr(
           "transform(sequence(0, cast(floor((size(t)-1)/15) as int))," +
@@ -1560,23 +1534,11 @@ object ExtQueries {
     // relational shape stays the same.
     "x55_repeated_spans" -> ((s, dir) => {
       val w = 10
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), greatest(size(toks) - 3, lit(0))), " ")
-          .as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
+      val corpus = truncatedCorpus(t(s, dir, "documents"))
       val wins = corpus
         .withColumn("t", Text.tokens(col("text")))
         .filter(size(col("t")) >= w)
-        .select(col("doc_id"), posexplode(expr(
-          // the window hash is ONLY a grouping key (never output):
-          // an 8-byte xxhash64 shuffles ~4x fewer bytes than the
-          // md5 hex string at identical grouping (round-16 §2.3)
-          s"transform(sequence(0, size(t) - $w)," +
-            s" i -> xxhash64(array_join(slice(t, i + 1, $w), ' ')))")))
+        .select(col("doc_id"), posexplode(windowHashes(w)))
         .select(col("doc_id"), col("pos").as("idx"), col("col").as("h"))
       // "repeats across documents" only needs ≥2 DISTINCT docs per
       // window hash, and min(doc_id) ≠ max(doc_id) decides that with
@@ -1627,23 +1589,11 @@ object ExtQueries {
     // data-sized beyond the offsets it already had.
     "x65_span_removal" -> ((s, dir) => {
       val w = 10
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000L).as("doc_id"),
-        array_join(slice(toks, lit(1), greatest(size(toks) - 3, lit(0))), " ")
-          .as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
+      val corpus = truncatedCorpus(t(s, dir, "documents"))
       val wins = corpus
         .withColumn("t", Text.tokens(col("text")))
         .filter(size(col("t")) >= w)
-        .select(col("doc_id"), posexplode(expr(
-          // the window hash is ONLY a grouping key (never output):
-          // an 8-byte xxhash64 shuffles ~4x fewer bytes than the
-          // md5 hex string at identical grouping (round-16 §2.3)
-          s"transform(sequence(0, size(t) - $w)," +
-            s" i -> xxhash64(array_join(slice(t, i + 1, $w), ' ')))")))
+        .select(col("doc_id"), posexplode(windowHashes(w)))
         .select(col("doc_id"), col("pos").as("idx"), col("col").as("h"))
       val grp = Window.partitionBy(col("doc_id")).orderBy(col("idx"))
       // cross-doc repeat test decided on the vocabulary side — the
@@ -1854,9 +1804,7 @@ object ExtQueries {
     // narrow pass over n rows; top-k is a per-query window.
     "x59_pq_adc" -> ((s, dir) => {
       val m = 4; val sub = 16; val k = 16; val topK = 5; val nQ = 20
-      val base = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val base = embeddingVectors(s, dir)
       // the m subspace fits are FUSED into one seed collect + one
       // unioned update job (round-17, guide §2.6): bit-identical
       // centroids (KMeansSlicedSpec), ~2 jobs where the concurrent
@@ -1909,10 +1857,7 @@ object ExtQueries {
           col("text"))))
       val wins = corpus.withColumn("t", Text.tokens(col("text")))
         .filter(size(col("t")) >= w)
-        .select(col("doc_id"), explode(expr(
-          // grouping-only key: 8-byte xxhash64, not an md5 hex (x55)
-          s"array_distinct(transform(sequence(0, size(t) - $w)," +
-            s" i -> xxhash64(array_join(slice(t, i + 1, $w), ' '))))")).as("h"))
+        .select(col("doc_id"), explode(array_distinct(windowHashes(w))).as("h"))
       // Round-17: no stream attach at all. n_novel(doc) = number of
       // window hashes whose corpus-wide min(doc_id) IS this doc — a
       // per-doc COUNT over the first-claim table itself, so the
@@ -1982,9 +1927,7 @@ object ExtQueries {
     // grown corpus keeps decisions stable for unchanged clusters.
     "x62_cluster_balance" -> ((s, dir) => {
       val k = 8
-      val base = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val base = embeddingVectors(s, dir)
       val cents = KMeansLite.fitQuantized(base, "vec_id", "v", k, iters = 1)
       val assigned = base.select(col("vec_id"),
         KMeansLite.assign(col("v"), cents).cast("long").as("cell"))
@@ -2206,14 +2149,6 @@ object ExtQueries {
     // window — no n² anywhere. The ≥-threshold test is pure integer
     // arithmetic (inter·5 ≥ union·3), immune to float boundaries.
     "x67_prefix_filter_join" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks0 = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks0, lit(1), greatest(size(toks0) - 3, lit(0))), " ")
-          .as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
       // each doc CARRIES its shingle array (x02's shape): the exact
       // intersection later is two doc-keyed joins + one codegen'd
       // array_intersect per candidate pair — never the pair×token
@@ -2226,10 +2161,7 @@ object ExtQueries {
       // 8-byte sorted hashes + the native merge-count do the same
       // distinct-overlap arithmetic (collision odds ≈ |s|²/2⁶⁴ per
       // pair; RoundThirteenCSpec pins hashed == string corpus-wide)
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
+      val sh = trigramShingles(truncatedCorpus(t(s, dir, "documents")))
         .withColumn("n", size(col("s")).cast("long"))
         .withColumn("hs", graft.ext.Dedup.sortedHashedShingles(col("s")))
       // the canonical PPJoin order rides the 8-byte token hash: the
@@ -2559,9 +2491,7 @@ object ExtQueries {
     // RoundTenSpec re-runs the same plan at other nProbe/kc/m values
     // and pins the recall@5 tuning curve).
     "x72_ivfpq_ann" -> ((s, dir) => {
-      val base = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val base = embeddingVectors(s, dir)
       val approx = graft.ext.AnnIndex.ivfPqTopK(
         base, m = 4, sub = 16, kc = 8, kq = 16,
         nProbe = 2, topK = 5, nQ = 20)
@@ -2664,9 +2594,7 @@ object ExtQueries {
     // rank window is keyed on src_id. RoundTenSpec pins the same law
     // at the DataFrame level plus the untouched-cells-absent property.
     "x75_incremental_knn" -> ((s, dir) => {
-      val corpus = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val corpus = embeddingVectors(s, dir)
       val old = corpus.filter(col("vec_id") % 10 =!= 0)
       // k∝corpus (round-11): cells derive from the OLD corpus — the
       // side the frozen index was fit on, matching the oracle's
@@ -2932,9 +2860,7 @@ object ExtQueries {
     // verified bit-for-bit, not just the scores. rank ≤ 20 is the x40
     // bounded TakeOrderedAndProject shape.
     "x82_power_iteration" -> ((s, dir) => {
-      val base = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val base = embeddingVectors(s, dir)
       val pc1 = typedlit(graft.ext.PowerIter.fit(base, "v", dims = 64, iters = 2))
       val w = Window.orderBy(col("abs_proj").desc, col("vec_id"))
       base
@@ -3116,9 +3042,7 @@ object ExtQueries {
     // audit=false) — the approx results themselves stay hash-checked.
     // PLANS.md round-11 prices both forms at sf1 side by side.
     "x87_ivfpq_serve" -> ((s, dir) => {
-      val base = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val base = embeddingVectors(s, dir)
       graft.ext.AnnIndex.ivfPqTopK(
         base, m = 4, sub = 16, kc = 8, kq = 16,
         nProbe = 2, topK = 5, nQ = 20)
@@ -3277,16 +3201,10 @@ object ExtQueries {
     // Lucene "+1" idf form; k1 = 1.2, b = 0.75) — the scored member of
     // the retrieval family (x79 = conjunctive boolean, x20 = TF-IDF
     // top terms): rank every document against the corpus's top-5-df
-    // query term set. Scoring is engineered for cross-engine
-    // bit-identity: idf = round(ln((N−df+0.5)/(df+0.5)+1), 6) — the
-    // one libm call, quantized BEFORE use (the x32 discipline); the
-    // tf/length part is an EXACT INTEGER rational — with k1 = 6/5,
-    // b = 3/4: tf·(k1+1)/(tf + k1·(1−b+b·dl·N/T)) ==
-    // 44·tf·T / (20·tf·T + 6·T + 18·dl·N) — so the only doubles are
-    // one IEEE division of exact int64s and the idf product; per-term
-    // scores land as integer micro-units and SUM ASSOCIATIVELY.
-    // (int64 headroom: 44·tf·T needs tf·T < 2^57 — at 100 TB split
-    // the corpus or drop to the log-sum form, the x78 note.)
+    // query term set. Scoring is ext/Retrieval's exact-integer BM25
+    // term score (idf quantized before use, the tf/length part an
+    // exact int64 rational), so per-term scores land as integer
+    // micro-units and SUM ASSOCIATIVELY.
     // Scale shape: postings/df/doclen are keyed aggregates; the query
     // term set is a 5-row broadcast; scoring is one doc-keyed join +
     // narrow arithmetic; rank ≤ 20 hits LimitPushDownThroughWindow
@@ -3309,15 +3227,7 @@ object ExtQueries {
       postings.join(broadcast(qterms), "w")
         .join(doclen, "doc_id")
         .crossJoin(broadcast(totals))
-        .withColumn("idf6", round(
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)
-            + 1.0), 6))
-        .withColumn("num", col("tf") * 44L * col("total_dl"))
-        .withColumn("den", col("tf") * 20L * col("total_dl")
-          + col("total_dl") * 6L + col("dl") * 18L * col("n_docs"))
-        .withColumn("sc_e6", floor(col("idf6")
-          * (col("num").cast("double") / col("den").cast("double"))
-          * 1e6 + 0.5).cast("long"))
+        .withColumn("sc_e6", Retrieval.bm25TermE6)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_terms"), sum(col("sc_e6")).as("score_e6"))
         .withColumn("rnk", row_number().over(wRank).cast("long"))
@@ -3436,15 +3346,7 @@ object ExtQueries {
       val sparse = cand.join(broadcast(qterms), "w")
         .join(doclen, "doc_id")
         .crossJoin(broadcast(totals))
-        .withColumn("idf6", round(
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)
-            + 1.0), 6))
-        .withColumn("num", col("tf") * 44L * col("total_dl"))
-        .withColumn("den", col("tf") * 20L * col("total_dl")
-          + col("total_dl") * 6L + col("dl") * 18L * col("n_docs"))
-        .withColumn("sc_e6", floor(col("idf6")
-          * (col("num").cast("double") / col("den").cast("double"))
-          * 1e6 + 0.5).cast("long"))
+        .withColumn("sc_e6", Retrieval.bm25TermE6)
         .groupBy(col("query_id"), col("doc_id"))
         .agg(sum(col("sc_e6")).as("score_e6"))
         .withColumn("r_sparse", row_number().over(wS).cast("long"))
@@ -3467,8 +3369,7 @@ object ExtQueries {
         .orderBy(col("rrf").desc, col("doc_id"))
       sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
         .withColumn("rrf",
-          coalesce(expr("1000000000 div (60 + r_sparse)"), lit(0L))
-            + coalesce(expr("1000000000 div (60 + r_dense)"), lit(0L)))
+          Retrieval.rrfTerm("r_sparse") + Retrieval.rrfTerm("r_dense"))
         .withColumn("rnk", row_number().over(wF).cast("long"))
         .filter(col("rnk") <= 10)
         .select(col("query_id"), col("rnk"), col("doc_id"), col("rrf"),
@@ -3522,18 +3423,10 @@ object ExtQueries {
     // Jaccard in integer ppm via the native intersect-size.
     "x98_weighted_minhash" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        concat(
-          array_join(slice(toks, lit(1), size(toks) - 3), " "),
-          lit(" " + ExtQueries.Boilerplate)).as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
+      val mutated = truncatedCopies(docs).withColumn("text",
+        concat(col("text"), lit(" " + ExtQueries.Boilerplate)))
+      val sh = trigramShingles(spread(
+        docs.select(col("doc_id"), col("text")).unionByName(mutated)))
       Dedup.weightedNearDupPairs(sh, "doc_id", "s",
           numHashes = 16, bands = 4, thresholdPpm = 250000L)
         .orderBy(col("doc_a"), col("doc_b"))
@@ -4014,15 +3907,7 @@ object ExtQueries {
       val ranked = postings.join(qterms, "w")
         .join(doclen, "doc_id")
         .crossJoin(broadcast(totals))
-        .withColumn("idf6", round(
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)
-            + 1.0), 6))
-        .withColumn("num", col("tf") * 44L * col("total_dl"))
-        .withColumn("den", col("tf") * 20L * col("total_dl")
-          + col("total_dl") * 6L + col("dl") * 18L * col("n_docs"))
-        .withColumn("sc_e6", floor(col("idf6")
-          * (col("num").cast("double") / col("den").cast("double"))
-          * 1e6 + 0.5).cast("long"))
+        .withColumn("sc_e6", Retrieval.bm25TermE6)
         .groupBy(col("qid"), col("doc_id"))
         .agg(sum(col("sc_e6")).as("score_e6"))
         .withColumn("rnk", row_number().over(wRank).cast("long"))
@@ -4472,12 +4357,7 @@ object ExtQueries {
       val wins = corpus
         .withColumn("t", Text.tokens(col("text")))
         .filter(size(col("t")) >= w)
-        .select(col("doc_id"), posexplode(expr(
-          // the window hash is ONLY a grouping key (never output):
-          // an 8-byte xxhash64 shuffles ~4x fewer bytes than the
-          // md5 hex string at identical grouping (round-16 §2.3)
-          s"transform(sequence(0, size(t) - $w)," +
-            s" i -> xxhash64(array_join(slice(t, i + 1, $w), ' ')))")))
+        .select(col("doc_id"), posexplode(windowHashes(w)))
         .select(col("doc_id"), col("pos").as("idx"), col("col").as("h"))
       val wFirst = Window.partitionBy(col("doc_id"), col("h"))
       val grp = Window.partitionBy(col("doc_id")).orderBy(col("idx"))
@@ -4660,19 +4540,8 @@ object ExtQueries {
     // propagation AND the audit), component labels a bounded-round
     // min-propagation, final output 3 rows.
     "x122_split_leakage" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = Text.tokens(col("text"))
-      val mutated = docs.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 3), " ").as("text"))
-      val corpus = spread(
-        docs.select(col("doc_id"), col("text")).unionByName(mutated))
-      val sh = corpus
-        .withColumn("t", Text.tokens(col("text")))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), Text.wordShingles(col("t")).as("s"))
-      val pairs = Dedup.nearDupPairs(sh, "doc_id", "s",
-          numHashes = 12, bands = 4, threshold = 0.5)
+      val sh = trigramShingles(truncatedCorpus(t(s, dir, "documents")))
+      val pairs = trigramNearDups(sh)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint() // pairs-sized; read by components + audit
       val comp = Components.connectedComponents(
@@ -4954,9 +4823,7 @@ object ExtQueries {
     // query set is a bounded broadcast (the adjudicated x03 class) and
     // ranking is a query-keyed window — corpus work is linear.
     "x128_matryoshka_eval" -> ((s, dir) => {
-      val base = spread(t(s, dir, "embeddings"))
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
-        .localCheckpoint()
+      val base = embeddingVectors(s, dir)
       val q = base.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("v").as("qv"))
       val scored = base.crossJoin(broadcast(q))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ext.{KMeansLite, Similarity, Text}
+import graft.ext.{KMeansLite, Retrieval, Similarity, Text}
 
 /** Streaming hybrid retrieval — the serving form of x97: a continuous
   * stream of queries (sparse terms + a dense vector per query) scored
@@ -28,11 +28,11 @@ import graft.ext.{KMeansLite, Similarity, Text}
   * (matched postings rows only), the dense probe reads exactly the
   * nProbe cell partitions each query hashes to (partition-pruned by
   * the `cell` equi-join), and both legs truncate to legK per query
-  * BEFORE the fusion join. Scoring reuses x97's determinism recipe
-  * bit for bit — idf round(·,6) before use, the exact int64 BM25
-  * rational, cosine floor(·1e6+0.5) units, RRF = 10^9 div (60+rank) —
-  * so StreamRetrieveSpec can assert micro-batched output == one-shot
-  * batch output as row identity, not approximately.
+  * BEFORE the fusion join. Scoring goes through the operator x97
+  * uses, [[graft.ext.Retrieval]]: its exact-integer BM25 term score
+  * and its RRF term 10^9 div (60+rank), with cosine in floor(·1e6+0.5)
+  * units — so StreamRetrieveSpec can assert micro-batched output ==
+  * one-shot batch output as row identity, not approximately.
   *
   * Output contract: foreachBatch APPENDS (query_id, rnk, doc_id, rrf,
   * r_sparse, r_dense, _batch_id). The append is at-least-once on
@@ -184,15 +184,7 @@ object StreamRetrieve {
     val sparse = postings.join(broadcast(qt), "w")
       .join(doclen, "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("idf6", round(
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)
-          + 1.0), 6))
-      .withColumn("num", col("tf") * 44L * col("total_dl"))
-      .withColumn("den", col("tf") * 20L * col("total_dl")
-        + col("total_dl") * 6L + col("dl") * 18L * col("n_docs"))
-      .withColumn("sc_e6", floor(col("idf6")
-        * (col("num").cast("double") / col("den").cast("double"))
-        * 1e6 + 0.5).cast("long"))
+      .withColumn("sc_e6", Retrieval.bm25TermE6)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("sc_e6")).as("score_e6"))
       .withColumn("r_sparse", row_number().over(wS).cast("long"))
@@ -219,13 +211,12 @@ object StreamRetrieve {
       .filter(col("r_dense") <= legK)
       .select(col("query_id"), col("doc_id"), col("r_dense"))
 
-    // exact-integer RRF fuse, top-K per query — x97's formula verbatim
+    // exact-integer RRF fuse, top-K per query — x97's fusion
     val wF = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf",
-        coalesce(expr("1000000000 div (60 + r_sparse)"), lit(0L))
-          + coalesce(expr("1000000000 div (60 + r_dense)"), lit(0L)))
+        Retrieval.rrfTerm("r_sparse") + Retrieval.rrfTerm("r_dense"))
       .withColumn("rnk", row_number().over(wF).cast("long"))
       .filter(col("rnk") <= topK)
       .select(col("query_id"), col("rnk"), col("doc_id"), col("rrf"),

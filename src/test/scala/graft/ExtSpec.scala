@@ -52,14 +52,15 @@ class ExtSpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(1L, 3L))
   }
 
-  test("bandedPairs surfaces identical shingle sets, never self-pairs") {
+  test("nearDupPairs surfaces identical shingle sets, never self-pairs") {
     val df = Seq(
       (1L, "w1 w2 w3 w4 w5 w6 w7 w8"),
       (2L, "w1 w2 w3 w4 w5 w6 w7 w8"), // identical → all bands collide
       (3L, "z1 z2 z3 z4 z5 z6 z7 z8")) // disjoint → no collision
       .toDF("doc_id", "text")
       .select(col("doc_id"), Text.wordShingles(Text.tokens(col("text"))).as("s"))
-    val pairs = Dedup.bandedPairs(df, "doc_id", "s")
+    val pairs = Dedup.nearDupPairs(df, "doc_id", "s")
+      .select(col("id_a"), col("id_b"))
       .as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }

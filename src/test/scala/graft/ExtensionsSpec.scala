@@ -81,20 +81,43 @@ class ExtensionsSpec extends AnyFunSuite {
       .head().getDouble(0) === 1.0)
   }
 
+  // source-text guards (the CodecContractSpec pattern) read the main
+  // tree as text
+  private def sources(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(sources)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+  private def text(f: java.io.File): String = {
+    val s = scala.io.Source.fromFile(f, "UTF-8")
+    try s.mkString finally s.close()
+  }
+
   test("every tool session is built by GraftSession, with the extensions") {
-    // source-text guard (the CodecContractSpec pattern): a main that
-    // builds its own session drifts from the shared recipe
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    def text(f: java.io.File): String = {
-      val s = scala.io.Source.fromFile(f, "UTF-8")
-      try s.mkString finally s.close()
-    }
+    // a main that builds its own session drifts from the shared recipe
     val builders = sources(new java.io.File("src/main"))
       .filter(f => text(f).contains("SparkSession.builder")).map(_.getName)
     assert(builders === Seq("GraftSession.scala"))
     assert(text(new java.io.File("src/main/scala/graft/GraftSession.scala"))
       .contains("withExtensions(new GraftExtensions)"))
+  }
+
+  test("BM25 and RRF live only in ext/Retrieval; no truncation is unclamped") {
+    // a second copy of a scoring formula drifts from the first, and the
+    // batch/stream row identity StreamRetrieveSpec pins goes with it
+    def hits(pattern: scala.util.matching.Regex): Seq[String] =
+      sources(new java.io.File("src/main")).flatMap { f =>
+        text(f).linesIterator.zipWithIndex.collect {
+          case (line, i) if pattern.findFirstIn(line).isDefined =>
+            s"${f.getName}:${i + 1}"
+        }
+      }
+    val bm25 = hits("""\* 44L \*""".r)
+    val rrf = hits("""1000000000 div \(60 \+""".r)
+    // slice(toks, 1, size(toks) - 3) throws on a ≤2-token document;
+    // every truncation clamps the length at 0
+    val unclamped = hits("""(?<!greatest\()size\(\w+\) - 3""".r)
+    assert(bm25.nonEmpty && rrf.nonEmpty)
+    val strays = (bm25 ++ rrf).filterNot(_.startsWith("Retrieval.scala:")) ++
+      unclamped
+    assert(strays.isEmpty, strays.mkString(", "))
   }
 }
