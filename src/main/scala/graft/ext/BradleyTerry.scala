@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: callers aggregate the corpus-sized judgment stream
   * into the items²-bounded pair table ONCE (map-side combined); every
   * MM round then touches only that pair table plus item-sized
-  * broadcasts (the x70 bounded-iteration posture) — the corpus is
-  * never re-read. BT is invariant to scaling all (n_ij, W_i) by a
+  * broadcasts — the corpus is never re-read. BT is invariant to scaling all (n_ij, W_i) by a
   * common factor, so when judgment counts approach the e12 overflow
   * guard the pair table is divided down, never re-derived.
   */

@@ -1,8 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.functions.col
 
 /** Connected components over a near-duplicate graph — the step that
   * turns pairwise near-dup EDGES (Dedup.nearDupPairs, x02) into dedup
@@ -20,6 +19,8 @@ import org.apache.spark.storage.StorageLevel
   * form near-cliques; even chains of re-mutations are short), which is
   * why label propagation is the standard industrial shape for dedup
   * clustering rather than a full large-star/small-star implementation.
+  * (Pointer jumping halves the rounds but doubles each round's joins;
+  * it only pays past ~6-8 rounds, see PLANS.md round-7 note.)
   *
   * Seeding covers nodes ∪ edge endpoints: an endpoint that is missing
   * from the node frame still participates with its own id as a label
@@ -27,27 +28,8 @@ import org.apache.spark.storage.StorageLevel
   * per-round id set is CLOSED — messages only flow to seeded ids —
   * which is what makes the strict-decrease convergence check complete.
   *
-  * Scale posture per round: one equi-join of the (symmetrized) edge list
-  * against the label table on the node id + one min-aggregate, both
-  * hash-partitioned on node id — no broadcast of anything
-  * corpus-sized, no driver-side graph. Each round is ONE Spark job:
-  * the aggregate carries the node's previous label alongside the new
-  * minimum (the self row is tagged before the union, so
-  * `min(prev-tagged lbl)` IS the old label — the id set is closed by
-  * seeding), and the changed-label count is taken from the same
-  * materialization pass that caches the round's output — no separate
-  * next-vs-prev join job, which at tiny per-round data would double the
-  * driver/scheduling cost that dominates, and at 100 TB would double
-  * the number of passes over the label table. Each round's labels are
-  * materialized as a persisted RDD wrapped back into a leaf DataFrame:
-  * Catalyst sees a scan, not round-N's full lineage (whose analysis
-  * cost would grow linearly with rounds — the edge list alone drags the
-  * whole LSH candidate pipeline into every plan), and the previous
-  * round's blocks are unpersisted DETERMINISTICALLY as soon as the next
-  * round is materialized — executor storage holds at most two label
-  * snapshots regardless of round count (localCheckpoint would truncate
-  * lineage too, but frees its blocks only when the GC/ContextCleaner
-  * gets around to it).
+  * The rounds run on [[GraphRounds]] with a min combine: the
+  * co-partitioned, per-round-materialized loop described there.
   */
 object Components {
 
@@ -61,92 +43,19 @@ object Components {
     *                reaching it without a fixpoint throws — silently
     *                returning partially-propagated labels would hand
     *                the caller wrong cluster ids
-    * @return (idCol, cluster_id) — cluster_id = min node id reachable
+    * @return (idCol, cluster_id) — cluster_id = min node id reachable.
+    *         The last label snapshot behind it stays persisted; the
+    *         adjacency does not.
     */
   def connectedComponents(
       nodes: DataFrame, idCol: String,
       edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): DataFrame = {
-    val spark = nodes.sparkSession
-
-    // Round-16 rewrite (guide §2.4: remove shuffles outright): the
-    // per-round dataflow drops from Catalyst to co-partitioned RDDs.
-    // The symmetrized edge list is hash-partitioned by src ONCE and
-    // persisted; the label table lives under the SAME partitioner, so
-    // each round's edge⋈label join is NARROW on both sides — the only
-    // shuffle per round is the message aggregation (dst-keyed
-    // reduceByKey into the same partitioner), where the DataFrame
-    // formulation re-exchanged the edge list AND the label union
-    // every round and paid an AQE re-plan per shuffle on top. The
-    // arithmetic is unchanged: label(id) ← min(label(id), heard
-    // labels), convergence = zero strict decreases.
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(spark.sessionState.conf.numShufflePartitions, 1))
-    val e = edges.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val sym = e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    // Seeding covers nodes ∪ edge endpoints (the closed id set the
-    // convergence check needs); reduceByKey doubles as the distinct.
-    var labels: org.apache.spark.rdd.RDD[(Long, Long)] =
-      nodes.select(col(idCol).cast("long").as("id"))
-        .rdd.map(r => (r.getLong(0), r.getLong(0)))
-        .union(sym.mapPartitions(
-          _.map { case (src, _) => (src, src) }, preservesPartitioning = true))
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var prevPersisted: org.apache.spark.rdd.RDD[_] = labels
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // neighbor labels flow along edges (narrow join: both sides
-      // already live under `part`); a node's new label is the min of
-      // its own and everything it heard — carried next to the old
-      // label so the convergence count rides the SAME materializing
-      // pass instead of a second join.
-      val msgs = sym.join(labels, part)
-        .map { case (_, (dst, lbl)) => (dst, lbl) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      val next = labels.cogroup(msgs, part)
-        .mapValues { case (self, heard) =>
-          val old = self.head // closed id set: every id has a self row
-          (heard.foldLeft(old)(math.min), old)
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // One action materializes the round AND counts strict decreases
-      // ("changed"): labels only ever shrink, so new < old iff the
-      // node heard a smaller label this round.
-      val changed = next.mapPartitions { it =>
-        var n = 0L
-        while (it.hasNext) { val kv = it.next(); if (kv._2._1 < kv._2._2) n += 1 }
-        Iterator.single(n)
-      }.sum().toLong
-      prevPersisted.unpersist(blocking = false)
-      labels = next.mapValues(_._1)
-      prevPersisted = next
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist(blocking = false)
-    // one INFO line per invocation: rounds ≈ graph diameter — the
-    // number to watch if cluster chains ever lengthen (pointer-jumping
-    // halves rounds but doubles per-round joins; it only pays past
-    // ~6-8 rounds, see PLANS.md round-7 note)
-    org.slf4j.LoggerFactory.getLogger(getClass)
-      .info(s"connectedComponents converged in $iter rounds")
-    if (!converged) {
-      prevPersisted.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds — " +
-          "raise maxIter (rounds needed = graph diameter)")
-    }
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(
-      labels.map { case (id, lbl) => Row(id, lbl) },
-      StructType(Seq(StructField(idCol, LongType, nullable = false),
-        StructField("cluster_id", LongType, nullable = false))))
+    GraphRounds.run(
+        edges.select(col(aCol), col(bCol)), Some(nodes.select(col(idCol))),
+        init = id => id, send = (lbl, _) => lbl,
+        combine = math.min, update = math.min,
+        rounds = maxIter, toFixpoint = true)
+      .select(col("id").as(idCol), col("value").as("cluster_id"))
   }
 }

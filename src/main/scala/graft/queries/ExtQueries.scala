@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{Bloom, BradleyTerry, Cms, Components, Dedup, Drift, Dsir, Hll, KMeansLite, NaiveBayes, Pack, Quantize, Redact, Retrieval, Sampling, Similarity, Text, Winnow, ZOrder}
+import graft.ext.{Bloom, BradleyTerry, Cms, Components, Dedup, Drift, Dsir, GraphRounds, Hll, KMeansLite, NaiveBayes, Pack, Quantize, Redact, Retrieval, Sampling, Similarity, Text, Winnow, ZOrder}
 
 /** The LLM-data-pipeline operator surface (north-star extensions), each
   * oracle-checked over the driver's `documents` / `embeddings` tables.
@@ -2323,111 +2323,30 @@ object ExtQueries {
     // — the canonical iterative-join workload (centrality over a
     // bipartite supply network, here; over a hyperlink/citation graph
     // in a web-corpus pipeline, where rank feeds crawl prioritization
-    // and quality weighting). Spark-first: the iteration is UNROLLED
-    // into the logical plan — 5 rounds, each ONE rank⋈edges equi-join
-    // hash-partitioned on the node id plus one partial-aggregated sum
-    // — the exact shape GraphX/Pregel lowers to, with no driver-side
-    // state at all (contrast KMeansLite's documented k·d exception).
+    // and quality weighting). Node encoding 2·part / 2·supp+1 keeps one
+    // id space; GraphRounds symmetrizes and de-duplicates the edges, so
+    // the bipartite walk is symmetric and every node has deg ≥ 1.
     //
-    // Determinism: ranks live in integer micro-units. Each round
-    // divides by degree with integer `div` (floor — all values
+    // Determinism: ranks live in integer micro-units. Each of the 5
+    // rounds sends rank div deg along every edge (floor — all values
     // positive, so Spark's truncation and DuckDB's floor agree), sums
     // INTEGERS (order-independent), and applies 0.15 + 0.85·x as
-    // 150000 + (850·m) div 1000 — bit-exact cross-engine with no
-    // float anywhere. Node encoding 2·part / 2·supp+1 keeps one id
-    // space; both directions of each edge are materialized so the
-    // bipartite walk is symmetric.
-    //
-    // Round-11 structural rework (was 15 s vs DuckDB 2.6 s at sf1 —
-    // the unrolled plan re-derived the 6M-row lineitem DISTINCT and
-    // the degree aggregate inside EVERY round's subtree; exchange
-    // reuse does not cover them across the rank-lineage chain, and
-    // localCheckpoint partitioning is invisible to EnsureRequirements
-    // under AQE).
-    //
-    // Round-17 (the r16 verdict's scale-safety item): the round-11
-    // form BROADCAST a node-sized contribution table every round
-    // (plus the degree table) — bounded by the catalog here, but a
-    // broadcast-per-round of anything |V|-sized violates guide §3.1
-    // the moment |V| outgrows executor memory, and each round's
-    // broadcast build was its own job + AQE re-plan. The loop now
-    // runs on CO-PARTITIONED RDDs (the Components.connectedComponents
-    // discipline, guide §2.4): the deduped adjacency (dst, nbrs[])
-    // is hash-partitioned ONCE and persisted; ranks live under the
-    // SAME partitioner, so the per-round rank⋈adjacency join is
-    // narrow on both sides and the round's only shuffle is the
-    // dst-keyed message reduction (map-side-combined, |V|-sized).
-    // Nothing is broadcast, nothing is collected; per-round arithmetic
-    // is unchanged exact-integer (rank div deg, then
-    // 150000 + (850·m) div 1000 — Long ops, order-independent sums),
-    // so the emitted ranks are bit-identical to the broadcast form.
-    "x70_graph_pagerank" -> ((s, dir) => {
-      val n = s.sparkContext.defaultParallelism
-      val eRaw = t(s, dir, "lineitem")
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      // ONE corpus exchange builds the dst-clustered adjacency —
-      // repartition(dst) satisfies both downstream groupings (pair
-      // dedup + collect_list), then the |V| array rows drop to an RDD
-      // hash-partitioned on the node id and persist there.
-      val adjDf = eRaw.unionByName(
-        eRaw.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(n, col("dst"))
-        .groupBy(col("dst"), col("src")).agg(count(lit(1)).as("_dup"))
-        .groupBy(col("dst")).agg(collect_list(col("src")).as("nbrs"))
-      val part = new org.apache.spark.HashPartitioner(n)
-      val adj = adjDf.rdd.map(r =>
-          (r.getLong(0), r.getSeq[Long](1).toArray))
-        .partitionBy(part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // every node in the symmetrized graph has deg >= 1, sends a
-      // contribution each round, and (symmetry) receives >= 1 message
-      // — the id set is closed, no outer-join seeding needed
-      var rank: org.apache.spark.rdd.RDD[(Long, Long)] =
-        adj.mapPartitions(_.map { case (node, _) => (node, 1000000L) },
-          preservesPartitioning = true)
-      for (_ <- 1 to 5) {
-        // co-partitioned round: ranks and adjacency zip partition-by-
-        // partition (no join shuffle), contributions combine into a
-        // per-partition map BEFORE the shuffle (a manual map-side
-        // combine — the flatMap+reduceByKey form allocated a boxed
-        // tuple per EDGE per round), so the round's one shuffle
-        // carries ≤|V| combined entries per partition.
-        val combined = adj.zipPartitions(rank) { (ait, rit) =>
-          val rmap = new java.util.HashMap[Long, Long]()
-          while (rit.hasNext) { val kv = rit.next(); rmap.put(kv._1, kv._2) }
-          val acc = new java.util.HashMap[Long, Long]()
-          while (ait.hasNext) {
-            val kv = ait.next()
-            val nbrs = kv._2
-            val c = rmap.get(kv._1) / nbrs.length // rank div deg, positive
-            var i = 0
-            while (i < nbrs.length) {
-              acc.put(nbrs(i), acc.getOrDefault(nbrs(i), 0L) + c)
-              i += 1
-            }
-          }
-          import scala.jdk.CollectionConverters._
-          acc.entrySet().iterator().asScala
-            .map(e => (e.getKey.longValue(), e.getValue.longValue()))
-        }
-        rank = combined.reduceByKey(part, (a: Long, b: Long) => a + b)
-          .mapValues(m => 150000L + (850L * m) / 1000L)
-      }
-      val out = adj.join(rank, part).map { case (node, (nbrs, rk)) =>
-        org.apache.spark.sql.Row(node, nbrs.length.toLong, rk)
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      s.createDataFrame(out, StructType(Seq(
-          StructField("node", LongType, nullable = false),
-          StructField("deg", LongType, nullable = false),
-          StructField("rank", LongType, nullable = false))))
+    // 150000 + (850·m) div 1000 — bit-exact cross-engine with no float
+    // anywhere. The rounds run on ext/GraphRounds, the co-partitioned
+    // loop connected components uses: nothing is broadcast or
+    // collected, and each round is one message shuffle.
+    "x70_graph_pagerank" -> ((s, dir) =>
+      GraphRounds.run(
+          t(s, dir, "lineitem").select((col("l_partkey") * 2).as("src"),
+            (col("l_suppkey") * 2 + 1).as("dst")), None,
+          init = _ => 1000000L, send = (rank, deg) => rank / deg,
+          combine = _ + _, update = (_, m) => 150000L + 850L * m / 1000L,
+          rounds = 5, toFixpoint = false)
         .select(
-          when(col("node") % 2 === 0, "part").otherwise("supplier")
+          when(col("id") % 2 === 0, "part").otherwise("supplier")
             .as("node_type"),
-          expr("node div 2").as("key"), col("deg"), col("rank"))
-        .orderBy(col("node_type"), col("key"))
-    }),
+          expr("id div 2").as("key"), col("deg"), col("value").as("rank"))
+        .orderBy(col("node_type"), col("key"))),
 
     // Gopher/MassiveText-style rule-based quality gate — the cheap
     // heuristic bundle every pretraining pipeline runs BEFORE any
@@ -2542,9 +2461,8 @@ object ExtQueries {
     // tokenizer TRAINING (Sennrich et al. 2016): repeatedly find the
     // most frequent adjacent token pair across the whole corpus and
     // fuse its occurrences into one symbol. Three rounds unrolled
-    // (the x70 PageRank discipline: per-round dataflow, zero driver
-    // state — the winning pair rides a 1-row broadcast, never a
-    // collect).
+    // (per-round dataflow, zero driver state — the winning pair rides
+    // a 1-row broadcast, never a collect).
     //
     // The merge machinery lives in ext/BpeMerge (round-8 task #6).
     // THIS entry runs the a ≠ b policy — what the DuckDB oracle
@@ -3607,10 +3525,10 @@ object ExtQueries {
     // stay; expected retention ≈ (1 − 2⁻⁸)/8 ≈ 12.4% of the corpus.
     // Quality score = distinct-token ratio in ppm (the x57 metric;
     // at production the x101 classifier score drops in unchanged),
-    // normalized to a ppm PERCENTILE RANK via the x86/x91 two-level
-    // rank — score_ppm is value-bounded in [0, 1e6], so 4096-wide
-    // buckets cap the offset table at ≤245 rows and nothing
-    // corpus-sized ever crosses one partition. The Pareto draw is
+    // normalized to a ppm PERCENTILE RANK via [[bucketedRank]] —
+    // score_ppm is value-bounded in [0, 1e6], so 4096-wide buckets cap
+    // the offset table at ≤245 rows and nothing corpus-sized ever
+    // crosses one partition. The Pareto draw is
     // md5-seeded and quantized (round(pow(·), 6) BEFORE the integer
     // lift — the x99 pow discipline), so the kept SET is
     // hash-provable. Output is row-per-doc with the full audit trail
@@ -3624,20 +3542,9 @@ object ExtQueries {
           expr("CAST(size(array_distinct(t)) AS BIGINT) * 1000000" +
             " div n_toks"))
         .select(col("doc_id"), col("score_ppm"))
-        .withColumn("b", expr("score_ppm div 4096"))
       val totals = scored.agg(count(lit(1)).as("n_total"))
-      val offs = scored.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-      val wO = Window.orderBy(col("b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = offs
-        .withColumn("off", coalesce(sum(col("cnt")).over(wO), lit(0L)))
-        .select(col("b"), col("off"))
-      val wB = Window.partitionBy(col("b"))
-        .orderBy(col("score_ppm"), col("doc_id"))
-      scored
-        .join(broadcast(offsets), "b")
+      bucketedRank(scored, "score_ppm", "rnk")
         .crossJoin(broadcast(totals))
-        .withColumn("rnk", col("off") + row_number().over(wB).cast("long"))
         .withColumn("rank_ppm",
           expr("((rnk - 1) * 1000000) div greatest(n_total - 1, 1)"))
         .withColumn("u_ppm",
@@ -3799,8 +3706,7 @@ object ExtQueries {
     // ONE corpus-shaped aggregate into the items²-bounded pair table
     // (map-side combined — the corpus shuffle carries pair counts,
     // never judgments), then every MM round touches only the pair
-    // table + item-sized broadcasts (the x70 bounded-iteration
-    // posture); the corpus is never re-read. BT is invariant to
+    // table + item-sized broadcasts; the corpus is never re-read. BT is invariant to
     // scaling all (n_ij, W_i) by a common factor, so at judgment
     // counts beyond the e12 guard the pair table is divided down,
     // never re-derived.
@@ -3878,7 +3784,7 @@ object ExtQueries {
       // ONE exchange keyed on doc_id up front: the (doc_id, w) tf
       // aggregate AND doclen both group on doc_id-prefixed keys, so
       // the exploded token stream never crosses the wire (hash keys
-      // subset of grouping keys - the x70 recipe). sf1 A/B receipts
+      // subset of grouping keys). sf1 A/B receipts
       // (PLANS.md round-12 session 3): checkpoint-dropped 3.15 s vs
       // 2.44 s kept; this repartition flat at sf1 (40-token docs) but
       // strictly better at real document lengths, where the exploded

@@ -120,4 +120,14 @@ class ExtensionsSpec extends AnyFunSuite {
       unclamped
     assert(strays.isEmpty, strays.mkString(", "))
   }
+
+  test("hand-partitioned RDD loops live only in ext/GraphRounds") {
+    // a second graph-round loop drifts from the first's unpersist
+    // discipline — x70's inline copy leaked its adjacency
+    val strays = sources(new java.io.File("src/main"))
+      .filter(f => "HashPartitioner|zipPartitions|reduceByKey".r
+        .findFirstIn(text(f)).isDefined)
+      .map(_.getName)
+    assert(strays === Seq("GraphRounds.scala"))
+  }
 }
