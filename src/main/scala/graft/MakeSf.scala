@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.Text
 
@@ -38,10 +39,12 @@ import graft.ext.Text
   *    traffic in the same window, which is how event volume actually
   *    scales — sessions multiply by users, not by length).
   *
-  * Each table lands as a single `<name>.parquet` FILE (renamed out of
-  * the Spark staging dir) to match the driver layout that
-  * `scripts/check.py` and [[Tables]] expect; parquet row groups keep
-  * a single file splittable for Spark-side parallelism.
+  * Up to k=16 each table lands as a single `<name>.parquet` FILE
+  * (renamed out of the Spark staging dir) to match the driver layout
+  * that `scripts/check.py` expects; parquet row groups keep a single
+  * file splittable for Spark-side parallelism. Past k=16 it is a
+  * directory of part files (see `singleFile`). Either way every table
+  * must keep the schema [[Tables]] declares for it.
   */
 object MakeSf {
   // 10⁸ (round-15, was 10⁷): k=100 copies of 600k-row tables need
@@ -114,8 +117,14 @@ object MakeSf {
     def shifted(df: DataFrame, c: Int, keys: String*): DataFrame =
       keys.foldLeft(df)((d, key) => d.withColumn(key, col(key) + c * Shift))
 
-    def write(df: => DataFrame, name: String): Unit = {
+    def write(frame: => DataFrame, name: String): Unit = {
       if (!tablesFilter.forall(_.contains(name))) return
+      // a copy whose columns drift from the declared schema would fail
+      // later inside a query; refuse it before the write
+      val df = frame
+      def shape(s: StructType) = s.fields.toSeq.map(f => s"${f.name} ${f.dataType.sql}")
+      require(shape(df.schema) == shape(Tables.schemas(name)),
+        s"$name drifted from its declared schema: ${shape(df.schema).mkString(", ")}")
       val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val dest = new Path(out, s"$name.parquet")
       if (singleFile) {
@@ -132,7 +141,7 @@ object MakeSf {
         fs.delete(dest, true)
         df.write.mode("overwrite").parquet(dest.toString)
       }
-      println(s"MAKESF $name rows=${spark.read.parquet(dest.toString).count()}")
+      println(s"MAKESF $name rows=${Tables(spark, out, name).count()}")
     }
 
     write(Tables(spark, src, "region"), "region")

@@ -130,4 +130,13 @@ class ExtensionsSpec extends AnyFunSuite {
       .map(_.getName)
     assert(strays === Seq("GraphRounds.scala"))
   }
+
+  test("registry queries read tables only through Tables") {
+    // a direct read would skip the declared schema and start a
+    // footer-inference job while the query is being built
+    val strays = sources(new java.io.File("src/main/scala/graft/queries"))
+      .filter(f => """\.read\b""".r.findFirstIn(text(f)).isDefined)
+      .map(_.getName)
+    assert(strays.isEmpty, strays.mkString(", "))
+  }
 }
