@@ -43,19 +43,21 @@ def main(sf_dir: str, out_dir: str) -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    failures = 0
+    # Names, not a counter: a dump that failed in Verify is reported both
+    # here (no result to read) and in the manifest, and counts once.
+    failed = set()
     for name, sql in sorted(oracle.items()):
         try:
             exp = con.execute(sql).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}")
-            failures += 1
+            failed.add(name)
             continue
         try:
             got = pd.read_parquet(f"{out_dir}/{name}")
         except Exception as e:
             print(f"FAIL {name}: spark result missing: {e}")
-            failures += 1
+            failed.add(name)
             continue
         exp, got = norm(exp), norm(got)
         problems = []
@@ -99,7 +101,7 @@ def main(sf_dir: str, out_dir: str) -> int:
                             f"values[{c}] {int((~eq).sum())} differ, e.g. row "
                             f"{i}: exp={e_raw.iloc[i]!r} got={g_raw.iloc[i]!r}")
         if problems:
-            failures += 1
+            failed.add(name)
             print(f"FAIL {name} ({len(exp)} oracle rows)")
             for p in problems[:6]:
                 print(f"     {p}")
@@ -114,14 +116,14 @@ def main(sf_dir: str, out_dir: str) -> int:
         missing = [q for q in manifest["queries"] if q not in oracle]
         if manifest.get("failed"):
             print(f"VERIFY-FAILED dumps: {manifest['failed']}")
-            failures += len(manifest["failed"])
+            failed.update(manifest["failed"])
         if missing:
             print(f"NOTE: {len(missing)} registered queries have no oracle "
                   f"SQL (rows-only check upstream): {missing}")
     except FileNotFoundError:
         pass
-    print(f"\n{len(oracle) - failures}/{len(oracle)} queries match")
-    return 1 if failures else 0
+    print(f"\n{len(oracle.keys() - failed)}/{len(oracle)} queries match")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

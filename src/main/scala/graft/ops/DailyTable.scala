@@ -76,9 +76,20 @@ object DailyTable {
     * partition overwrite that replaces exactly the (month, day)
     * directory the fresh rollup lands in. Idempotent — re-running for
     * the same `asOf` rewrites the same partition with the same rows.
+    *
+    * The input is the `dt=asOf` partition of one hourly feed: 24 rows a
+    * day in the reference, a few files of them once each hourly batch
+    * has landed its own. After the day filter every row shares one `dt`,
+    * so the aggregate has one group; `coalesce(1)` hands it one input
+    * partition, which already satisfies the aggregate's distribution.
+    * Catalyst then plans no exchange: the day is read, rolled up and
+    * written by one task in one job, with no shuffle-map stage and no
+    * adaptive re-plan in front of the write. [[bootstrap]] and
+    * [[backfill]] span many days and keep the parallel hash aggregate.
     */
   def upsert(hourly: DataFrame, path: String, asOf: Date): Unit =
-    write(DailyRollup.aggregate(hourly, Some(asOf)), path, dynamic = true)
+    write(DailyRollup.aggregate(hourly.filter(col("dt") === lit(asOf)).coalesce(1)),
+      path, dynamic = true)
 
   /** The existence branch of Load-gcs-to-bq/main.py:87-91. */
   def sync(spark: SparkSession, hourly: DataFrame, path: String, asOf: Date): Unit =

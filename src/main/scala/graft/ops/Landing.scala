@@ -5,6 +5,7 @@ import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** K1 of SURVEY.md §2b: the hourly JSON landing blob — CF#1 serializes
   * the cleaned record to a file and uploads it to the landing bucket
@@ -30,8 +31,12 @@ object Landing {
     s"hourly-weather-data-json-${fmt.format(Instant.ofEpochMilli(utcMillis))}.json"
 
   /** Serialize a (small) cleaned batch as one NDJSON landing blob;
-    * returns the file written. `toJSON` preserves the nested structure
-    * exactly as `spark.read.schema(raw).json` re-reads it.
+    * returns the file written. Each line is `to_json(struct(*))` of a
+    * row, the same bytes `toJSON` writes, and it preserves the nested
+    * structure exactly as `spark.read.schema(raw).json` re-reads it.
+    * Over a frame built by [[graft.sources.WeatherApi.fetchFrame]] the
+    * serialization folds into a local relation, so the collect runs no
+    * Spark job.
     *
     * The blob is written to a hidden `.`-prefixed temp file in the
     * landing dir, which a drain's listing skips, and renamed to its name
@@ -39,7 +44,8 @@ object Landing {
     * written.
     */
   def land(cleaned: DataFrame, landingDir: String, utcMillis: Long): Path = {
-    val lines = cleaned.toJSON.collect() // one row per fetch — driver-sized
+    val lines = cleaned.select(to_json(struct(col("*"))))
+      .collect().map(_.getString(0)) // one row per fetch — driver-sized
     val dir = Paths.get(landingDir)
     Files.createDirectories(dir)
     val name = blobName(utcMillis)

@@ -1,7 +1,14 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+
+import graft.schema.WeatherSchema
 
 /** §2j of SURVEY.md: the cross-cutting logging dataflow.
   *
@@ -11,9 +18,11 @@ import org.apache.spark.sql.functions._
   * in GCS (K7, /root/reference/Load-logs/main.py:43-50). Envelope fields:
   * Load-Data-From-API/main.py:32-38,192-195.
   *
-  * Spark mapping: a typed Dataset[LogEvent] appended as JSON partitioned
-  * by (log_type, message_type) — identical directory contract, but with
-  * Spark's atomic job commit instead of per-message blob uploads.
+  * Spark mapping: the same directory contract, `log_type=…/message_type=…/`
+  * with the partition columns left out of the file, so
+  * `spark.read.json` discovers them. [[append]] writes one JSON file per
+  * message, as the reference's sink uploads one blob per message, and
+  * runs no Spark job; [[appendStream]] is the streaming form.
   * `message_type` is normalized to lowercase: the reference emits "Error"
   * from the cleanup job (Cleanup-job/main.py:60) and "error" everywhere
   * else — an inconsistency SURVEY.md §2j says to fix, not reproduce.
@@ -43,14 +52,50 @@ object LogEvents {
     events.withColumn("message_type", lower(col("message_type"))).as[LogEvent]
   }
 
-  def append(events: Dataset[LogEvent], root: String): Unit =
-    normalize(events).write
-      .partitionBy("log_type", "message_type")
-      .mode("append")
-      .json(root)
+  /** The partition columns of the sink, in directory order. */
+  private val PartitionCols = Seq("log_type", "message_type")
+
+  /** Land each event as its own file, the K7 contract
+    * (Load-logs/main.py:23-32,48-50):
+    * `<root>/log_type=<t>/message_type=<m>/hourly_weather_data_<m>_<ms>_<uuid>.json`.
+    *
+    * The line is [[normalize]] plus `to_json` over the events' local
+    * relation, without the partition columns: the bytes Spark's JSON
+    * writer would put in the file, computed on the driver with no job.
+    * Each file is written through the Hadoop FS under a hidden
+    * `.`-prefixed temp name, which readers skip, and renamed into place,
+    * so a reader sees a whole message or none. Messages land one by one:
+    * a failure part-way leaves the earlier ones in place.
+    */
+  def append(spark: SparkSession, events: Seq[LogEvent], root: String): Unit = {
+    import spark.implicits._
+    val dataCols = WeatherSchema.logEvent.fieldNames
+      .filterNot(PartitionCols.contains).map(col).toSeq
+    val rows = normalize(events.toDS())
+      .select(PartitionCols.map(col) :+ to_json(struct(dataCols: _*)): _*)
+      .collect()
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    rows.foreach { r =>
+      val (logType, messageType, line) = (r.getString(0), r.getString(1), r.getString(2))
+      val dir = new Path(rootPath,
+        ExternalCatalogUtils.getPartitionPathString("log_type", logType) + "/" +
+          ExternalCatalogUtils.getPartitionPathString("message_type", messageType))
+      val name = s"hourly_weather_data_${ExternalCatalogUtils.escapePathName(
+        String.valueOf(messageType))}_${System.currentTimeMillis()}_${UUID.randomUUID()}.json"
+      val tmp = new Path(dir, s".$name.tmp")
+      try {
+        val out = fs.create(tmp, /* overwrite = */ false)
+        try out.write((line + "\n").getBytes(UTF_8))
+        finally out.close()
+        if (!fs.rename(tmp, new Path(dir, name)))
+          throw new java.io.IOException(s"could not land log message $name under $dir")
+      } finally fs.delete(tmp, false)
+    }
+  }
 
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.schema(graft.schema.WeatherSchema.logEvent).json(root)
+    spark.read.schema(WeatherSchema.logEvent).json(root)
 
   /** K6 envelope serialization — the `json.dumps(MESSAGE_DATA)` half of P7
     * (Load-Data-From-API/main.py:197): one JSON string per event, the shape
@@ -63,7 +108,7 @@ object LogEvents {
   def fromEnvelope(envelopes: DataFrame): Dataset[LogEvent] = {
     import envelopes.sparkSession.implicits._
     envelopes
-      .select(from_json(col("value"), graft.schema.WeatherSchema.logEvent).as("e"))
+      .select(from_json(col("value"), WeatherSchema.logEvent).as("e"))
       .select(col("e.*"))
       .as[LogEvent]
   }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json}
 
 import graft.schema.WeatherSchema
 
@@ -107,9 +108,17 @@ object WeatherApi {
 
   /** Parse one fetched body against the DECLARED API schema — never
     * schema inference (SURVEY.md §1): absent branches become null
-    * leaves exactly as BigQuery's schema'd load would produce.
+    * leaves exactly as BigQuery's schema'd load would produce, and a
+    * malformed body becomes one all-null row.
+    *
+    * The body is parsed by `from_json` over a one-row local Dataset, so
+    * the frame stays a projection of a `LocalRelation`: the optimizer
+    * folds it (and any projection on top, such as
+    * [[graft.ops.CleanWeather.clean]]) into a local relation, and
+    * collecting it runs on the driver without a Spark job.
     */
   def fetchFrame(spark: SparkSession, fetcher: Fetcher): DataFrame =
-    spark.read.schema(WeatherSchema.api)
-      .json(spark.createDataset(Seq(fetcher.fetch()))(Encoders.STRING))
+    spark.createDataset(Seq(fetcher.fetch()))(Encoders.STRING)
+      .select(from_json(col("value"), WeatherSchema.api).as("body"))
+      .select(col("body.*"))
 }

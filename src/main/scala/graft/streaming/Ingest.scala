@@ -42,6 +42,12 @@ import graft.schema.WeatherSchema
   * recounted: the raw write observes its row counts and its set of days
   * in the same pass, so the driver receives one small row per batch,
   * bounded by days-per-batch and independent of batch row count.
+  *
+  * Per event (one new landing blob of one day, daily table present) a
+  * call launches two Spark jobs: the raw write and the daily write.
+  * The one-day upsert reads, rolls up and writes its day in one job
+  * ([[DailyTable.upsert]]), and the log envelope is written through the
+  * Hadoop FS without a job ([[LogEvents.append]]).
   */
 object Ingest {
 
@@ -75,18 +81,18 @@ object Ingest {
     }
 
   /** §2j: the success/error envelope every reference function publishes
-    * (Load-gcs-to-bq/main.py:96-110), emitted per batch.
+    * (Load-gcs-to-bq/main.py:96-110), emitted per batch as one JSON file
+    * and no Spark job.
     */
   private def publishLog(
       spark: SparkSession, logRoot: Option[String], messageType: String,
       message: String): Unit =
     logRoot.foreach { root =>
-      import spark.implicits._
-      LogEvents.append(Seq(LogEvent(
+      LogEvents.append(spark, Seq(LogEvent(
         project = "graft", service = "ingest", process = "ingest_batch",
         runtime = s"spark ${spark.version}", log_type = LogEvents.BqLoadLogging,
         file_name = None, gcs_uri = None, bq_uri = None,
-        message_type = messageType, message = message)).toDS(), root)
+        message_type = messageType, message = message)), root)
     }
 
   /** One batch: K2 append, then D2/D3 transform per affected day —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructType}
 
 import graft.ext.{KMeansLite, Retrieval, Similarity, Text}
 
@@ -52,6 +53,26 @@ object StreamRetrieve {
     */
   val DfBuckets = 64
 
+  /** The five index tables as [[buildIndex]] and [[updateIndex]] write
+    * them, partition columns last. Every read goes through [[table]]
+    * with these, so no read starts a job to infer a schema from parquet
+    * footers; the writers cast `doc_id` and `v` to the declared types.
+    */
+  private[graft] val IndexSchemas: Map[String, StructType] = Map(
+    "postings" -> "w STRING, doc_id BIGINT, tf BIGINT",
+    "doclen" -> "doc_id BIGINT, dl BIGINT",
+    "df" -> "w STRING, df BIGINT, b INT",
+    "stats" -> "n_docs BIGINT, total_dl BIGINT",
+    "vecs" -> "doc_id BIGINT, v ARRAY<DOUBLE>, cell INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  private def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(IndexSchemas(name)).parquet(s"$dir/$name")
+
+  /** The index's doc ids and vectors in their declared types. */
+  private def docId = col("doc_id").cast(LongType).as("doc_id")
+  private def vector = col("v").cast(ArrayType(DoubleType)).as("v")
+
   private[graft] def dfBucket(w: org.apache.spark.sql.Column) =
     pmod(xxhash64(w), lit(DfBuckets.toLong)).cast("int")
 
@@ -70,21 +91,21 @@ object StreamRetrieve {
       cents: Seq[Seq[Double]], dir: String): Unit = {
     val spark = docs.sparkSession
     val toks = docs
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
+      .select(docId, Text.tokens(col("text")).as("toks"))
       .localCheckpoint() // tokenize once: postings + doclen
     toks.select(col("doc_id"), explode(col("toks")).as("w"))
       .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
       .write.mode("overwrite").parquet(s"$dir/postings")
     toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
       .write.mode("overwrite").parquet(s"$dir/doclen")
-    spark.read.parquet(s"$dir/postings")
+    table(spark, dir, "postings")
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
       .withColumn("b", dfBucket(col("w")))
       .write.partitionBy("b").mode("overwrite").parquet(s"$dir/df")
-    spark.read.parquet(s"$dir/doclen")
+    table(spark, dir, "doclen")
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
       .write.mode("overwrite").parquet(s"$dir/stats")
-    vecs.select(col("doc_id"), col("v"),
+    vecs.select(docId, vector,
         KMeansLite.assign(col("v"), cents).as("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/vecs")
   }
@@ -114,14 +135,14 @@ object StreamRetrieve {
       cents: Seq[Seq[Double]], dir: String): Unit = {
     val spark = docs.sparkSession
     val toks = docs
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
+      .select(docId, Text.tokens(col("text")).as("toks"))
       .localCheckpoint()
     val newPost = toks
       .select(col("doc_id"), explode(col("toks")).as("w"))
       .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
       .localCheckpoint() // read 2×: append + df delta
     // stats delta BEFORE the appends (exact: batch docs are new)
-    val old = spark.read.parquet(s"$dir/stats").head()
+    val old = table(spark, dir, "stats").head()
     // coalesce: an empty update batch is a no-op, not a null sum
     val add = toks.agg(count(lit(1)),
       coalesce(sum(size(col("toks")).cast("long")), lit(0L))).head()
@@ -138,7 +159,7 @@ object StreamRetrieve {
       .localCheckpoint()
     val touched = delta.select(col("b")).distinct()
       .collect().map(_.getInt(0)).toSeq // ≤ DfBuckets rows
-    spark.read.parquet(s"$dir/df")
+    table(spark, dir, "df")
       .filter(col("b").isin(touched: _*))
       .unionByName(delta)
       .groupBy(col("w"), col("b")).agg(sum(col("df")).as("df"))
@@ -150,7 +171,7 @@ object StreamRetrieve {
       .write.partitionBy("b")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(s"$dir/df")
-    vecs.select(col("doc_id"), col("v"),
+    vecs.select(docId, vector,
         KMeansLite.assign(col("v"), cents).as("cell"))
       .write.partitionBy("cell").mode("append").parquet(s"$dir/vecs")
   }
@@ -169,10 +190,10 @@ object StreamRetrieve {
   def serveBatch(spark: SparkSession, queries: DataFrame, dir: String,
       cents: Seq[Seq[Double]], nProbe: Int, legK: Int,
       topK: Int): DataFrame = {
-    val postings = spark.read.parquet(s"$dir/postings")
-    val dfTbl = spark.read.parquet(s"$dir/df")
-    val doclen = spark.read.parquet(s"$dir/doclen")
-    val stats = spark.read.parquet(s"$dir/stats")
+    val postings = table(spark, dir, "postings")
+    val dfTbl = table(spark, dir, "df")
+    val doclen = table(spark, dir, "doclen")
+    val stats = table(spark, dir, "stats")
 
     // sparse leg: batch terms (distinct per query) + their df, one
     // broadcast into the postings equi-join
@@ -201,7 +222,7 @@ object StreamRetrieve {
       .withColumn("pr", row_number().over(wP))
       .filter(col("pr") <= nProbe)
       .select(col("query_id"), col("qv"), col("cell").cast("int").as("cell"))
-    val vecs = spark.read.parquet(s"$dir/vecs")
+    val vecs = table(spark, dir, "vecs")
     val wD = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_e6").desc, col("doc_id"))
     val dense = vecs.join(broadcast(probes), "cell")

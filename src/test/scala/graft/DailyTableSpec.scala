@@ -3,7 +3,11 @@ package graft
 import java.nio.file.Files
 import java.sql.Date
 
+import org.apache.spark.grafttest.{ExecutedPlans, JobCount}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +20,9 @@ import graft.schema.WeatherSchema
   */
 class DailyTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Walks adaptive plans and their query stages. */
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private def hourlyRow(dt: String, time: String, temp: Double): Row =
     Row(
@@ -122,6 +129,25 @@ class DailyTableSpec extends AnyFunSuite {
     DailyTable.upsert(hourly(augRows: _*), path, Date.valueOf("2022-08-30"))
     assert(DailyTable.read(spark, path).schema ==
       spark.read.parquet(path).schema) // names, types, nullability, order
+  }
+
+  test("the one-day upsert plans no exchange; bootstrap keeps its hash exchange") {
+    val path = tmp()
+    val bootstrapPlans = ExecutedPlans(spark)(DailyTable.bootstrap(hourly(augRows: _*), path))
+    val hashed = bootstrapPlans.flatMap(p => Aqe.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    })
+    assert(hashed.nonEmpty, bootstrapPlans.mkString("\n"))
+
+    var jobs = 0
+    val upsertPlans = ExecutedPlans(spark) {
+      jobs = JobCount(spark.sparkContext)(
+        DailyTable.upsert(hourly(augRows: _*), path, Date.valueOf("2022-08-30")))
+    }
+    assert(upsertPlans.nonEmpty)
+    assert(upsertPlans.forall(p => Aqe.collect(p) { case e: Exchange => e }.isEmpty),
+      upsertPlans.mkString("\n"))
+    assert(jobs == 1) // read, roll up and write the day in one job
   }
 
   test("upsert does not leak partitionOverwriteMode into the session") {

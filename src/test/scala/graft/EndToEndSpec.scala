@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.grafttest.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{CleanWeather, DailyTable, Landing}
+import graft.schema.WeatherSchema
 import graft.sources.WeatherApi
 import graft.streaming.Ingest
 
@@ -64,5 +66,47 @@ class EndToEndSpec extends AnyFunSuite {
     val logged = graft.ops.LogEvents.read(spark, logs)
     assert(logged.filter(col("message_type") === "success").count() >= 1)
     assert(logged.filter(col("log_type") =!= "bq-load-logging").count() == 0)
+  }
+
+  /** The schema'd file reader that parsed API bodies before `fetchFrame`
+    * moved to `from_json`: the reference its frames are checked against.
+    */
+  private def readerFrame(body: String) = {
+    import spark.implicits._
+    spark.read.schema(WeatherSchema.api).json(Seq(body).toDS())
+  }
+
+  test("fetch → clean → land launches no job and lands toJSON's bytes") {
+    val landing = Files.createTempDirectory("graft-e2e-jobless").toString
+    val utc = 1661745600000L
+    val (dt, ct) = CleanWeather.kolkataStamps(utc)
+    var blob: java.nio.file.Path = null
+    val jobs = JobCount(spark.sparkContext) {
+      val cleaned = CleanWeather.clean(
+        WeatherApi.fetchFrame(spark, new WeatherApi.ReplayFetcher(Seq(apiBody(300.15)))),
+        dt, ct)
+      blob = Landing.land(cleaned, landing, utc)
+    }
+    assert(jobs == 0)
+    val expected = CleanWeather.clean(readerFrame(apiBody(300.15)), dt, ct)
+      .toJSON.collect().mkString("\n")
+    assert(new String(Files.readAllBytes(blob), "UTF-8") == expected)
+  }
+
+  test("fetchFrame parses every body as the schema'd reader does") {
+    val bodies = Seq(
+      apiBody(300.15),
+      """{"this is": not even json""",                       // malformed
+      """{"main":{"temp":"warm"},"name":"Bankura"}""",         // wrong leaf type
+      """{"coord":{"lon":87.0},"rain":{"1h":0.5}}""")          // absent branches
+    for (body <- bodies) {
+      val got = WeatherApi.fetchFrame(spark, new WeatherApi.ReplayFetcher(Seq(body)))
+      val want = readerFrame(body)
+      assert(got.schema == want.schema)
+      assert(got.collect().toSeq == want.collect().toSeq, body)
+    }
+    val malformed = WeatherApi.fetchFrame(spark,
+      new WeatherApi.ReplayFetcher(Seq(bodies(1)))).collect()
+    assert(malformed.length == 1 && malformed.head.toSeq.forall(_ == null))
   }
 }

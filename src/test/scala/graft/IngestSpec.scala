@@ -138,10 +138,11 @@ class IngestSpec extends AnyFunSuite {
     assert(msg.contains("days=2022-08-29,2022-08-30,")) // observed, sorted
   }
 
-  test("ingesting one day into an existing daily table launches 4 jobs") {
-    // raw write, the rollup's shuffle stage, daily write, log write: the
-    // batch is observed rather than cached and counted, both tables are
-    // read with their known schemas, and the daily write is unsorted.
+  test("ingesting one day into an existing daily table launches 2 jobs") {
+    // the raw write and the daily write: the batch is observed rather
+    // than cached and counted, both tables are read with their known
+    // schemas, the one-day rollup plans no shuffle, and the log envelope
+    // is written without a job.
     val root = Files.createTempDirectory("graft-ingest-jobs")
     val (raw, daily, logs) = (root.resolve("raw").toString,
       root.resolve("daily").toString, root.resolve("logs").toString)
@@ -151,15 +152,16 @@ class IngestSpec extends AnyFunSuite {
     val jobs = JobCount(spark.sparkContext) {
       Ingest.ingestBatch(spark, batch, 2L, raw, daily, Some(logs))
     }
-    assert(jobs == 4)
+    assert(jobs == 2)
     assert(DailyTable.read(spark, daily).select("avg_temp").collect()
       .map(_.getDouble(0)).toSeq == Seq(28.0))
   }
 
-  test("runOnce of one new landing file launches 4 jobs; nothing new launches 0") {
+  test("runOnce of one new landing file launches 2 jobs; nothing new launches 0") {
     // the drain lists the landing dir and reads its own log without a
     // job, and runs the batch on the caller's thread: what runOnce
-    // launches is exactly ingestBatch's 4 jobs, and no streaming query
+    // launches is exactly ingestBatch's raw write and daily write, and
+    // no streaming query
     val root = Files.createTempDirectory("graft-ingest-drain-jobs")
     val landing = Files.createDirectories(root.resolve("landing"))
     val (raw, daily, ckpt, logs) = (root.resolve("raw").toString,
@@ -171,7 +173,7 @@ class IngestSpec extends AnyFunSuite {
     run() // bootstraps the daily table
     writeLanding(landing, "hourly-weather-data-json-20220829-110000.json",
       Seq(ndjson("2022-08-29", "11:00:00", 302.15)))
-    assert(JobCount(spark.sparkContext)(run()) == 4)
+    assert(JobCount(spark.sparkContext)(run()) == 2)
     val envelopes = LogEvents.read(spark, logs).count()
     assert(JobCount(spark.sparkContext)(run()) == 0)
     assert(LogEvents.read(spark, logs).count() == envelopes)

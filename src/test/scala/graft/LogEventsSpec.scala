@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.grafttest.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,7 +27,7 @@ class LogEventsSpec extends AnyFunSuite {
 
   test("append partitions by (log_type, message_type) and lowercases the type") {
     val root = Files.createTempDirectory("graft-logs").toString + "/logs"
-    LogEvents.append(events.toDS(), root)
+    LogEvents.append(spark, events, root)
     val dirs = new java.io.File(root).listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(dirs == Set(s"log_type=${LogEvents.ApiLogging}",
       s"log_type=${LogEvents.BqCleanupLogging}"))
@@ -36,6 +39,19 @@ class LogEventsSpec extends AnyFunSuite {
     assert(back.count() == 2)
     assert(back.filter(col("message_type") === "error")
       .select("message").as[String].head() == "boom")
+  }
+
+  test("append launches no job, leaves no temp file, and reads back the events") {
+    val root = Files.createTempDirectory("graft-logs-jobless").toString + "/logs"
+    assert(JobCount(spark.sparkContext)(LogEvents.append(spark, events, root)) == 0)
+    val files = Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
+    assert(!files.exists(_.contains(".tmp")), files)
+    assert(files.count(_.endsWith(".json")) == events.size) // one file per message
+    val back = LogEvents.read(spark, root).as[LogEvent].collect().sortBy(_.log_type)
+    val expected = events.map(e => e.copy(message_type = e.message_type.toLowerCase))
+      .sortBy(_.log_type)
+    assert(back.toSeq == expected)
   }
 
   test("envelope round trip preserves every field (P7 both halves)") {

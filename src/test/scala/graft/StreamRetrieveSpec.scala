@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.grafttest.JobCount
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,9 +56,19 @@ class StreamRetrieveSpec extends AnyFunSuite {
     val qRows = queries.as[(Long, Seq[String], Seq[Double])]
       .collect().sortBy(_._1).toSeq
 
-    val batchOut = StreamRetrieve.serveBatch(spark, queries, dir, cents,
+    // the index is read with its declared schemas: the ones inference
+    // gives, and building the serve frame reads no parquet footer
+    StreamRetrieve.IndexSchemas.foreach { case (name, declared) =>
+      def shape(s: org.apache.spark.sql.types.StructType) =
+        s.fields.map(f => f.name -> f.dataType.sql).toSeq // nullability aside
+      assert(shape(spark.read.parquet(s"$dir/$name").schema) == shape(declared), name)
+    }
+    var served: org.apache.spark.sql.DataFrame = null
+    assert(JobCount(spark.sparkContext) {
+      served = StreamRetrieve.serveBatch(spark, queries, dir, cents,
         nProbe = 2, legK = 20, topK = 10)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
+    } == 0)
+    val batchOut = served.as[(Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(batchOut.nonEmpty)
     assert(batchOut.groupBy(_._1).size === 6)
 
