@@ -48,6 +48,16 @@ import graft.schema.WeatherSchema
   * The one-day upsert reads, rolls up and writes its day in one job
   * ([[DailyTable.upsert]]), and the log envelope is written through the
   * Hadoop FS without a job ([[LogEvents.append]]).
+  *
+  * Its file operations per event, each file with its `.crc`: the
+  * checkpoint's and the daily table's writer locks
+  * ([[graft.ops.SingleWriter]]); for each of the two writes, the staging
+  * and `_temporary` dirs, the partition dirs, the part file and
+  * `_SUCCESS`; the drain's log entry and the log envelope, each a temp
+  * file renamed into place. Under `file:` these go through
+  * [[graft.io.NioLocalFileSystem]], which sets modes in-process, so
+  * none of them forks a process (Hadoop's own local filesystem forks
+  * `chmod` for each, about 30 per event).
   */
 object Ingest {
 
