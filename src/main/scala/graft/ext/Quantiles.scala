@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * measure: bin = value div binWidth, state = one (bin, count) row per
   * occupied bin — bounded by domain/binWidth regardless of corpus
   * size, mergeable by plain count addition (shards and micro-batches
-  * sum into the same grid, which is what makes the streaming twin
-  * StreamQuantile exact across batch boundaries).
+  * sum into the same grid, which is what makes the streaming form,
+  * StreamQuantile, exact across batch boundaries).
   *
   * Quantile read-off: for target rank t = ceil(q·N), the answer bin is
   * the FIRST bin whose cumulative count reaches t, and the estimate is
@@ -33,17 +33,23 @@ import org.apache.spark.sql.functions._
   */
 object Quantiles {
 
-  /** The (bin, cnt) histogram of `value div binWidth`. Integer `div`,
-    * not double division: the DuckDB oracle floors with `//` on
-    * integers, and a truncated IEEE quotient can differ from integer
-    * division for non-power-of-two widths or values near 2^53 — the
-    * repo-wide integer-div discipline (round-12 advice).
+  /** The (keys…, bin, cnt) histogram of `value div binWidth`; null
+    * values are skipped like builtin aggregates skip nulls. `keys`
+    * group the histogram (a stream passes its event-time window,
+    * [[graft.streaming.StreamQuantile]]); none gives one histogram.
+    * Integer `div`, not double division: the DuckDB oracle floors with
+    * `//` on integers, and a truncated IEEE quotient can differ from
+    * integer division for non-power-of-two widths or values near 2^53
+    * — the repo-wide integer-div discipline (round-12 advice).
     */
-  def histogram(df: DataFrame, value: Column, binWidth: Long): DataFrame =
-    df.select(value.cast("long").as("_v"))
+  def histogram(df: DataFrame, value: Column, binWidth: Long,
+      keys: Column*): DataFrame = {
+    require(binWidth > 0, "binWidth must be positive")
+    df.withColumn("_v", value.cast("long"))
       .filter(col("_v").isNotNull)
-      .select(expr(s"_v div $binWidth").as("bin"))
-      .groupBy(col("bin")).agg(count(lit(1)).as("cnt"))
+      .groupBy(keys :+ expr(s"_v div $binWidth").as("bin"): _*)
+      .agg(count(lit(1)).as("cnt"))
+  }
 
   /** Quantile estimates from a (bin, cnt) histogram: one row per
     * requested q (in ppm, so the targets are exact integers in both

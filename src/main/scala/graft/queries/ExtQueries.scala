@@ -3002,7 +3002,7 @@ object ExtQueries {
     // frequency, x77 HLL = constant-space distinct): "what document
     // length sits at quantile q" WITHOUT a corpus-sized sort. State is
     // one count per occupied fixed-width bin (domain-bounded,
-    // mergeable by addition — StreamQuantile is the streaming twin);
+    // mergeable by addition — StreamQuantile is this histogram per window);
     // the read-off picks the first bin whose cumulative count reaches
     // t = ceil(q·N) and reports its upper edge — exact in RANK,
     // bounded in VALUE (est − exact < binWidth, proven in

@@ -33,12 +33,10 @@ object EventWindows {
   def windowedStats(
       events: DataFrame, windowLen: String = "1 hour",
       watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .select(col("window.start").as("window_start"),
-        col("event_type"), col("n"), col("total_value"))
+    Windowed.aggregate(events, "ts", windowLen, watermark) { (in, keys) =>
+      in.groupBy(keys :+ col("event_type"): _*)
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    }.drop("window_end")
 
   final case class SessionEvent(user_id: Long, ts: Timestamp, value: Double)
   final case class Session(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.ext.Cms
 
@@ -16,10 +15,10 @@ import graft.ext.Cms
   * batches is the aggregation itself), and the watermark expires
   * closed windows, so total store size is depth·width · open-windows.
   *
-  * Same determinism story as the batch grid: buckets are md5-derived,
-  * counters integer — a replayed stream produces the identical grid,
-  * and a batch recompute of a closed window (Cms.counterGrid over the
-  * same rows) matches it cell for cell (StreamCmsSpec).
+  * The grid IS [[Cms.counterGrid]] with the window as its key, so a
+  * closed window's cells equal the batch grid of the same rows cell
+  * for cell (StreamCmsSpec). Probing an emitted grid is the batch
+  * [[Cms.estimate]] keyed by `window_start`.
   */
 object StreamCms {
 
@@ -32,54 +31,7 @@ object StreamCms {
       df: DataFrame, tsCol: String, itemCol: String,
       windowLength: String, watermark: String,
       depth: Int, width: Int): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .select(col(tsCol), col(itemCol).as("item"))
-      .withColumn("row", explode(sequence(lit(0), lit(depth - 1))))
-      .groupBy(window(col(tsCol), windowLength), col("row"),
-        Cms.bucket(col("item"), col("row"), width).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("row"), col("bucket"), col("cnt"))
-
-  /** Batch-side probe of emitted window grids: the CMS estimate of
-    * each candidate item in each window (0 for cells the window never
-    * touched). Candidates are a BOUNDED set — they are crossed with
-    * the window list and broadcast against the grid.
-    */
-  def probe(
-      grid: DataFrame, candidates: DataFrame, itemCol: String,
-      depth: Int, width: Int): DataFrame = {
-    // the window list and the grid share lineage — RENAME every column
-    // on both derivations (an alias alone keeps ambiguous attribute
-    // ids), with an internal prefix so candidate frames carrying their
-    // own row/bucket/cnt columns can't collide either. The same prefix
-    // covers the window spine; the one name we cannot internalize is
-    // the OUTPUT column `window_start`, so a candidate frame already
-    // carrying it is rejected up front instead of producing a
-    // duplicate-named (or silently mis-grouped) result.
-    require(!candidates.columns.contains("window_start"),
-      "probe candidates must not carry a window_start column — " +
-      "rename it before probing (it is the probe's output window key)")
-    require(!candidates.columns.exists(_.startsWith("__cms_")),
-      "probe candidates must not carry __cms_-prefixed columns")
-    val g = grid.select(col("window_start").as("__cms_gws"),
-      col("row").as("__cms_grow"), col("bucket").as("__cms_gbucket"),
-      col("cnt").as("__cms_cnt"))
-    val cells = candidates
-      .withColumn("__cms_row", explode(sequence(lit(0), lit(depth - 1))))
-      .withColumn("__cms_bucket",
-        Cms.bucket(col(itemCol), col("__cms_row"), width))
-      .crossJoin(
-        grid.select(col("window_start").as("__cms_probe_window")).distinct())
-    cells
-      .join(g,
-        col("__cms_probe_window") === col("__cms_gws") &&
-          col("__cms_row") === col("__cms_grow") &&
-          col("__cms_bucket") === col("__cms_gbucket"),
-        "left")
-      .groupBy(col("__cms_probe_window").as("window_start") +:
-        candidates.columns.toIndexedSeq.map(col): _*)
-      .agg(min(coalesce(col("__cms_cnt"), lit(0L))).as("cms_est"))
-  }
+    Windowed.aggregate(df, tsCol, windowLength, watermark) { (in, keys) =>
+      Cms.counterGrid(in, itemCol, depth, width, keys: _*)
+    }
 }

@@ -32,7 +32,7 @@ object StreamDq {
     // that don't collide with the columns this function itself emits
     require(checks.forall(_._1.matches("[A-Za-z0-9_]+")),
       "check names must match [A-Za-z0-9_]+")
-    val reserved = Set("n_rows", "window", "window_start",
+    val reserved = Set("n_rows", "window", "window_start", "window_end",
       "check_name", "n_violations")
     require(checks.forall(c => !reserved.contains(c._1)),
       s"check names must avoid ${reserved.mkString(", ")}")
@@ -42,11 +42,10 @@ object StreamDq {
     val stackArgs = checks
       .map { case (name, _) => s"'$name', `$name`" }
       .mkString(", ")
-    df.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-      .select(col("window.start").as("window_start"), col("n_rows"),
-        expr(s"stack(${checks.size}, $stackArgs)" +
-          " as (check_name, n_violations)"))
+    Windowed.aggregate(df, tsCol, windowLength, watermark) { (in, keys) =>
+      in.groupBy(keys: _*).agg(count(lit(1)).as("n_rows"), aggs: _*)
+    }.select(col("window_start"), col("n_rows"),
+      expr(s"stack(${checks.size}, $stackArgs)" +
+        " as (check_name, n_violations)"))
   }
 }

@@ -36,13 +36,10 @@ object StreamDrift {
   def windowedCounts(
       df: DataFrame, tsCol: String, srcCol: String, tokCol: String,
       windowLength: String, watermark: String): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength),
-        col(srcCol).as("source"), col(tokCol).as("token"))
-      .agg(count(lit(1)).as("c_s"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("source"), col("token"), col("c_s"))
+    Windowed.aggregate(df, tsCol, windowLength, watermark) { (in, keys) =>
+      in.groupBy(keys :+ col(srcCol).as("source") :+ col(tokCol).as("token"): _*)
+        .agg(count(lit(1)).as("c_s"))
+    }
 
   /** KL(source ‖ reference) per (window, source) over emitted counts;
     * `reference` is a static (token, c) distribution. Tokens absent

@@ -24,7 +24,7 @@ import graft.ext.Hll
 object StreamHll {
 
   /** Per event-time window (and optional extra key NAMES — the
-    * [[StreamKmv.windowedDistinct]] contract): the HLL estimate of
+    * [[Windowed.aggregate]] contract): the HLL estimate of
     * `valueCol` distinct cardinality, with the zero-register count and
     * exact integer register sum exposed for auditing. Append mode: one
     * emission per window once the watermark passes.
@@ -33,20 +33,19 @@ object StreamHll {
       df: DataFrame, tsCol: String, valueCol: String,
       windowLength: String, watermark: String,
       extraKeys: String*): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      // skip null values like the builtin distinct aggregates do —
-      // without this a single null event would null h32 and crash the
-      // non-nullable Long decode inside the typed Aggregator at
-      // runtime (round-10 advice finding)
-      .filter(col(valueCol).isNotNull)
-      .groupBy(window(col(tsCol), windowLength) +: extraKeys.map(col): _*)
-      .agg(Hll.hll(Hll.h32(col(valueCol))).as("regs"))
-      .select(
-        (col("window.start").as("window_start") +:
-          col("window.end").as("window_end") +:
-          extraKeys.map(col)) ++ Seq(
-          Hll.zeroCount(col("regs")).as("v_zero"),
-          Hll.registerSum("regs").as("s_int")): _*)
-      .withColumn("distinct_est",
-        Hll.estimate(col("s_int"), col("v_zero")))
+    Windowed.aggregate(df, tsCol, windowLength, watermark, extraKeys) {
+      (in, keys) => in
+        // skip null values like the builtin distinct aggregates do —
+        // without this a single null event would null h32 and crash the
+        // non-nullable Long decode inside the typed Aggregator at
+        // runtime (round-10 advice finding)
+        .filter(col(valueCol).isNotNull)
+        .groupBy(keys: _*)
+        .agg(Hll.hll(Hll.h32(col(valueCol))).as("regs"))
+        .withColumn("v_zero", Hll.zeroCount(col("regs")))
+        .withColumn("s_int", Hll.registerSum("regs"))
+        .drop("regs")
+        .withColumn("distinct_est",
+          Hll.estimate(col("s_int"), col("v_zero")))
+    }
 }

@@ -23,28 +23,20 @@ import graft.ext.Kmv
   */
 object StreamKmv {
 
-  /** Per event-time window (and optional extra keys): the KMV
-    * distinct estimate of `valueCol`, alongside the sketch fill level.
-    * Append mode: a window's row emits once its watermark passes.
-    *
-    * `extraKeys` are COLUMN NAMES, not expressions: the same name must
-    * resolve both against the input (for the groupBy) and against the
-    * aggregated schema (for the final select) — an unaliased
-    * expression like `upper(col("g"))` would group fine but fail to
-    * re-resolve post-agg. Pre-compute derived keys with `withColumn`
-    * and pass the name.
+  /** Per event-time window (and optional extra keys, column NAMES —
+    * the [[Windowed.aggregate]] contract): the KMV distinct estimate
+    * of `valueCol`, alongside the sketch fill level. Append mode: a
+    * window's row emits once its watermark passes.
     */
   def windowedDistinct(
       df: DataFrame, tsCol: String, valueCol: String,
       windowLength: String, watermark: String, k: Int,
       extraKeys: String*): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength) +: extraKeys.map(col): _*)
-      .agg(Kmv.kmv(k)(Kmv.hash8(col(valueCol))).as("sk"))
-      .select(
-        (col("window.start").as("window_start") +:
-          col("window.end").as("window_end") +:
-          extraKeys.map(col)) ++ Seq(
-          size(col("sk")).cast("long").as("sketch_size"),
-          Kmv.estimate(col("sk"), k).as("distinct_est")): _*)
+    Windowed.aggregate(df, tsCol, windowLength, watermark, extraKeys) {
+      (in, keys) => in.groupBy(keys: _*)
+        .agg(Kmv.kmv(k)(Kmv.hash8(col(valueCol))).as("sk"))
+        .withColumn("sketch_size", size(col("sk")).cast("long"))
+        .withColumn("distinct_est", Kmv.estimate(col("sk"), k))
+        .drop("sk")
+    }
 }

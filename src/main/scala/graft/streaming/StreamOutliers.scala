@@ -26,18 +26,11 @@ import graft.ext.{KMeansLite, Outliers}
   */
 object StreamOutliers {
 
-  /** Per-cell outlier boundary from the batch corpus — delegates to
-    * the shared [[Outliers.thresholds]] (cells flagging nothing get
-    * no row; the stream-side left join then flags nothing for them).
-    */
-  def thresholds(
-      batch: DataFrame, idCol: String, vCol: String,
-      cents: Seq[Seq[Double]]): DataFrame =
-    Outliers.thresholds(batch, idCol, vCol, cents)
-
   /** Stateless stream scoring: assign + distance per row, then a
     * stream-static broadcast join against the (≤ k)-row threshold
-    * table; no streaming state at all.
+    * table from [[Outliers.thresholds]] (cells flagging nothing get no
+    * row, so the left join flags nothing for them); no streaming state
+    * at all.
     */
   def score(
       stream: DataFrame, vCol: String, cents: Seq[Seq[Double]],
@@ -58,11 +51,9 @@ object StreamOutliers {
   def windowedRates(
       scoredStream: DataFrame, tsCol: String,
       windowLength: String, watermark: String): DataFrame =
-    scoredStream.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength), col("cell"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("outlier").cast("long")).as("n_outliers"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("cell"), col("n"), col("n_outliers"))
+    Windowed.aggregate(scoredStream, tsCol, windowLength, watermark) {
+      (in, keys) => in.groupBy(keys :+ col("cell"): _*)
+        .agg(count(lit(1)).as("n"),
+          sum(col("outlier").cast("long")).as("n_outliers"))
+    }
 }

@@ -27,30 +27,26 @@ object StreamSample {
 
   /** Append-mode per-window sample: one row per sampled id with its
     * in-sample rank, emitted when the watermark closes the window.
-    * `extraKeys` are column NAMES (the [[StreamKmv.windowedDistinct]]
+    * `extraKeys` are column NAMES (the [[Windowed.aggregate]]
     * contract).
     */
   def windowedSample(
       df: DataFrame, tsCol: String, idCol: String, weightCol: String,
       windowLength: String, watermark: String, k: Int,
       extraKeys: String*): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      // a null id or weight would null the A-ES key and crash the
-      // typed aggregator's non-nullable decode at runtime — skip such
-      // rows like builtin aggregates skip nulls (round-10 advice)
-      .filter(col(idCol).isNotNull && col(weightCol).isNotNull)
-      .groupBy(window(col(tsCol), windowLength) +: extraKeys.map(col): _*)
-      .agg(TopK.topK(k)(
-        Sampling.esKey(col(idCol), col(weightCol)),
-        col(idCol)).as("sample"))
-      .select(
-        (col("window.start").as("window_start") +:
-          col("window.end").as("window_end") +:
-          extraKeys.map(col)) :+
-          posexplode(col("sample")).as(Seq("i", "s")): _*)
-      .select(
-        (col("window_start") +: col("window_end") +: extraKeys.map(col)) ++
-          Seq((col("i") + 1).cast("long").as("rnk"),
-            col("s.id").as("sampled_id"),
-            col("s.score").as("key12")): _*)
+    Windowed.aggregate(df, tsCol, windowLength, watermark, extraKeys) {
+      (in, keys) => in
+        // a null id or weight would null the A-ES key and crash the
+        // typed aggregator's non-nullable decode at runtime — skip such
+        // rows like builtin aggregates skip nulls (round-10 advice)
+        .filter(col(idCol).isNotNull && col(weightCol).isNotNull)
+        .groupBy(keys: _*)
+        .agg(TopK.topK(k)(
+          Sampling.esKey(col(idCol), col(weightCol)),
+          col(idCol)).as("sample"))
+        .select(col("*"), posexplode(col("sample")).as(Seq("i", "s")))
+        .select(col("*"), (col("i") + 1).cast("long").as("rnk"),
+          col("s.id").as("sampled_id"), col("s.score").as("key12"))
+        .drop("sample", "i", "s")
+    }
 }

@@ -1,83 +1,32 @@
-// Lives under org.apache.spark.sql because ExpectsInputTypes'
-// AbstractDataType vocabulary is private[sql] — the usual home for
-// library-shipped native expressions.
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Native Catalyst expression for cosine similarity over two
   * `array<double>` columns — the custom-`Expression`-with-`doGenCode`
-  * tier of the extension surface (SURVEY.md §2i): one fused loop in
-  * generated Java instead of the five HOF expressions (2×`aggregate` +
-  * `zip_with` + fold lambdas) it replaces, with zero per-row closure or
-  * intermediate-array allocation, inside whole-stage codegen.
+  * tier of the extension surface (SURVEY.md §2i): one fused
+  * [[DoubleArrayFold]] loop instead of the five HOF expressions
+  * (2×`aggregate` + `zip_with` + fold lambdas) it replaces.
   *
   * Bit-for-bit identical to the HOF formulation (and the DuckDB oracle):
   * the accumulation order is the same sequential left fold
   * `dot/na/nb += f(x_i, y_i)`, and the result is `dot / sqrt(na·nb)`.
-  * NULL on: null input, length mismatch, or any null element (matching
-  * `zip_with`'s null poisoning).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+    extends DoubleArrayFold {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = x.getDouble(i)
-      val yi = y.getDouble(i)
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / math.sqrt(na * nb)
+  override protected def sums: Int = 3
+  override protected def step(acc: Array[Double], x: Double, y: Double): Unit = {
+    acc(0) += x * y; acc(1) += x * x; acc(2) += y * y
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $bad = true; break; }
-         |    final double $xi = $x.getDouble($i);
-         |    final double $yi = $y.getDouble($i);
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |  if ($bad) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
-         |  }
-         |}
-       """.stripMargin
-    })
+  override protected def finish(acc: Array[Double]): Double =
+    acc(0) / math.sqrt(acc(1) * acc(2))
+  override protected def stepCode(acc: Seq[String], x: String, y: String): String =
+    s"${acc(0)} += $x * $y; ${acc(1)} += $x * $x; ${acc(2)} += $y * $y;"
+  override protected def finishCode(acc: Seq[String]): String =
+    s"${acc(0)} / java.lang.Math.sqrt(${acc(1)} * ${acc(2)})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

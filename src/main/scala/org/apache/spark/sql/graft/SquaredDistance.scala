@@ -1,79 +1,32 @@
-// Lives under org.apache.spark.sql because ExpectsInputTypes'
-// AbstractDataType vocabulary is private[sql] — the usual home for
-// library-shipped native expressions.
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Native Catalyst expression for squared L2 distance over two
   * `array<double>` columns — the hot inner loop of every k-means
   * assignment, kNN edge, and incremental-index refresh (KMeansLite
-  * .dist2 call sites: x09/x16/x58/x72/x73/x75/x80 and AnnIndex), fused
-  * into one generated-Java loop like [[CosineSimilarity]]: no
-  * `zip_with` intermediate array, no per-element closure dispatch,
-  * stays inside whole-stage codegen.
+  * .dist2 call sites: x09/x16/x58/x72/x73/x75/x80 and AnnIndex), one
+  * fused [[DoubleArrayFold]] loop.
   *
   * Bit-for-bit identical to the HOF formulation
   * `aggregate(zip_with(v, c, (x,y) -> (x-y)²), 0.0, +)` and to the
   * oracle's list comprehension: the same sequential left fold
-  * `acc += (x_i − y_i)²`. NULL on: null input, length mismatch, or any
-  * null element (matching `zip_with`'s null poisoning).
+  * `acc += (x_i − y_i)²`.
   */
 case class SquaredDistance(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+    extends DoubleArrayFold {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "squared_distance"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
+  override protected def sums: Int = 1
+  override protected def step(acc: Array[Double], x: Double, y: Double): Unit = {
+    val d = x - y
+    acc(0) += d * d
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $bad = true; break; }
-         |    final double $d = $x.getDouble($i) - $y.getDouble($i);
-         |    $acc += $d * $d;
-         |  }
-         |  if ($bad) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $acc;
-         |  }
-         |}
-       """.stripMargin
-    })
+  override protected def finish(acc: Array[Double]): Double = acc(0)
+  override protected def stepCode(acc: Seq[String], x: String, y: String): String =
+    s"${acc(0)} += ($x - $y) * ($x - $y);"
+  override protected def finishCode(acc: Seq[String]): String = acc(0)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SquaredDistance =

@@ -61,4 +61,19 @@ class CmsSpec extends AnyFunSuite {
     val direct = Cms.counterGrid(occ, "item", 4, 64)
     assert(merged.exceptAll(direct).isEmpty && direct.exceptAll(merged).isEmpty)
   }
+
+  test("a non-positive depth throws when the grid or probe is built") {
+    // sequence(0, -1) has no step and yields [0, -1], so an unchecked
+    // depth 0 would silently sketch a row -1
+    import graft.streaming.StreamCms
+    val ts = Seq((new java.sql.Timestamp(0L), "a")).toDF("ts", "item")
+    val grid = Cms.counterGrid(occ, "item", 4, 64)
+    for (depth <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](Cms.counterGrid(occ, "item", depth, 64))
+      intercept[IllegalArgumentException](
+        Cms.estimate(occ, "item", grid, depth, 64))
+      intercept[IllegalArgumentException](
+        StreamCms.windowedGrid(ts, "ts", "item", "1 hour", "0 seconds", depth, 64))
+    }
+  }
 }

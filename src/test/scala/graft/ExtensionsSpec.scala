@@ -100,16 +100,18 @@ class ExtensionsSpec extends AnyFunSuite {
       .contains("withExtensions(new GraftExtensions)"))
   }
 
+  /** "File.scala:line" for every line under src/main matching `pattern`. */
+  private def hits(pattern: scala.util.matching.Regex): Seq[String] =
+    sources(new java.io.File("src/main")).flatMap { f =>
+      text(f).linesIterator.zipWithIndex.collect {
+        case (line, i) if pattern.findFirstIn(line).isDefined =>
+          s"${f.getName}:${i + 1}"
+      }
+    }
+
   test("BM25 and RRF live only in ext/Retrieval; no truncation is unclamped") {
     // a second copy of a scoring formula drifts from the first, and the
     // batch/stream row identity StreamRetrieveSpec pins goes with it
-    def hits(pattern: scala.util.matching.Regex): Seq[String] =
-      sources(new java.io.File("src/main")).flatMap { f =>
-        text(f).linesIterator.zipWithIndex.collect {
-          case (line, i) if pattern.findFirstIn(line).isDefined =>
-            s"${f.getName}:${i + 1}"
-        }
-      }
     val bm25 = hits("""\* 44L \*""".r)
     val rrf = hits("""1000000000 div \(60 \+""".r)
     // slice(toks, 1, size(toks) - 3) throws on a ≤2-token document;
@@ -119,6 +121,23 @@ class ExtensionsSpec extends AnyFunSuite {
     val strays = (bm25 ++ rrf).filterNot(_.startsWith("Retrieval.scala:")) ++
       unclamped
     assert(strays.isEmpty, strays.mkString(", "))
+  }
+
+  test("window bounds, the CMS cell explode and the binning live once") {
+    // a stream module that projects its own window, or a second copy of
+    // a sketch technique, drifts from the batch form, and with it the
+    // stream ≡ batch identity PropertySpec pins
+    val windowBounds = hits("""window\.start""".r)
+      .filterNot(h => h.startsWith("Windowed.scala:") ||
+        h.startsWith("DailyRollup.scala:"))
+    val cmsExplode = hits("""explode\(sequence\(lit\(0\), lit\(depth - 1\)\)\)""".r)
+    val binning = hits("""div \$binWidth""".r)
+    val strays = windowBounds.map("window bounds outside the driver: " + _) ++
+      (if (cmsExplode.size == 1) Nil
+       else Seq(s"CMS cell explode ×${cmsExplode.size}: ${cmsExplode.mkString(", ")}")) ++
+      (if (binning.size == 1) Nil
+       else Seq(s"binning ×${binning.size}: ${binning.mkString(", ")}"))
+    assert(strays.isEmpty, strays.mkString("; "))
   }
 
   test("hand-partitioned RDD loops live only in ext/GraphRounds") {

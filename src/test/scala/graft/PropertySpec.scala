@@ -6,6 +6,7 @@ import java.sql.Date
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -261,5 +262,200 @@ class PropertySpec extends AnyFunSuite {
         .select($"kl_micro").as[Long].head()
       kl == 0L
     }, cases = 10)
+  }
+
+  // ---- stream ≡ batch: every windowed module over random micro-batches
+
+  /** One generated event: (ts, k, v, id, w). `k` is a nullable key with
+    * one hot value, `v` a nullable value, `id` unique, `w` a nullable
+    * positive weight.
+    */
+  private type Ev = (java.sql.Timestamp, String, java.lang.Long, Long, java.lang.Long)
+  private val evCols = Seq("ts", "k", "v", "id", "w")
+
+  /** A generated stream: its events in event-time order, cut into
+    * micro-batches (some empty), under one watermark delay.
+    */
+  private case class StreamCase(batches: Vector[Vector[Ev]], watermark: String) {
+    def rows: Vector[Ev] = batches.flatten
+  }
+
+  private val hour = 3600L * 1000L
+  private val t0 = 1704067200000L // 2024-01-01 00:00 UTC, hour-aligned
+
+  /** 56 hourly windows of 1–5 rows, a few of them empty. A window of
+    * two rows or more is cut inside with probability 0.75, so most
+    * windows span a micro-batch boundary; now and then an empty
+    * micro-batch follows a window.
+    */
+  private val genStreamCase: Gen[StreamCase] = {
+    val genKey = Gen.frequency(5 -> Gen.const("hot"),
+      3 -> Gen.oneOf("a", "b", "c", "d"), 2 -> Gen.const(null: String))
+    val genV = Gen.frequency(9 -> Gen.choose(-5L, 300L).map(java.lang.Long.valueOf),
+      1 -> Gen.const(null: java.lang.Long))
+    val genW = Gen.frequency(19 -> Gen.choose(1L, 1000L).map(java.lang.Long.valueOf),
+      1 -> Gen.const(null: java.lang.Long))
+    val genWindow = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.const(1), 12 -> Gen.choose(2, 5))
+      secs <- Gen.listOfN(n, Gen.choose(0L, 3599L)).map(_.sorted)
+      ks <- Gen.listOfN(n, genKey)
+      vs <- Gen.listOfN(n, genV)
+      ws <- Gen.listOfN(n, genW)
+      cutInside <- Gen.frequency(3 -> Gen.const(true), 1 -> Gen.const(false))
+      cutAt <- Gen.choose(1, math.max(1, n - 1))
+      emptyAfter <- Gen.frequency(1 -> Gen.const(true), 19 -> Gen.const(false))
+    } yield (secs.lazyZip(ks).lazyZip(vs).toList.zip(ws), cutInside && n >= 2, cutAt,
+      emptyAfter)
+    for {
+      windows <- Gen.listOfN(56, genWindow)
+      delayMin <- Gen.oneOf(0, 30, 120)
+    } yield {
+      val batches = Vector.newBuilder[Vector[Ev]]
+      var cur = Vector.empty[Ev]
+      var id = 0L
+      windows.zipWithIndex.foreach { case ((rows, cut, cutAt, emptyAfter), wi) =>
+        rows.zipWithIndex.foreach { case (((sec, k, v), w), ri) =>
+          if (cut && ri == cutAt) { batches += cur; cur = Vector.empty }
+          cur :+= ((new java.sql.Timestamp(t0 + wi * hour + sec * 1000L), k, v, id, w))
+          id += 1
+        }
+        if (emptyAfter) { batches += cur; batches += Vector.empty; cur = Vector.empty }
+      }
+      batches += cur
+      StreamCase(batches.result(), s"$delayMin minutes")
+    }
+  }
+
+  /** One windowed module: its function over the generic events frame
+    * under a watermark, and the event columns whose nulls it skips.
+    */
+  private case class WindowedModule(
+      name: String, build: (DataFrame, String) => DataFrame,
+      skipsNullsOf: Seq[String] = Nil, replay: Boolean = false)
+
+  private lazy val windowedModules: Seq[WindowedModule] = {
+    import graft.streaming._
+    val hr = "1 hour"
+    def str(c: String) = concat(lit("u"), col(c).cast("string"))
+    Seq(
+      WindowedModule("StreamCms.windowedGrid", (ev, wm) =>
+        StreamCms.windowedGrid(ev, "ts", "k", hr, wm, depth = 3, width = 16)),
+      WindowedModule("StreamDq.windowedChecks", (ev, wm) =>
+        StreamDq.windowedChecks(ev, "ts", hr, wm, Seq(
+          "null_v" -> col("v").isNull, "neg_v" -> (col("v") < 0),
+          "hot_k" -> (col("k") === "hot")))),
+      WindowedModule("StreamDrift.windowedCounts", (ev, wm) =>
+        StreamDrift.windowedCounts(ev.withColumn("tok", pmod(col("v"), lit(7L))),
+          "ts", "k", "tok", hr, wm)),
+      WindowedModule("StreamHll.windowedDistinct", (ev, wm) =>
+        StreamHll.windowedDistinct(ev.withColumn("u", str("v")), "ts", "u", hr, wm, "k"),
+        skipsNullsOf = Seq("v"), replay = true),
+      WindowedModule("StreamKmv.windowedDistinct", (ev, wm) =>
+        StreamKmv.windowedDistinct(ev.withColumn("u", str("v")), "ts", "u", hr, wm,
+          k = 4, "k"),
+        replay = true),
+      WindowedModule("StreamOutliers.windowedRates", (ev, wm) =>
+        StreamOutliers.windowedRates(ev.withColumn("cell", pmod(col("v"), lit(4L)))
+          .withColumn("outlier", col("v") > 200), "ts", hr, wm)),
+      WindowedModule("StreamQuantile.windowedHistogram", (ev, wm) =>
+        StreamQuantile.windowedHistogram(ev, "ts", "v", 25L, hr, wm, "k"),
+        skipsNullsOf = Seq("v")),
+      WindowedModule("StreamSample.windowedSample", (ev, wm) =>
+        StreamSample.windowedSample(ev, "ts", "id", "w", hr, wm, k = 3, "k"),
+        skipsNullsOf = Seq("id", "w")),
+      WindowedModule("EventWindows.windowedStats", (ev, wm) =>
+        EventWindows.windowedStats(ev.select(col("ts"), col("k").as("event_type"),
+          col("v").cast("double").as("value")), hr, wm)))
+  }
+
+  /** The streams run in their own session with two shuffle partitions:
+    * each micro-batch of a stateful query runs one task per partition,
+    * and two still spread a window's keys over more than one state
+    * store.
+    */
+  private lazy val streamSpark = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "2")
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    s
+  }
+
+  /** A frame's rows as sorted strings: a multiset compare that keeps
+    * exact doubles and nulls.
+    */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toString).sorted
+
+  private var windowedRuns = 0
+
+  /** Feeds one case through every module's stream at once (each query
+    * runs on its own thread) and returns one line per mismatch. A
+    * replaying module's stream also receives each micro-batch again
+    * with the next one, so every row arrives twice.
+    */
+  private def streamMatchesBatch(c: StreamCase): Seq[String] = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val session = streamSpark
+    import session.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = session.sqlContext
+    val static = c.rows.toDF(evCols: _*)
+    windowedRuns += 1
+    val runs = windowedModules.flatMap { m =>
+      (false +: (if (m.replay) Seq(true) else Nil)).map { replayed =>
+        val input = MemoryStream[Ev]
+        val table = s"windowed_${windowedRuns}_${m.name.replace('.', '_')}" +
+          (if (replayed) "_replay" else "")
+        val q = m.build(input.toDF().toDF(evCols: _*), c.watermark)
+          .writeStream.format("memory").queryName(table)
+          .outputMode("append").start()
+        (m, replayed, input, q, table)
+      }
+    }
+    try {
+      // a closer far past the last window moves the watermark beyond
+      // every generated window; its own window never closes
+      val closer: Ev = (new java.sql.Timestamp(t0 + 1000L * hour), "hot",
+        java.lang.Long.valueOf(0L), -1L, java.lang.Long.valueOf(1L))
+      val fed = c.batches :+ Vector(closer) :+ Vector(closer)
+      fed.indices.foreach { i =>
+        runs.foreach { case (_, replayed, input, _, _) =>
+          input.addData(if (replayed && i > 0) fed(i - 1) ++ fed(i) else fed(i))
+        }
+        runs.foreach(_._4.processAllAvailable())
+      }
+      runs.flatMap { case (m, replayed, _, _, table) =>
+        val streamed = session.table(table)
+        val batch = m.build(static, c.watermark)
+        val label = m.name + (if (replayed) " (replayed)" else "")
+        val nullSkip = m.skipsNullsOf.filterNot(_ => replayed).flatMap { n =>
+          val nonNull = m.build(static.filter(col(n).isNotNull), c.watermark)
+          if (rowsOf(nonNull) == rowsOf(batch)) None
+          else Some(s"$label: batch over non-null $n differs")
+        }
+        val schema = (streamed.schema.map(f => (f.name, f.dataType)) ==
+          batch.schema.map(f => (f.name, f.dataType)))
+        (if (schema) None else Some(s"$label: schema ${streamed.schema} != ${batch.schema}")) ++
+          (if (rowsOf(streamed) == rowsOf(batch)) None
+           else Some(s"$label: closed windows ${rowsOf(streamed).take(5)} != " +
+             s"batch ${rowsOf(batch).take(5)}")) ++ nullSkip
+      }
+    } finally runs.foreach(_._4.stop())
+  }
+
+  test("property: every windowed module's stream equals its batch form") {
+    // generated windows, and those whose rows span ≥ 2 micro-batches
+    var windows = 0
+    var split = 0
+    check("stream-equals-batch", Prop.forAllNoShrink(genStreamCase) { c =>
+      val batchOf = c.batches.zipWithIndex
+        .flatMap { case (b, i) => b.map(r => (r._1.getTime / hour, i)) }
+      val perWindow = batchOf.groupBy(_._1).values.map(_.map(_._2).distinct.size)
+      windows += perWindow.size
+      split += perWindow.count(_ >= 2)
+      val mismatches = streamMatchesBatch(c)
+      mismatches.isEmpty :| mismatches.mkString("; ")
+    }, cases = 2)
+    assert(windows >= 100 && 2 * split >= windows,
+      s"$windows windows generated, $split split across micro-batches")
   }
 }

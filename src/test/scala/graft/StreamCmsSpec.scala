@@ -74,9 +74,9 @@ class StreamCmsSpec extends AnyFunSuite {
       q.processAllAvailable()
 
       val grid = spark.table("cms_probe").filter($"window_start" === ts("10:00"))
-      val est = StreamCms.probe(
-        grid, Seq("hot", "rare", "absent").toDF("tok"), "tok",
-        depth = 3, width = 64)
+      val est = Cms.estimate(
+        Seq("hot", "rare", "absent").toDF("tok"), "tok", grid,
+        depth = 3, width = 64, "window_start")
         .select($"tok", $"cms_est").as[(String, Long)].collect().toMap
       assert(est("hot") >= 3L && est("rare") >= 1L,
         s"CMS must never undercount: $est")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.KMeansLite
+import graft.ext.{KMeansLite, Outliers}
 import graft.queries.ExtQueries
 import graft.streaming.StreamOutliers
 
@@ -34,7 +34,7 @@ class StreamOutliersSpec extends AnyFunSuite {
     base, "vec_id", "v", ExtQueries.corpusK(base.count()), iters = 1)
 
   test("batch-derived thresholds reproduce the x61 rank flags exactly") {
-    val thr = StreamOutliers.thresholds(base, "vec_id", "v", cents)
+    val thr = Outliers.thresholds(base, "vec_id", "v", cents)
     val viaThreshold = StreamOutliers.score(base, "v", cents, thr)
       .select($"vec_id", $"outlier").as[(Long, Boolean)].collect().toMap
     val viaRank = ExtQueries.queries("x61_embed_outliers")(spark, dir)
@@ -58,7 +58,7 @@ class StreamOutliersSpec extends AnyFunSuite {
   test("windowed rates equal the batch aggregation of the same rows") {
     implicit val ctx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
-    val thr = StreamOutliers.thresholds(base, "vec_id", "v", cents)
+    val thr = Outliers.thresholds(base, "vec_id", "v", cents)
 
     // 6 corpus vectors across two windows + a watermark closer
     val vecs = base.limit(6)

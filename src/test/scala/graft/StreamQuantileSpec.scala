@@ -61,4 +61,14 @@ class StreamQuantileSpec extends AnyFunSuite {
       assert(viaStream(500000L) === 49L)
     } finally q.stop()
   }
+
+  test("a non-positive binWidth throws when the histogram is built") {
+    // under ANSI `v div 0` throws DIVIDE_BY_ZERO only in the first task
+    val df = Seq((ts("10:00"), 5L)).toDF("ts", "len")
+    for (w <- Seq(0L, -10L)) {
+      intercept[IllegalArgumentException](Quantiles.histogram(df, col("len"), w))
+      intercept[IllegalArgumentException](
+        StreamQuantile.windowedHistogram(df, "ts", "len", w, "1 hour", "0 seconds"))
+    }
+  }
 }
