@@ -79,10 +79,6 @@ object PlanAudit {
         " docs): each hits LimitPushDownThroughWindow ->" +
         " TakeOrderedAndProject(k) -> Window, k<=20 rows per frame at" +
         " any corpus size (the x79 shape)"),
-    "x92_bpe_encode_serve" ->
-      ("BpeMerge.topPairs rank: row_number over the checkpointed" +
-        " orderBy.limit(3) rule table — the single-partition frame is" +
-        " exactly k=3 rows at any corpus size"),
     "x89_quantile_histogram" ->
       ("both cumulative windows ride HISTOGRAMS, never the corpus:" +
         " the sketch grid is <= domain/64 rows and the exact leg <=" +

@@ -1,319 +1,172 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint}
 import org.apache.spark.sql.functions._
 
-/** Corpus-wide BPE pair-merge rounds (Sennrich et al. 2016), the
-  * distributed core of tokenizer training, lifted out of the x74
-  * registry entry so the merge policy is parameterized (round-8
-  * verdict task #6 — the a ≠ b restriction is now a FLAG, not a
-  * silent limitation). Round 11 splits the machinery into the two
-  * halves a production tokenizer actually has:
+/** Corpus-wide BPE pair merges (Sennrich et al. 2016): the training and
+  * encoding halves of a tokenizer over a (…, toks ARRAY<STRING>) frame.
   *
-  *  - TRAIN ([[topPair]] / [[trainPairs]] / [[mergeRound]]): find the
-  *    most frequent adjacent pair corpus-wide, fuse it, repeat. Runs
-  *    once per vocabulary.
-  *  - ENCODE ([[applyPair]] / [[encode]]): apply an already-trained
-  *    merge sequence, in training order, to ANY corpus — the hot path
-  *    that runs ~1000× more often than training. Each merge is a
-  *    1-row broadcast + a NARROW per-document array rewrite: no
-  *    shuffle, no state, embarrassingly parallel at any corpus size.
-  *    Applying the merges in training order reproduces training's own
-  *    rewrites exactly, so encode(training corpus) == the trained
-  *    corpus row for row (RoundElevenSpec pins the round trip).
+  * A merge rule is plain data, an (a, b) string pair, and a vocabulary
+  * is a `Seq[(String, String)]` in training order. Every trainer
+  * returns one; [[encode]] applies one.
   *
-  * Scale shape per TRAINING round: one partial-aggregated shuffle on
-  * the packed pair (counts), a 1-row TakeOrderedAndProject argmax
-  * broadcast back (the x32 scalar shape — PlanAudit's adjudicated
-  * BNLJ), and the narrow rewrite. Rounds compose linearly; a
-  * production vocab build runs the same plan to convergence with
-  * per-round checkpointing like Components. Zero driver state — the
-  * winning pair rides the broadcast, never a collect.
+  *  - TRAIN: find the most frequent adjacent pair corpus-wide, fuse it,
+  *    repeat. [[trainPairs]] recounts the rewritten corpus every round
+  *    (x74's form, and the reference the fast trainer is tested
+  *    against); [[trainFast]] maintains the pair counts of a
+  *    [[typeTable]] incrementally (x124); [[topPairs]] ranks the base
+  *    corpus's pairs in one pass (the serve-form vocabulary of x92 and
+  *    x103). All three rank by (count desc, packed pair asc), and an
+  *    exhausted corpus (no adjacent pair left) yields a shorter list.
+  *  - ENCODE: apply the rules in training order to any corpus, through
+  *    ONE native expression ([[org.apache.spark.sql.graft.BpeEncodeRules]])
+  *    whatever the rule count: a narrow per-document map with no join,
+  *    no shuffle and no state, so a stream encodes exactly as its batch
+  *    (StreamBpe). Training rewrites its own corpus through the same
+  *    expression, so encode(training corpus) reproduces training's
+  *    rewrites row for row.
   *
-  * Merge policies:
-  *  - `allowIdentical = false` (x74's frozen oracle shape): candidate
-  *    pairs are restricted to a ≠ b. With distinct halves an
-  *    occurrence can never overlap the next one (a match ending at i
-  *    would need t[i]=a and t[i]=b at once), so "merge all
-  *    occurrences" is position-independent and both engines rebuild
-  *    token arrays with pure per-element arithmetic.
+  * Merge policies change only which pairs are COUNTED:
+  *  - `allowIdentical = false` (x74's oracle shape): candidate pairs
+  *    are restricted to a ≠ b. Occurrences of such a pair cannot
+  *    overlap, so merging all of them is position-independent.
   *  - `allowIdentical = true` (real BPE): identical-half pairs (a, a)
   *    compete too, counted at every adjacent position (overlaps
-  *    included, the standard adjacency count). Occurrences inside a
-  *    run of a's overlap, so the rewrite applies the deterministic
-  *    LEFT-GREEDY rule real BPE uses: within each maximal run of
-  *    length L, positions at even 0-based run offset start a merge
-  *    when a partner follows — floor(L/2) merged pairs, then a lone
-  *    trailing a when L is odd ("a a a a a" → "a_a a_a a"). Run
-  *    offsets derive from each position's nearest preceding non-a
-  *    index, an O(len²) per-document expression — documents are
-  *    length-bounded by the chunking stage at any corpus scale, and
-  *    the rewrite stays narrow (no shuffle, no state).
+  *    included). The encoder's left-greedy pass gives such a rule real
+  *    BPE's run rule: floor(L/2) merges per maximal run of L a's, then
+  *    a lone trailing a when L is odd ("a a a a a" → "a_a a_a a").
+  * Encoding needs no flag: the left-greedy pass equals the match-all
+  * rewrite on every a ≠ b rule, and the a = a rule only exists under
+  * the second policy.
   *
   * Pairs are packed a + U+0001 + b (U+0001 sorts below every token
-  * char, so packed-string order IS (a, b) tuple order in both
-  * engines); count ties break to the packed-string minimum.
+  * char, so packed-string order IS (a, b) tuple order in both engines).
   *
-  * TRAINING AT PRODUCTION DEPTH (round-12; SCALE-BPEDEPTH receipt in
-  * PLANS.md): per-round cost is FLAT to 80 rounds under the per-round
-  * checkpointing (no O(rounds²) leak), so a 30k-merge vocabulary is
-  * 30k × per-round — viable offline at moderate corpus sizes, but at
-  * 100 TB the dominant term becomes 30k full-corpus pair RECOUNTS.
-  * The design at that scale is INCREMENTAL pair-count maintenance:
-  * merging (a, b) → ab changes only the adjacencies that touch a
-  * merge site — for a site `… x a b y …` the deltas are
-  * (x,a) −1, (b,y) −1, (a,b) −1, (x,ab) +1, (ab,y) +1 — and the
-  * rewrite job already visits exactly the documents containing
-  * (a, b), so the deltas ride as a side output of the rewrite
-  * (flatMap per merge site) and fold by key into a persisted
-  * pair-count table; the next round's argmax reads the maintained
-  * table. Round cost becomes O(occurrences of the merged pair) +
-  * a small-table upsert, independent of corpus size — the
-  * distributed analogue of the pair-index fast trainer in Sennrich's
-  * reference implementation.
-  *
-  * IMPLEMENTED this round as [[trainFast]] over the corpus TYPE TABLE
-  * ([[typeTable]]): one corpus-shaped aggregate collapses the corpus
-  * to (distinct toks array, multiplicity) — bounded by the content
-  * vocabulary under Heaps' law, NOT by corpus size (a duplicated
-  * corpus grows the weights, never the table) — then every round
-  * runs entirely on bounded state: argmax off the maintained
-  * pair-count table, a narrow rewrite of only the types CONTAINING
-  * the merged pair, and an exact per-type old-minus-new adjacency
-  * histogram diff folded back into the counts. Rule-sequence
-  * bit-equality with the recount loop (both merge policies, ties
-  * included) is pinned by RoundTwelveSpec; x124 proves it corpus-wide
-  * under the DuckDB recount oracle; SCALE-BPEFAST carries the
-  * corpus-independence receipt. The recount loop stays as the
-  * oracle-mirroring reference form.
+  * TRAINING AT PRODUCTION DEPTH: a full recount per round makes a
+  * 30k-merge vocabulary 30k corpus scans. Merging (a, b) → ab changes
+  * only the adjacencies of the documents containing (a, b), so
+  * [[trainFast]] runs every round on bounded state: the corpus type
+  * table (distinct token arrays with multiplicities, bounded by the
+  * content vocabulary under Heaps' law) and its pair-count table, kept
+  * exact by each round's per-type old-minus-new adjacency diff. Its rule
+  * sequence equals [[trainPairs]]' under both policies, ties included
+  * (BpeMergeSpec); x124 checks it corpus-wide against the DuckDB
+  * recount oracle, and SCALE-BPEFAST in PLANS.md carries the
+  * corpus-independence receipt.
   */
 object BpeMerge {
   private val sep = "\u0001"
 
   /** Packed adjacent pairs of the `toks` column: element i is
     * toks(i) ++ U+0001 ++ toks(i+1) (null where the a ≠ b policy
-    * excludes an identical-half pair).
+    * excludes an identical-half pair). The slice length is clamped at
+    * 0, so an empty token array has no pairs.
     */
   private def packedAdjacent(allowIdentical: Boolean): Column = {
     val tk = col("toks")
+    val len = greatest(size(tk) - 1, lit(0))
     zip_with(
-      slice(tk, lit(1), size(tk) - 1), slice(tk, lit(2), size(tk) - 1),
+      slice(tk, lit(1), len), slice(tk, lit(2), len),
       (x, y) =>
         if (allowIdentical) concat(x, lit(sep), y)
         else when(x =!= y, concat(x, lit(sep), y)))
   }
 
-  /** The argmax adjacent pair of the current corpus, as a 1-row
-    * (ma, mb) frame — the trained merge rule of one round.
-    */
-  def topPair(df: DataFrame, allowIdentical: Boolean = false): DataFrame = {
-    val adjacent = packedAdjacent(allowIdentical)
-    df.select(explode(adjacent).as("ab"))
+  /** Pair counts (ab, c) of the packed `pairs` of `df`, each occurrence
+    * weighted by `weight`. */
+  private def counted(df: DataFrame, pairs: Column,
+      weight: Column): DataFrame =
+    df.select(explode(pairs).as("ab"), weight.as("w"))
       .filter(col("ab").isNotNull)
-      .groupBy(col("ab")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("ab")).limit(1)
-      .select(split(col("ab"), sep).getItem(0).as("ma"),
-        split(col("ab"), sep).getItem(1).as("mb"))
+      .groupBy(col("ab")).agg(sum(col("w")).as("c"))
+
+  /** The top `k` rules of an (ab, c) count table, ranked by count desc
+    * then packed pair asc: every trainer's argmax and tie order. */
+  private def ranked(counts: DataFrame, k: Int): Seq[(String, String)] =
+    counts.orderBy(col("c").desc, col("ab")).limit(k)
+      .select(split(col("ab"), sep).getItem(0),
+        split(col("ab"), sep).getItem(1))
+      .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+
+  /** ENCODE: apply `rules` in order to every document's `toks`, each
+    * rule one left-greedy pass, all in one native expression. */
+  def encode(df: DataFrame, rules: Seq[(String, String)]): DataFrame = {
+    import org.apache.spark.sql.GraftExpressionBridge
+    df.withColumn("toks", GraftExpressionBridge.column(
+      org.apache.spark.sql.graft.BpeEncodeRules(
+        GraftExpressionBridge.expression(col("toks")), rules)))
   }
 
-  /** The top-k adjacent pairs of `df` in ONE aggregate pass, as a
-    * ranked (ma, mb, r) rule table — the serve-form stand-in for a
-    * PERSISTED vocabulary (x92): deployment encode never re-runs the
-    * sequential per-round argmaxes, it loads a merge table and applies
-    * the rules in order, so the table here is built by the cheapest
-    * exact one-pass ranking (count desc, packed-pair asc — the same
-    * tie order training uses). Note the rules are ranked by BASE-corpus
-    * counts, not re-counted after each merge like [[trainPairs]] —
-    * provenance is the vocabulary builder's concern; encode semantics
-    * (sequential application in rank order) are identical either way
-    * and that is the hot path being priced.
-    *
-    * Plan: one partial-aggregated shuffle on the packed pair, then
-    * TakeOrderedAndProject(k) → a k-row ranking window (bounded domain
-    * — PlanAudit adjudicates). localCheckpoint the result before
-    * splitting it into per-rank 1-row frames, or each split re-runs
-    * the aggregate.
+  /** The top-k adjacent pairs of `df` in ONE aggregate pass, in rank
+    * order: the serve-form stand-in for a persisted vocabulary (x92).
+    * The rules are ranked by BASE-corpus counts, not recounted after
+    * each merge like [[trainPairs]]; encode semantics (sequential
+    * application in rank order) are the same either way. Plan: one
+    * partial-aggregated shuffle on the packed pair, then
+    * TakeOrderedAndProject(k), collected.
     */
   def topPairs(df: DataFrame, k: Int,
-      allowIdentical: Boolean = false): DataFrame = {
-    val adjacent = packedAdjacent(allowIdentical)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("c").desc, col("ab"))
-    df.select(explode(adjacent).as("ab"))
-      .filter(col("ab").isNotNull)
-      .groupBy(col("ab")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("ab")).limit(k)
-      .withColumn("r", row_number().over(w))
-      .select(split(col("ab"), sep).getItem(0).as("ma"),
-        split(col("ab"), sep).getItem(1).as("mb"), col("r"))
-  }
+      allowIdentical: Boolean = false): Seq[(String, String)] =
+    ranked(counted(df, packedAdjacent(allowIdentical), lit(1L)), k)
 
-  /** Rewrite `toks` under the (ma, mb) columns riding on each row.
-    * Shared by training (where the pair is the round's argmax) and
-    * encode (where it is a trained rule).
-    */
-  private def rewriteToks(df: DataFrame,
-      allowIdentical: Boolean): DataFrame = {
-    val tk = col("toks")
-    val n = size(tk)
-    // a ≠ b: occurrences cannot overlap — merge every match.
-    val droppedNe = (i: Column) => coalesce(
-      when(i > 1, element_at(tk, i - 1) === col("ma")
-        && element_at(tk, i) === col("mb")), lit(false))
-    val headNe = (i: Column) => element_at(tk, i) === col("ma") &&
-      coalesce(when(i < n, element_at(tk, i + 1) === col("mb")), lit(false))
-    // a == b: left-greedy within each maximal run of a's. runOff is
-    // the 0-based offset of position i inside its run (distance to
-    // the nearest preceding non-a index); even offsets start merges.
-    val lastNonA = (i: Column) => coalesce(
-      when(i > 1, array_max(filter(sequence(lit(1), i - 1),
-        j => element_at(tk, j) =!= col("ma")))), lit(0))
-    val runOff = (i: Column) => i - lastNonA(i) - 1
-    val isA = (i: Column) => element_at(tk, i) === col("ma")
-    val headEq = (i: Column) => isA(i) && (runOff(i) % 2 === 0) &&
-      coalesce(when(i < n, element_at(tk, i + 1) === col("ma")), lit(false))
-    val droppedEq = (i: Column) => isA(i) && (runOff(i) % 2 === 1)
-    val eqHalves = col("ma") === col("mb")
-    val dropped = (i: Column) =>
-      if (allowIdentical) when(eqHalves, droppedEq(i)).otherwise(droppedNe(i))
-      else droppedNe(i)
-    val head = (i: Column) =>
-      if (allowIdentical) when(eqHalves, headEq(i)).otherwise(headNe(i))
-      else headNe(i)
-    df.withColumn("toks", transform(
-      filter(sequence(lit(1), n), i => !dropped(i)),
-      i => when(head(i),
-        concat(col("ma"), lit("_"), col("mb")))
-        .otherwise(element_at(tk, i))))
-  }
-
-  /** Apply one trained merge rule (a 1-row (ma, mb) frame) to every
-    * document: 1-row broadcast + narrow rewrite. `tagCol` optionally
-    * records the rule as a `<ma>_<mb>` column (training's merge_r).
-    *
-    * Empty-rule safety (round-12 advice): the broadcast rides a LEFT
-    * join, not a crossJoin, so a 0-row pair frame (a training round
-    * with no adjacent pairs left — all-single-token corpus, or rounds
-    * beyond the available merges) passes every document through
-    * UNCHANGED instead of silently emptying the corpus: with null
-    * (ma, mb) every dropped/head predicate in [[rewriteToks]] folds to
-    * false under its coalesce/three-valued-AND, so the rewrite is the
-    * identity (RoundTwelveSpec pins it). A 1-row pair plans exactly as
-    * the old crossJoin (BroadcastNestedLoopJoin on a 1-row build side).
-    */
-  def applyPair(df: DataFrame, pair: DataFrame,
-      allowIdentical: Boolean = false,
-      tagCol: Option[String] = None): DataFrame = {
-    val joined = df.join(broadcast(pair), lit(true), "left")
-    val tagged = tagCol.fold(joined)(c =>
-      joined.withColumn(c, concat(col("ma"), lit("_"), col("mb"))))
-    rewriteToks(tagged, allowIdentical).drop("ma", "mb")
-  }
-
-  /** One merge round: count adjacent pairs corpus-wide, broadcast the
-    * argmax pair, rewrite every document's `toks`, and record the
-    * winning pair as `merge_<r>`.
-    */
-  def mergeRound(df: DataFrame, r: Int,
-      allowIdentical: Boolean = false): DataFrame =
-    applyPair(df, topPair(df, allowIdentical), allowIdentical,
-      tagCol = Some(s"merge_$r"))
-
-  /** `rounds` composed merge rounds over a (…, toks ARRAY<STRING>)
-    * frame; adds `merge_1 … merge_<rounds>` columns.
-    */
-  def mergeRounds(df: DataFrame, rounds: Int,
-      allowIdentical: Boolean = false): DataFrame =
-    (1 to rounds).foldLeft(df)((d, r) => mergeRound(d, r, allowIdentical))
-
-  /** Train `rounds` merge rules on `train` and return them in
-    * training order, each a lazily-composed 1-row (ma, mb) frame
-    * (round r's argmax is computed over the corpus rewritten by
-    * rounds 1..r-1, exactly as [[mergeRounds]] does).
+  /** The recount trainer: up to `rounds` rules in training order.
+    * Round r ranks the pairs of encode(train, rules of rounds 1..r-1),
+    * one count job per round; the loop stops early on an exhausted
+    * corpus.
     */
   def trainPairs(train: DataFrame, rounds: Int,
-      allowIdentical: Boolean = false): Seq[DataFrame] = {
-    var cur = train
-    (1 to rounds).map { r =>
-      val p = topPair(cur, allowIdentical)
-      // checkpoint between rounds: round r's argmax is a SEPARATE
-      // dataframe from round r+1's, so without materialization every
-      // later round re-tokenizes and re-rewrites the training corpus
-      // from scratch inside its own subtree (round-11 RunOne finding)
-      if (r < rounds) cur = applyPair(cur, p, allowIdentical).localCheckpoint()
-      p
-    }
+      allowIdentical: Boolean = false): Seq[(String, String)] = {
+    @annotation.tailrec
+    def loop(rules: Seq[(String, String)]): Seq[(String, String)] =
+      if (rules.size >= rounds) rules
+      else ranked(counted(encode(train, rules),
+          packedAdjacent(allowIdentical), lit(1L)), 1) match {
+        case Seq() => rules
+        case top => loop(rules ++ top)
+      }
+    loop(Vector.empty)
   }
 
   /** Collapse a training corpus to its TYPE TABLE: one row per
-    * DISTINCT `toks` array with its multiplicity `w`. This is the
-    * bounded-state representation the fast trainer runs on — under
-    * Heaps' law the table is bounded by the content vocabulary, not
-    * the corpus (a duplicated corpus grows the weights, never the
-    * table), so everything downstream of this one corpus-shaped
-    * aggregate is corpus-size-independent.
+    * DISTINCT `toks` array with its multiplicity `w`. Under Heaps' law
+    * the table is bounded by the content vocabulary, not the corpus (a
+    * duplicated corpus grows the weights, never the table), so
+    * everything downstream of this one aggregate is
+    * corpus-size-independent.
     */
   def typeTable(df: DataFrame): DataFrame =
     df.groupBy(col("toks")).agg(count(lit(1)).as("w"))
 
-  /** Weighted adjacency counts of a (toks, w) type table — the
-    * maintained pair-count state of [[trainFast]], built once here
-    * and then kept exact by per-round histogram-diff deltas.
+  /** Weighted adjacency counts (ab, c) of a (toks, w) type table — the
+    * maintained pair-count state of [[trainFast]], built once here and
+    * then kept exact by per-round histogram-diff deltas.
     */
   def pairCounts(types: DataFrame,
       allowIdentical: Boolean = false): DataFrame =
-    types.select(explode(packedAdjacent(allowIdentical)).as("ab"), col("w"))
-      .filter(col("ab").isNotNull)
-      .groupBy(col("ab")).agg(sum(col("w")).as("c"))
+    counted(types, packedAdjacent(allowIdentical), col("w"))
 
-  /** The FAST TRAINER (round-12; the production-depth design stated
-    * in the header, implemented): `rounds` merge rules over a
-    * (toks, w) type table with INCREMENTAL pair-count maintenance —
-    * no per-round corpus recount anywhere.
+  /** The FAST TRAINER: up to `rounds` rules over a (toks, w) type table
+    * with INCREMENTAL pair-count maintenance — no per-round corpus
+    * recount anywhere.
     *
     * Per round, all on bounded state:
-    *  1. argmax (count desc, packed-pair asc — training's exact tie
-    *     order) off the maintained pair-count table;
+    *  1. the argmax of the maintained pair-count table (one collect);
     *  2. ONE narrow pass splits the type table into types containing
-    *     the merged pair (rewritten) and types that cannot change
-    *     (passed through untouched);
-    *  3. the rewritten types emit their exact adjacency-histogram
-    *     diff (new pairs at +w, old pairs at −w) — delta volume is
-    *     O(adjacencies of touched types), i.e. O(occurrences of the
-    *     merged pair)-shaped, never corpus-shaped — folded into the
-    *     counts table (zero-count pairs dropped; counts cannot go
-    *     negative because the diff is exact by construction).
+    *     the merged pair (encoded under it) and types that cannot
+    *     change (passed through untouched);
+    *  3. the encoded types emit their exact adjacency-histogram diff
+    *     (new pairs at +w, old pairs at −w), folded into the counts
+    *     table (zero-count pairs dropped; counts cannot go negative
+    *     because the diff is exact).
     *
-    * The maintained counts equal a full recount of the rewritten
-    * types at every round (inductively: the diff is exact), so the
-    * rule sequence is BIT-IDENTICAL to [[trainPairs]] on the same
-    * corpus — RoundTwelveSpec pins it for both merge policies
-    * including count ties, and x124 proves it corpus-wide under the
-    * DuckDB recount oracle. Both per-round frames are
-    * localCheckpoint'd (types: vocabulary-bounded; counts:
-    * pair-vocabulary-bounded) — bounded-state materialization, the
-    * Components discipline, zero driver state.
-    *
-    * An exhausted corpus (no adjacent pair left under the policy)
-    * yields 0-row rules from that round on, exactly like
-    * [[trainPairs]]; the left-join rewrite passes types through
-    * unchanged (the round-12 empty-rule guard).
+    * The maintained counts equal a full recount of the rewritten types
+    * at every round, so the rule sequence equals [[trainPairs]]' on the
+    * same corpus. Both per-round frames are localCheckpoint'd (types:
+    * vocabulary-bounded; counts: pair-vocabulary-bounded).
     */
   def trainFast(types0: DataFrame, rounds: Int,
-      allowIdentical: Boolean = false): Seq[DataFrame] =
+      allowIdentical: Boolean = false): Seq[(String, String)] =
     trainFastState(types0, rounds, allowIdentical)._1
-
-  /** Free a `localCheckpoint`ed frame's blocks now. They are persisted
-    * on the RDD its `LogicalRDD` leaf holds, which the cache manager
-    * behind `Dataset.unpersist` never registered, so that call frees
-    * nothing.
-    */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.collectLeaves().foreach {
-      case leaf: LogicalRDD => leaf.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** [[trainFast]] plus its final internal state
     * (rules, types, counts) — the counts invariant is spec-checked
@@ -321,7 +174,7 @@ object BpeMerge {
     */
   private[graft] def trainFastState(types0: DataFrame, rounds: Int,
       allowIdentical: Boolean = false)
-      : (Seq[DataFrame], DataFrame, DataFrame) = {
+      : (Seq[(String, String)], DataFrame, DataFrame) = {
     var types = types0.localCheckpoint()
     // the per-round union (untouched ++ rewritten) CONCATENATES its
     // legs' partitions — unchecked, the type table's partition count
@@ -331,126 +184,62 @@ object BpeMerge {
     // count: narrow, no shuffle, and per-round cost goes flat.
     val nParts = math.max(types.rdd.getNumPartitions, 1)
     var counts = pairCounts(types, allowIdentical).localCheckpoint()
-    import types0.sparkSession.implicits._
-    val rules = (1 to rounds).map { r =>
-      // Collect the round's winning pair ONCE and re-wrap it as a
-      // 1-row (or 0-row, corpus exhausted) LOCAL relation. The lazy
-      // TakeOrdered subtree used to re-execute as a separate Spark job
-      // every time `p` was consumed — the counts checkpoint's
-      // broadcast build, the types checkpoint's broadcast build, and
-      // collectRules later — three jobs per round for one top-1 row
-      // (round-16; ~2 jobs × rounds saved, and collectRules on a
-      // LocalRelation no longer launches jobs at all). Same winning
-      // pair: the collect runs the identical orderBy/limit plan.
-      val topRow = counts
-        .orderBy(col("c").desc, col("ab")).limit(1)
-        .select(split(col("ab"), sep).getItem(0).as("ma"),
-          split(col("ab"), sep).getItem(1).as("mb")).collect()
-      val p = topRow.toSeq.map(row => (row.getString(0), row.getString(1)))
-        .toDF("ma", "mb")
-      if (r < rounds) {
-        val packed = concat(col("ma"), lit(sep), col("mb"))
-        val tagged = types.join(broadcast(p), lit(true), "left")
-          .withColumn("_hit", coalesce(
-            exists(packedAdjacent(allowIdentical), e => e === packed),
-            lit(false)))
-        val untouched = tagged.filter(!col("_hit"))
-          .drop("_hit", "ma", "mb")
-        val touchedOld = tagged.filter(col("_hit"))
-        val touchedNew = rewriteToks(touchedOld, allowIdentical)
-          .drop("_hit", "ma", "mb")
-        val delta = touchedNew
-          .select(explode(packedAdjacent(allowIdentical)).as("ab"),
-            col("w").as("d"))
-          .unionByName(touchedOld.drop("_hit", "ma", "mb")
-            .select(explode(packedAdjacent(allowIdentical)).as("ab"),
-              (-col("w")).as("d")))
-          .filter(col("ab").isNotNull)
-        // The two round outputs are independent given the OLD
-        // (checkpointed) types/counts — materialize them as
-        // CONCURRENT jobs (guide §2.6: overlap independent jobs) so
-        // the round's wall time is max(counts, types) instead of the
-        // sum. Each action still recomputes the tagged/rewrite
-        // subtree, but at vocabulary-table size that recompute is
-        // cheaper than a third checkpoint to share it (the x56
-        // scan-twice-materialize-never receipt).
-        val oldCounts = counts
-        val countsF = scala.concurrent.Future {
-          oldCounts.select(col("ab"), col("c").as("d"))
-            .unionByName(delta)
-            .groupBy(col("ab")).agg(sum(col("d")).as("c"))
-            .filter(col("c") > 0)
-            .localCheckpoint()
-        }(scala.concurrent.ExecutionContext.global)
-        val typesF = scala.concurrent.Future {
-          untouched.unionByName(touchedNew)
-            .coalesce(nParts).localCheckpoint()
-        }(scala.concurrent.ExecutionContext.global)
-        // failure coordination: await BOTH futures before propagating
-        // — a throw from one must not leave the sibling's Spark job
-        // running detached — and free a surviving orphan's checkpoint
-        // blocks
-        val cTry = scala.concurrent.Await.ready(
-          countsF, scala.concurrent.duration.Duration.Inf).value.get
-        val tTry = scala.concurrent.Await.ready(
-          typesF, scala.concurrent.duration.Duration.Inf).value.get
-        (cTry, tTry) match {
-          case (scala.util.Success(c), scala.util.Success(t)) =>
-            counts = c; types = t
-          case _ =>
-            cTry.foreach(unpersistCheckpoint); tTry.foreach(unpersistCheckpoint)
-            throw cTry.failed.toOption.orElse(tTry.failed.toOption).get
-        }
+    // One round's rewrite under `rule`: the types containing it are
+    // encoded, and their adjacency diff is folded into the counts.
+    def merge(rule: (String, String)): Unit = {
+      val (a, b) = rule
+      val adjacent = packedAdjacent(allowIdentical)
+      val tagged = types.withColumn("_hit", coalesce(
+        exists(adjacent, _ === lit(a + sep + b)), lit(false)))
+      val untouched = tagged.filter(!col("_hit")).drop("_hit")
+      val touchedOld = tagged.filter(col("_hit")).drop("_hit")
+      val touchedNew = encode(touchedOld, Seq(rule))
+      val delta = counted(touchedNew, adjacent, col("w"))
+        .unionByName(counted(touchedOld, adjacent, -col("w")))
+      // The two round outputs are independent given the OLD
+      // (checkpointed) types/counts — materialize them as CONCURRENT
+      // jobs so the round's wall time is max(counts, types) instead of
+      // the sum. Each action still recomputes the tagged/rewrite
+      // subtree, but at vocabulary-table size that recompute is cheaper
+      // than a third checkpoint to share it.
+      val oldCounts = counts
+      val countsF = scala.concurrent.Future {
+        oldCounts.unionByName(delta)
+          .groupBy(col("ab")).agg(sum(col("c")).as("c"))
+          .filter(col("c") > 0)
+          .localCheckpoint()
+      }(scala.concurrent.ExecutionContext.global)
+      val typesF = scala.concurrent.Future {
+        untouched.unionByName(touchedNew)
+          .coalesce(nParts).localCheckpoint()
+      }(scala.concurrent.ExecutionContext.global)
+      // failure coordination: await BOTH futures before propagating — a
+      // throw from one must not leave the sibling's Spark job running
+      // detached — and free a surviving orphan's checkpoint blocks
+      val cTry = scala.concurrent.Await.ready(
+        countsF, scala.concurrent.duration.Duration.Inf).value.get
+      val tTry = scala.concurrent.Await.ready(
+        typesF, scala.concurrent.duration.Duration.Inf).value.get
+      (cTry, tTry) match {
+        case (scala.util.Success(c), scala.util.Success(t)) =>
+          counts = c; types = t
+        case _ =>
+          cTry.foreach(GraftCheckpoint.unpersistCheckpoint)
+          tTry.foreach(GraftCheckpoint.unpersistCheckpoint)
+          throw cTry.failed.toOption.orElse(tTry.failed.toOption).get
       }
-      p
     }
+    @annotation.tailrec
+    def loop(rules: Seq[(String, String)]): Seq[(String, String)] =
+      if (rules.size >= rounds) rules
+      else ranked(counts, 1) match {
+        case Seq() => rules
+        case top =>
+          // the last rule needs no rewrite: nothing ranks after it
+          if (rules.size + 1 < rounds) merge(top.head)
+          loop(rules ++ top)
+      }
+    val rules = loop(Vector.empty)
     (rules, types, counts)
-  }
-
-  /** ENCODE: apply a trained merge sequence to any corpus — the
-    * tokenizer hot path. Pure narrow maps under k 1-row broadcasts;
-    * applying the rules in training order makes encode(train corpus)
-    * reproduce the trained corpus row for row.
-    */
-  def encode(df: DataFrame, pairs: Seq[DataFrame],
-      allowIdentical: Boolean = false): DataFrame =
-    pairs.foldLeft(df)((d, p) => applyPair(d, p, allowIdentical))
-
-  /** Resolve trained pair frames to plain (a, b) rules — k strings of
-    * driver state, the StreamBloom fold-once discipline. Each collect
-    * executes that round's (bounded) training subtree once.
-    */
-  def collectRules(pairs: Seq[DataFrame]): Seq[(String, String)] =
-    pairs.map { p =>
-      val r = p.collect()(0)
-      (r.getString(0), r.getString(1))
-    }
-
-  /** Encode under a FROZEN rule list (literals, no joins at all) — the
-    * streaming-safe form: a pure narrow map a continuous query can run
-    * per arriving row with no state and no stream-static join.
-    */
-  def encodeFrozen(df: DataFrame, rules: Seq[(String, String)],
-      allowIdentical: Boolean = false): DataFrame =
-    rules.foldLeft(df) { case (d, (a, b)) =>
-      rewriteToks(
-        d.withColumn("ma", lit(a)).withColumn("mb", lit(b)),
-        allowIdentical).drop("ma", "mb")
-    }
-
-  /** Encode under a frozen rule list via the NATIVE single-expression
-    * form ([[org.apache.spark.sql.graft.BpeEncodeRules]]) — identical
-    * output to [[encodeFrozen]] (RoundTwelveSpec pins bit-equality),
-    * but the plan holds ONE expression regardless of rule count where
-    * encodeFrozen nests k rewrite layers: the form that stays viable
-    * at production vocabulary depth (k ≈ 30k), per the CdcBoundaries
-    * precedent. SCALE-BPENATIVE carries the A/B receipt.
-    */
-  def encodeNative(df: DataFrame,
-      rules: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.GraftExpressionBridge
-    df.withColumn("toks", GraftExpressionBridge.column(
-      org.apache.spark.sql.graft.BpeEncodeRules(
-        GraftExpressionBridge.expression(col("toks")), rules)))
   }
 }

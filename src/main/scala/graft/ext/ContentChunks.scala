@@ -91,9 +91,10 @@ object ContentChunks {
     element_at(transform(array(boundaries(text, w)), b => {
       // cut points: 0, boundaries, len (deduped if already a boundary)
       val cuts = array_union(concat(array(lit(0)), b), array(len))
+      val n = greatest(size(cuts) - 1, lit(0))
       zip_with(
-        slice(cuts, lit(1), size(cuts) - 1),
-        slice(cuts, lit(2), size(cuts) - 1),
+        slice(cuts, lit(1), n),
+        slice(cuts, lit(2), n),
         (lo, hi) => text.substr(lo + 1, hi - lo))
     }), 1)
   }

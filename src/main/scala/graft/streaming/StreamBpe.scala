@@ -6,36 +6,29 @@ import org.apache.spark.sql.functions._
 import graft.ext.{BpeMerge, Text}
 
 /** Streaming BPE encode — the x124 tokenizer hot path made continuous:
-  * documents arriving on a stream are tokenized with a FROZEN trained
-  * merge table (train once offline with [[BpeMerge.trainPairs]],
-  * resolve to plain rules with [[BpeMerge.collectRules]], freeze).
+  * documents arriving on a stream are tokenized with a FROZEN merge
+  * table, the `Seq[(String, String)]` any [[BpeMerge]] trainer returns
+  * (train once offline, freeze).
   *
-  * The StreamBloom discipline: the trained state folds to k (a, b)
-  * string pairs of driver state regardless of training-corpus size,
-  * and the per-row work ([[BpeMerge.encodeFrozen]]) is a PURE NARROW
-  * MAP — no join, no shuffle, no watermark, no state store — so the
-  * encode gate composes with any downstream streaming op without
-  * adding a stateful stage, and stream output is row-identical to the
-  * batch encode of the same rows no matter how arrival is micro-batched
-  * (StreamBpeSpec pins it, md5 of the full token stream included).
+  * The StreamBloom discipline: the trained state is k (a, b) string
+  * pairs of driver state regardless of training-corpus size, and the
+  * per-row work is [[BpeMerge.encode]], the same single native
+  * expression the batch queries use — a PURE NARROW MAP with no join,
+  * no shuffle, no watermark and no state store, whatever the rule
+  * count. So the encode gate composes with any downstream streaming op
+  * without adding a stateful stage, and stream output is row-identical
+  * to the batch encode of the same rows no matter how arrival is
+  * micro-batched (StreamBpeSpec pins it, md5 of the full token stream
+  * included).
   */
 object StreamBpe {
 
   /** Tokenize + encode `textCol` under the frozen rules; adds `toks`,
     * `n_tokens`, and `tokens_md5` (the x124 fingerprint columns).
-    *
-    * Round-12: encodes via the native [[BpeMerge.encodeNative]]
-    * single-expression form — bit-identical to the HOF chain
-    * (RoundTwelveSpec) but with NO per-rule plan layer, so a
-    * production-depth vocabulary (30k rules) stays viable on the
-    * stream (SCALE-BPENATIVE: the HOF chain pays ~0.12 s/rule of plan
-    * machinery; the native form is flat). The left-greedy run rule is
-    * applied uniformly — for a ≠ b rules (everything a trainer emits
-    * under either policy) it coincides with both merge policies.
     */
   def encoded(df: DataFrame, textCol: String,
       rules: Seq[(String, String)]): DataFrame =
-    BpeMerge.encodeNative(
+    BpeMerge.encode(
       df.withColumn("toks", Text.tokens(col(textCol))), rules)
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .withColumn("tokens_md5", md5(array_join(col("toks"), " ")))

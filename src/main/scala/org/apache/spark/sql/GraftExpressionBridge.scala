@@ -24,7 +24,8 @@ object GraftExpressionBridge {
   * mark for local checkpointing, materialize with `count()` — and
   * returns that count. Lives in `org.apache.spark.sql` because
   * rebuilding the DataFrame over the materialized RDD needs
-  * `private[sql] internalCreateDataFrame`.
+  * `private[sql] internalCreateDataFrame`. [[unpersistCheckpoint]]
+  * releases what either kind of local checkpoint holds.
   */
 object GraftCheckpoint {
   def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
@@ -45,6 +46,18 @@ object GraftCheckpoint {
         rdd, ds, isStreaming = false))
     (out, n)
   }
+
+  /** Free a `localCheckpoint`ed frame's blocks now. They are persisted
+    * on the RDD its `LogicalRDD` leaf holds, which the cache manager
+    * behind `Dataset.unpersist` never registered, so that call frees
+    * nothing.
+    */
+  def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case leaf: org.apache.spark.sql.execution.LogicalRDD =>
+        leaf.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }
 
 /** Registers [[graft.GraftExtensions]]' SQL functions on an ALREADY

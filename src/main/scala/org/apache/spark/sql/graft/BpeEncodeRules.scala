@@ -6,29 +6,28 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Frozen-rule BPE encode in ONE expression — the native form of
-  * graft.ext.BpeMerge.encodeFrozen, which folds k merge rules into k
-  * nested filter/transform rewrites: at k = 3 that is fine, at a
-  * production vocabulary (k ≈ 30k) the composed Catalyst plan is 30k
-  * expression layers deep — unanalyzable long before it is slow. Here
-  * the rule list is plain expression state (k·2 strings, serialized
+/** BPE encode in ONE expression: the only rewrite of a merge rule in
+  * the library, behind graft.ext.BpeMerge.encode (batch queries,
+  * training's own corpus rewrites and StreamBpe all go through it).
+  * The rule list is plain expression state (k·2 strings, serialized
   * once per task binary) and each document is encoded by k in-memory
-  * left-to-right greedy passes over its token array — O(k·len) with
-  * zero plan depth, the CdcBoundaries precedent applied to the
-  * tokenizer hot path (round-12; SCALE-BPENATIVE carries the A/B and
-  * the depth wall receipt).
+  * left-to-right passes over its token array — O(k·len) with zero plan
+  * depth, where a per-rule higher-order-function rewrite composes k
+  * nested expression layers and is unanalyzable at a production
+  * vocabulary (k ≈ 30k) long before it is slow (the CdcBoundaries
+  * precedent; SCALE-BPENATIVE in PLANS.md carries the A/B and the depth
+  * wall receipt).
   *
   * Semantics: each pass merges GREEDILY left to right — at position i,
   * if (t[i], t[i+1]) equals the rule, emit `a_b` and consume both.
-  * For a ≠ b rules occurrences cannot overlap, so this equals the
-  * match-all rewrite of BpeMerge.rewriteToks exactly; for a == b
-  * rules it IS the left-greedy run rule real BPE uses (floor(L/2)
-  * merges per maximal run, lone trailing token when L is odd) — i.e.
-  * the expression coincides with encodeFrozen(allowIdentical = true)
-  * on every input, and with the allowIdentical = false form on every
-  * rule that trainer can produce (it never emits identical halves).
-  * RoundTwelveSpec pins bit-equality on trained rules, the
-  * identical-halves fixture, and the empty rule list (identity).
+  * For a ≠ b rules occurrences cannot overlap, so this equals merging
+  * every occurrence; for a == b rules it IS the left-greedy run rule
+  * real BPE uses (floor(L/2) merges per maximal run, lone trailing
+  * token when L is odd). So the pass needs no merge-policy flag: the
+  * policy only decides which pairs a trainer counts. BpeMergeSpec
+  * checks bit-equality with a higher-order-function reference rewrite
+  * on trained rules under both policies, a 25-rule one-pass table, the
+  * identical-halves fixture and the empty rule list (identity).
   */
 case class BpeEncodeRules(child: Expression, rules: Seq[(String, String)])
     extends UnaryExpression with ExpectsInputTypes with CodegenFallback {

@@ -114,9 +114,11 @@ class ExtensionsSpec extends AnyFunSuite {
     // batch/stream row identity StreamRetrieveSpec pins goes with it
     val bm25 = hits("""\* 44L \*""".r)
     val rrf = hits("""1000000000 div \(60 \+""".r)
-    // slice(toks, 1, size(toks) - 3) throws on a ≤2-token document;
-    // every truncation clamps the length at 0
-    val unclamped = hits("""(?<!greatest\()size\(\w+\) - 3""".r)
+    // slice(toks, 1, size(toks) - 3) throws on a ≤2-token document and
+    // slice(tk, 1, size(tk) - 1) on an empty one; every truncation
+    // clamps the length at 0
+    val unclamped = hits(
+      """(?<!greatest\()size\(\w+\) - 3|slice\(\w+, lit\(\d\), size\(\w+\) - 1""".r)
     assert(bm25.nonEmpty && rrf.nonEmpty)
     val strays = (bm25 ++ rrf).filterNot(_.startsWith("Retrieval.scala:")) ++
       unclamped
@@ -137,6 +139,22 @@ class ExtensionsSpec extends AnyFunSuite {
        else Seq(s"CMS cell explode ×${cmsExplode.size}: ${cmsExplode.mkString(", ")}")) ++
       (if (binning.size == 1) Nil
        else Seq(s"binning ×${binning.size}: ${binning.mkString(", ")}"))
+    assert(strays.isEmpty, strays.mkString("; "))
+  }
+
+  test("a BPE merge rule is applied only by BpeMerge.encode") {
+    // a second rewrite of a merge rule drifts from the first, and the
+    // stream ≡ batch identity StreamBpeSpec pins goes with it: rules are
+    // (a, b) data, never a frame joined into the corpus
+    val builders = hits("""BpeEncodeRules\(""".r)
+      .filterNot(h => h.startsWith("BpeMerge.scala:") ||
+        h.startsWith("BpeEncodeRules.scala:"))
+    val ruleFrames = hits("""col\("m[ab]"\)|lit\(true\), "left"""".r)
+    // a merged symbol a_b assembled by a Spark expression
+    val sparkMerges = hits("""lit\("_"\)""".r)
+    val strays = builders.map("BpeEncodeRules built outside BpeMerge: " + _) ++
+      ruleFrames.map("rule frame: " + _) ++
+      sparkMerges.map("Spark-side merge: " + _)
     assert(strays.isEmpty, strays.mkString("; "))
   }
 

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{BpeMerge, Text}
+import graft.ext.Text
 
-/** Round-11 wave: the BPE encode/apply path (x85) — the round-trip and
-  * policy properties the DuckDB oracle can't state directly.
+/** Round-11 wave: x86 shard write-out, Bloom.test under duplicate
+  * keys and the x89 histogram quantile sketch — properties the DuckDB
+  * oracle can't state directly. (The round's BPE encode tests live in
+  * BpeMergeSpec.)
   */
 class RoundElevenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -16,56 +18,6 @@ class RoundElevenSpec extends AnyFunSuite {
 
   private def docs = Tables(spark, dir, "documents")
     .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-
-  test("x85 round trip: encode(train corpus) == training's own rewrites") {
-    val train = docs.filter(col("doc_id") % 10 === 0)
-    val merges = BpeMerge.trainPairs(train, rounds = 3)
-    val enc = BpeMerge.encode(train, merges)
-      .select(col("doc_id"), col("toks").as("e"))
-    val trained = BpeMerge.mergeRounds(train, rounds = 3)
-      .select(col("doc_id"), col("toks").as("t"))
-    val joined = enc.join(trained, "doc_id").cache()
-    assert(joined.count() === train.count())
-    assert(joined.filter(col("e") =!= col("t")).count() === 0,
-      "applying the trained rules in training order must reproduce " +
-        "the trained corpus row for row")
-    joined.unpersist()
-  }
-
-  test("encode covers the full corpus, not just the training subset " +
-      "(the retired-x85 form, spec-only since round 14; x124 is the " +
-      "registered depth anchor)") {
-    val merges = BpeMerge.trainPairs(
-      docs.filter(col("doc_id") % 10 === 0), rounds = 3)
-    val out = BpeMerge.encode(docs, merges)
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens")).cache()
-    assert(out.count() === docs.count())
-    // encoding can only shorten (each merge fuses two tokens into one)
-    val before = docs.select(col("doc_id"),
-      size(col("toks")).cast("long").as("n_before"))
-    assert(out.join(before, "doc_id")
-      .filter(col("n_tokens") > col("n_before")).count() === 0)
-    out.unpersist()
-  }
-
-  test("encode with allowIdentical=true applies the left-greedy run rule " +
-      "to documents training never saw") {
-    val train = Seq((1L, "b a a a a a b"))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-    // adjacency counts: (a,a)=4 beats (b,a)=1 and (a,b)=1
-    val merges = BpeMerge.trainPairs(train, rounds = 1,
-      allowIdentical = true)
-    val unseen = Seq((2L, "a a a"), (3L, "c a a a a c"))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-    val got = BpeMerge.encode(unseen, merges, allowIdentical = true)
-      .select(col("doc_id"), col("toks"))
-      .as[(Long, Seq[String])].collect().toMap
-    assert(got(2L) === Seq("a_a", "a"))
-    assert(got(3L) === Seq("c", "a_a", "a_a", "c"))
-  }
 
   // --- x86: deterministic shard write-out -----------------------------
 

@@ -88,46 +88,6 @@ class RoundTenSpec extends AnyFunSuite {
       s"nProbe=1 graph covered $n1 of ${vecs.size} sources")
   }
 
-  // ---- BpeMerge identical-half policy (round-8 task #6, adjudicated
-  // by implementation: allowIdentical=true merges (a, a) pairs with
-  // real BPE's deterministic left-greedy rule) -------------------------
-
-  test("BpeMerge allowIdentical=true: left-greedy rewrite inside runs") {
-    import graft.ext.BpeMerge
-    val df = Seq(
-      (1L, Seq("x", "x", "x", "x", "x")),
-      (2L, Seq("x", "x", "x", "x")),
-      (3L, Seq("y", "x", "x", "y", "x"))).toDF("doc_id", "toks")
-    // adjacency counts (overlaps included): (x,x) = 4 + 3 + 1 = 8 wins
-    val out = BpeMerge.mergeRound(df, 1, allowIdentical = true)
-      .select($"doc_id", $"toks", $"merge_1")
-      .as[(Long, Seq[String], String)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    assert(out(1L)._2 == "x_x")
-    // L=5: floor(5/2)=2 merges + lone trailing x
-    assert(out(1L)._1 == Seq("x_x", "x_x", "x"))
-    // L=4: clean pairing
-    assert(out(2L)._1 == Seq("x_x", "x_x"))
-    // runs bounded by non-a tokens; the lone final x stays single
-    assert(out(3L)._1 == Seq("y", "x_x", "y", "x"))
-  }
-
-  test("BpeMerge allowIdentical=false on the same corpus picks an a!=b pair") {
-    import graft.ext.BpeMerge
-    val df = Seq(
-      (1L, Seq("x", "x", "x", "x", "x")),
-      (2L, Seq("x", "x", "x", "x")),
-      (3L, Seq("y", "x", "x", "y", "x"))).toDF("doc_id", "toks")
-    // with (x,x) excluded the winner is (y,x): doc3 positions (1,2),(4,5)
-    val out = BpeMerge.mergeRound(df, 1, allowIdentical = false)
-      .select($"doc_id", $"toks", $"merge_1")
-      .as[(Long, Seq[String], String)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    assert(out(1L)._2 == "y_x")
-    assert(out(1L)._1 == Seq("x", "x", "x", "x", "x"), "no (y,x) in doc 1")
-    assert(out(3L)._1 == Seq("y_x", "x", "y_x"))
-  }
-
   test("knnGraph nProbe=1 output is byte-identical to the x73 registry entry") {
     val viaRegistry = graft.queries.ExtQueries.queries("x73_knn_graph")(spark, dir)
       .as[(Long, Long, Long, Long)].collect().toSeq

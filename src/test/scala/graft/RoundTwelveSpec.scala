@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{BpeMerge, Shards}
+import graft.ext.Shards
 import graft.streaming.StreamShards
 
 /** Round-12 hardening pins:
@@ -15,9 +15,9 @@ import graft.streaming.StreamShards
   *    post-data manifest; a PARTIAL batch (data on disk, no manifest —
   *    a crash mid-write) is cleaned and rewritten on retry instead of
   *    being mistaken for a committed one (round-12 advice, medium).
-  *  - BpeMerge empty-rule safety: a 0-row pair frame passes every
-  *    document through unchanged rather than emptying the corpus
-  *    (round-12 advice).
+  *  - GraftCheckpoint.unpersistCheckpoint frees what
+  *    Dataset.unpersist cannot.
+  * (The round's BPE tests live in BpeMergeSpec.)
   */
 class RoundTwelveSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -80,129 +80,9 @@ class RoundTwelveSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() === 40)
   }
 
-  test("native BpeEncodeRules == encodeFrozen bit for bit") {
-    import graft.ext.Text
-    // real corpus, trained rules — both merge policies
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-      .localCheckpoint()
-    for (allowIdentical <- Seq(false, true)) {
-      val rules = BpeMerge.collectRules(
-        BpeMerge.trainPairs(docs, rounds = 3, allowIdentical))
-      val frozen = BpeMerge.encodeFrozen(docs, rules, allowIdentical)
-        .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-      val native = BpeMerge.encodeNative(docs, rules)
-        .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-      assert(native === frozen, s"allowIdentical=$allowIdentical")
-    }
-    // deeper one-pass rule table (the serve-form vocabulary)
-    val deep = BpeMerge.topPairs(docs, 25).orderBy($"r").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    val fDeep = BpeMerge.encodeFrozen(docs, deep)
-      .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-    val nDeep = BpeMerge.encodeNative(docs, deep)
-      .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-    assert(nDeep === fDeep)
-    // identical-halves left-greedy run rule, hand-computed
-    val runs = Seq((1L, Seq("a", "a", "a", "a", "a")),
-      (2L, Seq("x", "a", "a", "x", "a"))).toDF("doc_id", "toks")
-    val got = BpeMerge.encodeNative(runs, Seq("a" -> "a"))
-      .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-    assert(got === Map(1L -> Seq("a_a", "a_a", "a"),
-      2L -> Seq("x", "a_a", "x", "a")))
-    // empty rule list is the identity
-    val idd = BpeMerge.encodeNative(runs, Nil)
-      .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-    assert(idd === Map(1L -> Seq("a", "a", "a", "a", "a"),
-      2L -> Seq("x", "a", "a", "x", "a")))
-  }
-
-  test("BpeMerge.applyPair with an empty rule frame is the identity") {
-    val docs = Seq(
-      (1L, Seq("a", "b", "a", "b")),
-      (2L, Seq("x"))).toDF("doc_id", "toks")
-    val emptyPair = Seq.empty[(String, String)].toDF("ma", "mb")
-    def got(allowIdentical: Boolean) =
-      BpeMerge.applyPair(docs, emptyPair, allowIdentical)
-        .select($"doc_id", $"toks").as[(Long, Seq[String])]
-        .collect().toMap
-    val want = Map(1L -> Seq("a", "b", "a", "b"), 2L -> Seq("x"))
-    assert(got(allowIdentical = false) === want)
-    assert(got(allowIdentical = true) === want)
-    // and a corpus with no adjacent pairs at all trains a 0-row rule
-    // that encode() survives end to end
-    val singles = Seq((1L, Seq("x")), (2L, Seq("y"))).toDF("doc_id", "toks")
-    val rules = BpeMerge.trainPairs(singles, rounds = 1)
-    val enc = BpeMerge.encode(singles, rules)
-      .select($"doc_id", $"toks").as[(Long, Seq[String])].collect().toMap
-    assert(enc === Map(1L -> Seq("x"), 2L -> Seq("y")))
-  }
-
-  test("trainFast rule sequence == recount trainPairs (both policies)") {
-    import graft.ext.Text
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-      .localCheckpoint()
-    for (allowIdentical <- Seq(false, true)) {
-      val slow = BpeMerge.collectRules(
-        BpeMerge.trainPairs(docs, rounds = 8, allowIdentical))
-      val fast = BpeMerge.collectRules(
-        BpeMerge.trainFast(BpeMerge.typeTable(docs.select($"toks")),
-          rounds = 8, allowIdentical))
-      assert(fast === slow, s"allowIdentical=$allowIdentical")
-    }
-  }
-
-  test("trainFast: counts invariant, tie order, weights, exhaustion") {
-    // maintained counts == a fresh recount of the maintained types,
-    // after enough rounds for several delta folds
-    val corpus = Seq(
-      Seq("a", "b", "c", "a", "b"), Seq("b", "c", "a", "b", "c"),
-      Seq("a", "a", "a", "b"), Seq("c", "c", "b", "a", "b", "c"),
-      Seq("a", "b"), Seq("a", "b"), Seq("b", "c", "b", "c"))
-      .toDF("toks")
-    for (allowIdentical <- Seq(false, true)) {
-      val (_, types, counts) = BpeMerge.trainFastState(
-        BpeMerge.typeTable(corpus), rounds = 5, allowIdentical)
-      val maintained = counts.as[(String, Long)].collect().toMap
-      val recounted = BpeMerge.pairCounts(types, allowIdentical)
-        .as[(String, Long)].collect().toMap
-      assert(maintained === recounted, s"allowIdentical=$allowIdentical")
-    }
-
-    // count ties break to the packed-string minimum in BOTH trainers:
-    // (a,b) and (b,a) each occur twice; "ab" < "ba"
-    val tied = Seq(Seq("a", "b"), Seq("a", "b"),
-      Seq("b", "a"), Seq("b", "a")).toDF("toks")
-    val tiedDocs = tied.withColumn("doc_id", monotonically_increasing_id())
-    val slowTied = BpeMerge.collectRules(
-      BpeMerge.trainPairs(tiedDocs, rounds = 1))
-    val fastTied = BpeMerge.collectRules(
-      BpeMerge.trainFast(BpeMerge.typeTable(tied), rounds = 1))
-    assert(slowTied === Seq(("a", "b")))
-    assert(fastTied === slowTied)
-
-    // the type table carries multiplicities, not copies
-    val tt = BpeMerge.typeTable(
-      Seq(Seq("x", "y"), Seq("x", "y"), Seq("x", "y"), Seq("y", "x"))
-        .toDF("toks")).as[(Seq[String], Long)].collect().toMap
-    assert(tt === Map(Seq("x", "y") -> 3L, Seq("y", "x") -> 1L))
-
-    // an exhausting corpus: rules past the available merges are 0-row
-    // in both trainers and encode() under them is still the identity
-    val tiny = Seq(Seq("p", "q")).toDF("toks")
-    val tinyDocs = tiny.withColumn("doc_id", lit(1L))
-    val fastRules = BpeMerge.trainFast(
-      BpeMerge.typeTable(tiny), rounds = 3)
-    val slowRules = BpeMerge.trainPairs(tinyDocs, rounds = 3)
-    assert(fastRules.map(_.count()) === slowRules.map(_.count()))
-    val enc2 = BpeMerge.encode(tinyDocs, fastRules)
-      .select($"toks").as[Seq[String]].collect().toSeq
-    assert(enc2 === Seq(Seq("p_q")))
-  }
-
   test("unpersistCheckpoint frees a localCheckpoint; Dataset.unpersist does not") {
-    // trainFast's failure path frees an orphaned round frame this way
+    // BpeMerge.trainFast's failure path frees an orphaned round frame
+    // this way
     val sc = spark.sparkContext
     val baseline = sc.getPersistentRDDs.keySet
     // ids only: the context cleaner may drop older RDDs meanwhile
@@ -211,7 +91,7 @@ class RoundTwelveSpec extends AnyFunSuite {
     assert(added.size === 1)
     ck.unpersist() // the cache manager never saw this RDD
     assert(added.size === 1)
-    BpeMerge.unpersistCheckpoint(ck)
+    org.apache.spark.sql.GraftCheckpoint.unpersistCheckpoint(ck)
     assert(added.isEmpty)
   }
 

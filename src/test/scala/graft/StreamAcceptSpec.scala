@@ -133,7 +133,7 @@ class StreamAcceptSpec extends AnyFunSuite {
       .filter(col("keep"))
     val wD = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    val expect = graft.ext.BpeMerge.encodeFrozen(
+    val expect = BpeHof.encode(
         accepted.withColumn("rn", row_number().over(wD))
           .filter(col("rn") === 1)
           .filter(!col("text").isin(blockTexts: _*))
@@ -240,7 +240,7 @@ class StreamAcceptSpec extends AnyFunSuite {
     val wMap = StreamDsir.weight(base, col("t"), lam, tau)
       .filter(col("keep")).select(col("doc_id"), col("w_e6"))
       .as[(Long, Long)].collect().toMap
-    val expect = graft.ext.BpeMerge.encodeFrozen(
+    val expect = BpeHof.encode(
         accepted.withColumn("rn", row_number().over(wD))
           .filter(col("rn") === 1)
           .withColumn("toks", Text.tokens(col("text"))), rules)

@@ -23,9 +23,9 @@ class StreamBpeSpec extends AnyFunSuite {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     // train on the standing corpus, freeze to plain rules
-    val rules = BpeMerge.collectRules(BpeMerge.trainPairs(
+    val rules = BpeMerge.trainPairs(
       docs.select(col("doc_id"), Text.tokens(col("text")).as("toks")),
-      rounds = 3))
+      rounds = 3)
     assert(rules.length === 3)
 
     val rows = docs.as[(Long, String)].collect().toSeq
@@ -47,17 +47,15 @@ class StreamBpeSpec extends AnyFunSuite {
         .select($"doc_id", $"n_tokens", $"tokens_md5")
         .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
       assert(streamed === batch)
-      // and the frozen-rule encode agrees with the broadcast-join
-      // encode x85 runs in batch
-      val viaPairs = BpeMerge.encode(
+      // and the native encode agrees with the higher-order-function
+      // reference rewrite
+      val viaHof = BpeHof.encode(
         docs.select(col("doc_id"), Text.tokens(col("text")).as("toks")),
-        BpeMerge.trainPairs(
-          docs.select(col("doc_id"), Text.tokens(col("text")).as("toks")),
-          rounds = 3))
+        rules)
         .select($"doc_id", size($"toks").cast("long"),
           md5(array_join($"toks", " ")))
         .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-      assert(streamed === viaPairs)
+      assert(streamed === viaHof)
     } finally q.stop()
   }
 }

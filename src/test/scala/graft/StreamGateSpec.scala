@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{BpeMerge, Shards, Text}
+import graft.ext.{Shards, Text}
 import graft.streaming.{StreamBloom, StreamGate, StreamShards}
 
 /** The composed streaming ingest gate (dedup → bloom → BPE encode →
@@ -60,7 +60,7 @@ class StreamGateSpec extends AnyFunSuite {
     val kept = union
       .withColumn("rn", row_number().over(wD)).filter(col("rn") === 1)
       .filter(!col("text").isin(blocklist: _*))
-    val expect = BpeMerge.encodeFrozen(
+    val expect = BpeHof.encode(
         kept.withColumn("toks", Text.tokens(col("text"))), rules)
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
